@@ -1,7 +1,7 @@
 """Reference document_analyzer parity — the reference's OWN unit
 vectors (tests/test_document_analyzer.py) run through our operators:
-judge_page_direction → plans.pipeline._vote_vertical (area-weighted
-vote), is_vertical/is_noise → spatial.quad_is_vertical/quad_is_noise
+judge_page_direction → operators.reading_order.vote_vertical
+(area-weighted vote), is_vertical/is_noise → spatial.quad_is_vertical/quad_is_noise
 (squared-integer edge-norm comparison), combine_flags → the emit
 stage's elementwise OR.
 """
@@ -10,7 +10,7 @@ import numpy as np
 from pyspark.sql import functions as F
 
 from yomitoku_spark.operators import spatial as SP
-from yomitoku_spark.plans.pipeline import _vote_vertical
+from yomitoku_spark.operators.reading_order import vote_vertical
 
 
 def test_judge_page_direction_vectors():
@@ -18,8 +18,9 @@ def test_judge_page_direction_vectors():
     2 horizontal (areas 2, 2) vs 1 vertical (2) → horizontal; flip the
     third paragraph's direction → vertical wins."""
     boxes = np.array([[0, 0, 2, 1], [0, 0, 1, 2], [10, 10, 11, 12]])
-    assert not _vote_vertical(np.array([False, True, False]), boxes)
-    assert _vote_vertical(np.array([False, True, True]), boxes)
+    page = np.zeros(3, dtype=np.int64)
+    assert not vote_vertical(page, np.array([False, True, False]), boxes, 1)[0]
+    assert vote_vertical(page, np.array([False, True, True]), boxes, 1)[0]
 
 
 def _quad_vals(spark, fn, quads):

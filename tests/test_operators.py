@@ -623,9 +623,11 @@ def test_index_stage_single_evaluation(spark):
     t = tree_of(DD.simhash_near_pairs(docs, "doc_id", "text"))
     assert t.count("MapInPandas") == 0, t
     assert "Scan ExistingRDD" in t, t
-    # corpus_build keeps its single extraction stage in-plan
+    # corpus_build keeps its single extraction stage in-plan (the fused
+    # kernel is an Arrow map, so the stage shows as MapInArrow)
     t = tree_of(QUERIES["corpus_build"](spark, sf))
-    assert t.count("MapInPandas") == 1, t
+    assert t.count("MapInArrow") == 1, t
+    assert t.count("MapInPandas") == 0, t
 
 
 def test_lsh_hot_bucket_star_capping(spark):

@@ -41,6 +41,9 @@ def main():
 
     p = plan_of(extract(tdf))
     assert "Exchange" not in p, "fused path must be shuffle-free"
+    # one python stage: the kernel (the MapInPandas below it is the
+    # synthetic input's generator)
+    assert p.split("(1) ")[0].count("MapInArrow") == 1, p
     sections.append(("Fused extraction (zero Exchange — embarrassingly parallel)", p))
 
     sections.append(("Staged extraction (shuffles only at reading-order group + emit agg)",
@@ -162,30 +165,32 @@ def main():
 
     # composed corpus-build flagship: extraction + quality stay
     # shuffle-free; the ONLY exchange is the dedup window's digest
-    # hash, and the extraction MapInPandas appears exactly once
+    # hash, and the extraction MapInArrow appears exactly once
     p = plan_of(QUERIES["corpus_build"](spark, SF))
     tree = p.split("(1) ")[0]
     assert tree.count("Exchange") == 1, tree
-    assert tree.count("MapInPandas") == 1, tree
+    assert tree.count("MapInArrow") == 1, tree
+    assert tree.count("MapInPandas") == 0, tree
     sections.append(("query: corpus_build (extract -> quality -> dedup -> "
                      "select -> export as ONE plan; exactly 1 Exchange — "
-                     "the dedup digest hash — and 1 extraction MapInPandas)",
+                     "the dedup digest hash — and 1 extraction MapInArrow)",
                      p))
 
     # corpus_build_full adds the near-dup stage (star-capped LSH +
     # fixpoint LP) on top: the extracted+scored corpus is materialized
     # ONCE up front (localCheckpoint — it feeds the signature stage,
     # the iterative LP loop, and the final join), so the FINAL plan
-    # reads materialized RDDs and contains no extraction MapInPandas;
+    # reads materialized RDDs and contains no extraction MapInArrow;
     # its shuffles are the keeper/cluster joins only
     p = plan_of(QUERIES["corpus_build_full"](spark, SF))
     tree = p.split("(1) ")[0]
     # the ONE allowed python stage is the small-graph union-find over
     # the MATERIALIZED edge list (r7: label_propagation's size-based
     # strategy pick — it reads Scan ExistingRDD, never a corpus scan);
-    # the extraction MapInPandas must NOT reappear, so the final plan
+    # the extraction MapInArrow must NOT reappear, so the final plan
     # contains no parquet scan at all
     assert tree.count("MapInPandas") <= 1, tree
+    assert tree.count("MapInArrow") == 0, tree
     assert tree.count("Scan parquet") == 0, tree
     assert "Scan ExistingRDD" in tree, tree
     sections.append(("query: corpus_build_full (corpus_build + star-capped "

@@ -3,10 +3,12 @@
 Both implement the spec in :mod:`yomitoku_spark.spec` and must match the
 pure-Python oracle byte-for-byte per ``(conv_id, turn_idx)``.
 
-**Fused path** (:func:`extract`): ONE ``mapInPandas`` stage over the
+**Fused path** (:func:`extract`): ONE ``mapInArrow`` stage over the
 transcripts scan — segment, featurize, classify, reading-order, emit all
-inside a single Arrow batch. Zero shuffles; embarrassingly parallel over
-turns. This is the plan you want at 10^12 turns: throughput scales
+inside a single Arrow batch (:func:`extract_batch`: per-turn
+segmentation, then batch-wide numpy keep/order and Arrow assembly).
+Zero shuffles; embarrassingly parallel over turns. This is the plan you
+want at 10^12 turns: throughput scales
 linearly with executors because no stage exchanges data (the reference's
 analog is its per-page loop, cli/main.py:538-549 — we parallelize
 across pages/turns instead of within one).
@@ -15,8 +17,9 @@ across pages/turns instead of within one).
 into Catalyst-visible stages so features/decisions are queryable:
 
 - ``segment_blocks``  — mapInPandas payload → long-form blocks rows
-- ``order_blocks``    — grouped pandas UDF (layout turns only) for the
-  reading-order DAG sort (reference: reading_order.py:14-223)
+- ``order_blocks``    — grouped pandas UDF: layout turns get the same
+  batch-wide reading order as the fused path (reference:
+  reading_order.py:14-223)
 - ``featurize``       — pure column expressions (link density etc. —
   jusText/Readability-style block features; whole-stage codegen)
 - ``classify``        — pure column expressions (keep/drop; the analog
@@ -28,20 +31,30 @@ into Catalyst-visible stages so features/decisions are queryable:
 
 from __future__ import annotations
 
+from itertools import chain
+
 import numpy as np
 import pandas as pd
+import pyarrow as pa
+import pyarrow.compute as pc
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from yomitoku_spark import spec
-from yomitoku_spark.operators.reading_order import reading_order_numpy
+from yomitoku_spark.operators.reading_order import layout_order
 from yomitoku_spark.plans.segment import BLOCK_FIELDS, BLOCKS_SCHEMA, segment_turn
+from yomitoku_spark.plans.worker import install_zip_stat_shim
 
 RESULT_SCHEMA = (
     "conv_id string, turn_idx int, ts timestamp, extracted_text string, "
     "spans array<struct<start:int,end:int,kind:string>>, "
     "blocks_kept int, blocks_dropped int, chars_emitted int"
 )
+
+RESULT_COLUMNS = [
+    "conv_id", "turn_idx", "ts", "extracted_text", "spans",
+    "blocks_kept", "blocks_dropped", "chars_emitted",
+]
 
 _EMPTY_SPANS = "CAST(array() AS array<struct<start:int,end:int,kind:string>>)"
 
@@ -52,17 +65,14 @@ _EMPTY_SPANS = "CAST(array() AS array<struct<start:int,end:int,kind:string>>)"
 # ------------------------------------------------------------------
 
 
-def _keep_mask(bdf: pd.DataFrame) -> np.ndarray:
-    dens = bdf["link_chars"].to_numpy() / np.maximum(bdf["visible_len"].to_numpy(), 1)
-    content = bdf["content_len"].to_numpy()
-    visible = bdf["visible_len"].to_numpy()
-    kind = bdf["kind"].to_numpy()
-    source = bdf["source"].to_numpy()
-    ok_dens = dens <= spec.MAX_LINK_DENSITY
+def _keep_mask(c: dict) -> np.ndarray:
+    """Keep/drop per block over the batch's block columns ``c``."""
+    content, visible, kind = c["content_len"], c["visible_len"], c["kind"]
+    ok_dens = c["link_chars"] / np.maximum(visible, 1) <= spec.MAX_LINK_DENSITY
     keep = np.select(
         [
-            bdf["boiler"].to_numpy() | bdf["meta"].to_numpy(),
-            source == "layout",
+            c["boiler"] | c["meta"],
+            c["source"] == "layout",
             kind == spec.KIND_HEADING,
             kind == spec.KIND_TABLE,
             kind == spec.KIND_LIST,
@@ -83,170 +93,78 @@ def _keep_mask(bdf: pd.DataFrame) -> np.ndarray:
     return keep.astype(bool)
 
 
-def _areas(b: np.ndarray) -> np.ndarray:
-    return (b[:, 2] - b[:, 0]) * (b[:, 3] - b[:, 1])
-
-
-def _vote_vertical(verticals: np.ndarray, boxes: np.ndarray) -> bool:
-    """Area-weighted page/figure direction vote (reference
-    judge_page_direction, document_analyzer.py:20-40): vertical wins
-    only when its summed block area strictly exceeds horizontal's."""
-    a = _areas(boxes)
-    v = int(a[verticals].sum())
-    return v > int(a.sum()) - v
-
-
-def _layout_order_arrays(
-    roles: np.ndarray, verticals: np.ndarray, boxes: np.ndarray
-) -> np.ndarray:
-    """Emit order for one layout page with the reference's offset rule
-    (document_analyzer.py:572-588): page headers first (ordered
-    left2right among themselves), then main content, then page footers
-    (left2right). Main content auto-picks right2left when the page's
-    area-weighted direction vote is vertical (:575-581), else
-    top2bottom. Paragraph/heading blocks ≥0.7-contained in a figure box
-    are absorbed by their FIRST containing figure (deviation: the
-    reference copies a paragraph into every containing figure,
-    document_analyzer.py:43-66; one owner keeps extraction
-    duplication-free) and emit immediately after it, inner-ordered
-    left2right (or right2left when the absorbed set votes vertical).
-    Header/footer blocks are still DROPPED from the extracted text by
-    the ignore-meta keep rule — the offsets order the block table the
-    way the reference orders its paragraph list."""
-    n = len(roles)
-    order = np.full(n, -1, dtype=np.int64)
-    hdr = roles == spec.ROLE_PAGE_HEADER
-    ftr = roles == spec.ROLE_PAGE_FOOTER
-    h_pos = np.nonzero(hdr)[0]
-    f_pos = np.nonzero(ftr)[0]
-    m_pos = np.nonzero(~(hdr | ftr))[0]  # META_ROLES == {header, footer}
-    if len(h_pos):
-        perm = reading_order_numpy(boxes[h_pos], "left2right")
-        order[h_pos[perm]] = np.arange(len(perm))
-    if len(m_pos):
-        mb = boxes[m_pos]
-        mv = verticals[m_pos]
-        d = "right2left" if _vote_vertical(mv, mb) else "top2bottom"
-        # figure absorption (reference extract_paragraph_within_figure:
-        # contained > 0.7 of the paragraph's area → 10·overlap > 7·area)
-        is_fig = roles[m_pos] == spec.ROLE_FIGURE
-        absorbable = (roles[m_pos] == spec.ROLE_PARAGRAPH) | (
-            roles[m_pos] == spec.ROLE_HEADING
-        )
-        owner = np.full(len(m_pos), -1, dtype=np.int64)
-        fig_loc = np.nonzero(is_fig)[0]
-        pa = _areas(mb)
-        for pi in np.nonzero(absorbable)[0]:
-            for fi in fig_loc:
-                w = min(mb[fi][2], mb[pi][2]) - max(mb[fi][0], mb[pi][0])
-                h = min(mb[fi][3], mb[pi][3]) - max(mb[fi][1], mb[pi][1])
-                ov = max(w, 0) * max(h, 0)
-                if 10 * ov > 7 * pa[pi]:
-                    owner[pi] = fi
-                    break
-        top = np.nonzero(owner < 0)[0]
-        perm = reading_order_numpy(mb[top], d)
-        seq: list[int] = []
-        for t in perm:
-            li = int(top[t])
-            seq.append(li)
-            if is_fig[li]:
-                kids = np.nonzero(owner == li)[0]
-                if len(kids):
-                    inner = (
-                        "right2left"
-                        if _vote_vertical(mv[kids], mb[kids])
-                        else "left2right"
-                    )
-                    kperm = reading_order_numpy(mb[kids], inner)
-                    seq.extend(int(k) for k in kids[kperm])
-        order[m_pos[np.asarray(seq, dtype=np.int64)]] = len(h_pos) + np.arange(len(seq))
-    if len(f_pos):
-        perm = reading_order_numpy(boxes[f_pos], "left2right")
-        order[f_pos[perm]] = len(h_pos) + len(m_pos) + np.arange(len(perm))
-    return order
-
-
-def _layout_order(blocks: list[tuple]) -> np.ndarray:
-    """Emit order for one layout turn's raw block tuples (doc order)."""
-    role_col = BLOCK_FIELDS.index("role")
-    vert_col = BLOCK_FIELDS.index("vertical")
-    box_cols = [BLOCK_FIELDS.index(c) for c in ("x1", "y1", "x2", "y2")]
-    roles = np.asarray([b[role_col] for b in blocks], dtype=object)
-    verts = np.asarray([b[vert_col] for b in blocks], dtype=bool)
-    boxes = np.asarray([[b[c] for c in box_cols] for b in blocks], dtype=np.int64)
-    return _layout_order_arrays(roles, verts, boxes.reshape(-1, 4))
-
-
 # ------------------------------------------------------------------
 # fused path
 # ------------------------------------------------------------------
 
+_NUMERIC = {
+    "block_id": np.int64, "start": np.int32, "end": np.int32,
+    "content_len": np.int64, "link_chars": np.int64, "visible_len": np.int64,
+    "boiler": bool, "meta": bool, "vertical": bool,
+    "x1": np.int64, "y1": np.int64, "x2": np.int64, "y2": np.int64,
+}
+_SPAN_FIELDS = [
+    pa.field("start", pa.int32()), pa.field("end", pa.int32()), pa.field("kind", pa.string())
+]
 
-def _extract_batches(batches):
-    src_col = BLOCK_FIELDS.index("source")
-    bid_col = BLOCK_FIELDS.index("block_id")
-    for pdf in batches:
-        n = len(pdf)
-        rows, turn_of, orders = [], [], []
-        for i, (tx, tl) in enumerate(zip(pdf["text"].tolist(), pdf["tool"].tolist())):
-            blks = segment_turn(tx, tl)
-            if blks and blks[0][src_col] == "layout":
-                order = _layout_order(blks)
-            else:
-                order = np.asarray([b[bid_col] for b in blks], dtype=np.int64)
-            rows.extend(blks)
-            orders.extend(order.tolist())
-            turn_of.extend([i] * len(blks))
-        out = pd.DataFrame(
-            {
-                "conv_id": pdf["conv_id"].to_numpy(),
-                "turn_idx": pdf["turn_idx"].to_numpy(),
-                "ts": pdf["ts"].to_numpy(),
-                "extracted_text": "",
-                "spans": [[] for _ in range(n)],
-                "blocks_kept": np.zeros(n, dtype="int32"),
-                "blocks_dropped": np.zeros(n, dtype="int32"),
-                "chars_emitted": np.zeros(n, dtype="int32"),
-            }
-        )
-        if rows:
-            bdf = pd.DataFrame(rows, columns=BLOCK_FIELDS)
-            bdf["ti"] = turn_of
-            bdf["order"] = orders
-            keep = _keep_mask(bdf)
-            ti_all = np.asarray(turn_of, dtype=np.int64)
-            n_blocks = np.bincount(ti_all, minlength=n)
-            kept = bdf[keep].sort_values(["ti", "order"], kind="stable")
-            ti_k = kept["ti"].to_numpy()
-            n_kept = np.bincount(ti_k, minlength=n)
-            # group boundaries on the (sorted) kept frame — one pass,
-            # no per-group pandas machinery
-            rendered = kept["rendered"].tolist()
-            starts = kept["start"].tolist()
-            ends = kept["end"].tolist()
-            kinds = kept["kind"].tolist()
-            bounds = (
-                np.flatnonzero(np.r_[True, ti_k[1:] != ti_k[:-1]])
-                if len(ti_k)
-                else np.empty(0, dtype=np.int64)
-            )
-            texts = out["extracted_text"].to_numpy(dtype=object)
-            spans = out["spans"].to_numpy(dtype=object)
-            for gi, s in enumerate(bounds):
-                e = bounds[gi + 1] if gi + 1 < len(bounds) else len(ti_k)
-                ti = int(ti_k[s])
-                texts[ti] = spec.BLOCK_JOINER.join(rendered[s:e])
-                spans[ti] = [
-                    {"start": int(st), "end": int(en), "kind": kd}
-                    for st, en, kd in zip(starts[s:e], ends[s:e], kinds[s:e])
-                ]
-            out["extracted_text"] = texts
-            out["spans"] = spans
-            out["blocks_kept"] = n_kept.astype("int32")
-            out["blocks_dropped"] = (n_blocks - n_kept).astype("int32")
-            out["chars_emitted"] = out["extracted_text"].str.len().astype("int32")
-        yield out
+
+def extract_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
+    """One Arrow batch of turns → one batch of results (RESULT_SCHEMA).
+
+    ``segment_turn`` runs per turn; everything after it is batch-wide:
+    block columns built once, keep rule and reading order in numpy, the
+    kept blocks put in (turn, order) by one ``lexsort``, and the output
+    assembled as Arrow arrays over per-turn offsets."""
+    n = rb.num_rows
+    per_turn = [
+        segment_turn(tx, tl)
+        for tx, tl in zip(rb.column("text").to_pylist(), rb.column("tool").to_pylist())
+    ]
+    counts = np.fromiter(map(len, per_turn), dtype=np.int64, count=n)
+    raw = list(zip(*chain.from_iterable(per_turn))) or [()] * len(BLOCK_FIELDS)
+    cols = dict(zip(BLOCK_FIELDS, raw))
+    c = {f: np.asarray(cols[f], dtype=dt) for f, dt in _NUMERIC.items()}
+    c["kind"] = np.asarray(cols["kind"], dtype=object)
+    c["source"] = np.asarray(cols["source"], dtype=object)
+    turn = np.repeat(np.arange(n), counts)
+
+    order = c["block_id"].copy()
+    lay = c["source"] == "layout"
+    if lay.any():
+        boxes = np.stack([c["x1"], c["y1"], c["x2"], c["y2"]], axis=1)[lay]
+        roles = np.asarray(cols["role"], dtype=object)[lay]
+        order[lay] = layout_order(turn[lay], roles, c["vertical"][lay], boxes)
+    kept = np.flatnonzero(_keep_mask(c))
+    kept = kept[np.lexsort((order[kept], turn[kept]))]
+    n_kept = np.bincount(turn[kept], minlength=n)
+    offsets = pa.array(np.r_[0, np.cumsum(n_kept)].astype(np.int32))
+    take = pa.array(kept)
+    rendered = pa.array(cols["rendered"], pa.string()).take(take)
+    spans = pa.StructArray.from_arrays(
+        [pa.array(c["start"][kept]), pa.array(c["end"][kept]),
+         pa.array(cols["kind"], pa.string()).take(take)],
+        fields=_SPAN_FIELDS,
+    )
+    text = pc.binary_join(pa.ListArray.from_arrays(offsets, rendered), spec.BLOCK_JOINER)
+    return pa.RecordBatch.from_arrays(
+        [
+            rb.column("conv_id"),
+            rb.column("turn_idx"),
+            rb.column("ts"),
+            text,
+            pa.ListArray.from_arrays(offsets, spans),
+            pa.array(n_kept.astype(np.int32)),
+            pa.array((counts - n_kept).astype(np.int32)),
+            pc.utf8_length(text),
+        ],
+        names=RESULT_COLUMNS,
+    )
+
+
+def _extract_arrow(batches):
+    install_zip_stat_shim()  # runs on the Python worker, once per process
+    for rb in batches:
+        yield extract_batch(rb)
 
 
 def extract(transcripts: DataFrame, repartition: int | None = None) -> DataFrame:
@@ -256,10 +174,16 @@ def extract(transcripts: DataFrame, repartition: int | None = None) -> DataFrame
     the unit of work is the TURN, so even a single hot conversation
     (long-conversation skew, the north rule's case) spreads evenly.
     """
-    df = transcripts.select("conv_id", "turn_idx", "text", "tool", "ts")
+    df = transcripts.select(
+        F.col("conv_id").cast("string"),
+        F.col("turn_idx").cast("int"),
+        "text",
+        "tool",
+        F.col("ts").cast("timestamp"),
+    )
     if repartition:
         df = df.repartition(repartition)
-    return df.mapInPandas(_extract_batches, schema=RESULT_SCHEMA)
+    return df.mapInArrow(_extract_arrow, schema=RESULT_SCHEMA)
 
 
 # ------------------------------------------------------------------
@@ -293,17 +217,19 @@ def segment_blocks(transcripts: DataFrame) -> DataFrame:
 def order_blocks(blocks: DataFrame) -> DataFrame:
     """S5: reading-order assignment (grouped pandas UDF over the tiny
     per-turn group — reference reading_order.py:14-223). Layout turns
-    get the DAG toposort order; all other payload classes keep document
+    get :func:`layout_order` on their one-turn group, the function the
+    fused path runs batch-wide; all other payload classes keep document
     order. ONE grouped pass over all blocks — splitting layout/rest
     into two branches would re-run the upstream Python segment stage
     once per branch (no common-subplan reuse across a mapInPandas)."""
 
     def og(pdf: pd.DataFrame) -> pd.DataFrame:
         if len(pdf) and pdf["source"].iat[0] == "layout":
-            order = _layout_order_arrays(
+            order = layout_order(
+                np.zeros(len(pdf), dtype=np.int64),
                 pdf["role"].to_numpy(dtype=object),
                 pdf["vertical"].to_numpy(dtype=bool),
-                pdf[["x1", "y1", "x2", "y2"]].to_numpy(dtype=np.int64).reshape(-1, 4),
+                pdf[["x1", "y1", "x2", "y2"]].to_numpy(dtype=np.int64),
             )
         else:
             order = pdf["block_id"].to_numpy()

@@ -3028,7 +3028,7 @@ FROM v
 
 def extract_transcripts(spark, sf_dir):
     """Flagship row, HARD-checked: the FUSED extraction pipeline (the
-    exact north-rule plan — one mapInPandas stage, zero shuffles) over
+    exact north-rule plan — one mapInArrow stage, zero shuffles) over
     the parquet-derived transcript corpus. The corpus payloads cover
     every SQL-expressible class (prose/heading/list/code/kv/html/empty),
     so extracted text, span offsets, and keep metrics are all verified

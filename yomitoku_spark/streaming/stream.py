@@ -6,7 +6,7 @@ that grows by appends is naturally consumed incrementally, so the same
 extraction pipeline is exposed over ``readStream``:
 
 * :func:`stream_extract` — file-source stream of transcript parquet →
-  the SAME fused ``mapInPandas`` extraction (stateless, so it runs
+  the SAME fused ``mapInArrow`` extraction (stateless, so it runs
   unmodified under the streaming planner) → append sink.
 * :func:`event_rates` — watermarked sliding-window aggregation over the
   events table shape (late-data tolerant), the standard streaming-agg
