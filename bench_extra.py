@@ -18,7 +18,6 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
@@ -33,26 +32,17 @@ def main():
     args = ap.parse_args()
 
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 
     from bench import BENCH_QUERIES, run_plan
+    from tools import measure
     from yomitoku_spark.queries import QUERIES
     from yomitoku_spark.session import get_spark
 
     names = BENCH_QUERIES if args.all else args.queries
-    spark = get_spark(app="bench_extra", master=f"local[{cpus}]", shuffle_partitions=cpus)
-
-    def _release_blocks():
-        try:
-            spark.catalog.clearCache()
-            for jrdd in spark.sparkContext._jsc.getPersistentRDDs().values():
-                jrdd.unpersist(False)
-        except Exception:
-            pass
+    spark = get_spark(app="bench_extra")
 
     timings, spreads = {}, {}
     for name in names:
-        _release_blocks()
         spark.sparkContext.setJobDescription(f"bench_extra:{name}")
         if args.explain:
             os.makedirs(args.explain, exist_ok=True)
@@ -62,22 +52,13 @@ def main():
             )
             with open(os.path.join(args.explain, f"{name}_{args.suffix}.txt"), "w") as f:
                 f.write(plan)
-        t0 = time.perf_counter()
-        run_plan(QUERIES[name](spark, sf_dir))  # warmup
-        warm = time.perf_counter() - t0
-        if warm < 3.0:
-            t0 = time.perf_counter()
-            run_plan(QUERIES[name](spark, sf_dir))
-            warm = time.perf_counter() - t0
-        n = max(args.reps, min(12, int(4.5 / max(warm, 0.4))))
-        walls = []
-        for _ in range(n):
-            t0 = time.perf_counter()
-            run_plan(QUERIES[name](spark, sf_dir))
-            walls.append(time.perf_counter() - t0)
+        walls = [
+            r["wall"]
+            for r in measure.timed(spark, lambda: run_plan(QUERIES[name](spark, sf_dir)), args.reps)
+        ]
         timings[name] = round(min(walls), 3)
         spreads[name] = round(max(walls) / max(min(walls), 1e-9), 2)
-        print(f"  {name}: {timings[name]} s (spread {spreads[name]}, n={n})",
+        print(f"  {name}: {timings[name]} s (spread {spreads[name]}, n={len(walls)})",
               file=sys.stderr)
     print(json.dumps({"queries": timings, "spread": spreads, "sf_dir": sf_dir}))
     spark.stop()

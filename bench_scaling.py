@@ -15,40 +15,14 @@ Child:  python bench_scaling.py --child CPUS INPUT_DIR
 
 from __future__ import annotations
 
-import hashlib
 import json
 import os
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-CHECK_EXPR = (
-    "conv(substring(md5(concat_ws('|', conv_id, turn_idx, extracted_text, "
-    "chars_emitted)), 1, 15), 16, 10)"
-)
-
-
-def _loadavg() -> float:
-    with open("/proc/loadavg") as f:
-        return float(f.read().split()[0])
-
-
-def _cpu_jiffies() -> list[int]:
-    """Aggregate cpu line of /proc/stat: user nice system idle iowait
-    irq softirq STEAL. Steal is the one signal of host-level tenant
-    contention a microVM guest can see — ps/loadavg only show guest
-    processes."""
-    with open("/proc/stat") as f:
-        return [int(x) for x in f.readline().split()[1:9]]
-
-
-def _steal_pct(c0: list[int], c1: list[int]) -> float:
-    d = [b - a for a, b in zip(c0, c1)]
-    tot = sum(d)
-    return round(100.0 * d[7] / tot, 1) if tot else 0.0
-
+from tools import measure  # noqa: E402
 
 def _top_procs(n: int = 5) -> list[str]:
     """Top CPU consumers at sample time — catches an external periodic
@@ -64,8 +38,8 @@ def _top_procs(n: int = 5) -> list[str]:
 
 
 def child(cpus: int, input_dir: str) -> None:
-    from pyspark.sql import functions as F
-
+    from perfbench import host
+    from perfbench.workloads import checksum, noop
     from yomitoku_spark.plans.pipeline import extract
     from yomitoku_spark.session import get_spark
 
@@ -87,59 +61,29 @@ def child(cpus: int, input_dir: str) -> None:
     )
     tdf = spark.read.parquet(input_dir)
     n_turns = tdf.count()
-    # warmup: one full pass so every Python worker in the pool is spawned
-    # and has imported its libraries (workers are reused across jobs);
-    # timing then measures steady-state extraction throughput
-    extract(tdf).write.mode("overwrite").format("noop").save()
 
     # timed region: extraction only (the metric is turns/sec extraction
     # throughput); the equality checksum is computed separately after.
-    # Best of 3 passes = steady-state throughput (single-run noise on a
-    # shared box otherwise dominates the comparison).
-    def _gc_ms() -> int:
-        """Cumulative driver-JVM GC milliseconds (all collectors) — the
-        second outlier suspect besides host steal: a mid-run mixed-GC
-        ramp stalls the single local-mode JVM for whole seconds."""
-        try:
-            beans = (
-                spark._jvm.java.lang.management.ManagementFactory
-                .getGarbageCollectorMXBeans()
-            )
-            return sum(b.getCollectionTime() for b in beans)
-        except Exception:
-            return 0
-
-    walls = []
-    loadavgs = []
-    steals = []
-    gc_deltas = []
-    outlier_evidence = []
-    for rep in range(int(os.environ.get("SCALE_REPS", "10"))):
-        la0 = _loadavg()
-        c0 = _cpu_jiffies()
-        g0 = _gc_ms()
-        t0 = time.perf_counter()
-        extract(tdf).write.mode("overwrite").format("noop").save()
-        w = time.perf_counter() - t0
-        steal = _steal_pct(c0, _cpu_jiffies())
-        walls.append(w)
-        loadavgs.append(round(la0, 2))
-        steals.append(steal)
-        gc_deltas.append(_gc_ms() - g0)
+    records, outlier_evidence = [], []
+    for rec in measure.timed(
+        spark, lambda: noop(extract(tdf)), int(os.environ.get("SCALE_REPS", "10"))
+    ):
+        records.append(rec)
         # an outlier rep (>2x the best so far) gets a concurrent-load
         # sample so external interference is evidenced, not asserted
-        if w > 2 * min(walls):
+        if rec["wall"] > 2 * min(r["wall"] for r in records):
             outlier_evidence.append(
                 {
-                    "rep": rep,
-                    "wall": round(w, 3),
-                    "steal_pct": steal,
-                    "gc_ms": gc_deltas[-1],
-                    "loadavg_before": round(la0, 2),
-                    "loadavg_after": round(_loadavg(), 2),
+                    "rep": len(records) - 1,
+                    "wall": round(rec["wall"], 3),
+                    "steal_pct": rec["steal_pct"],
+                    "gc_ms": rec["gc_ms"],
+                    "loadavg_before": rec["loadavg"],
+                    "loadavg_after": round(host.loadavg(), 2),
                     "top_procs": _top_procs(),
                 }
             )
+    walls = [r["wall"] for r in records]
     # min across reps = steady-state throughput: the C2 JIT needs ~4 full
     # passes over the codegen'd scan+Arrow stages before the 32-core level
     # stops being compilation-bound (observed 11.4→5.3s across 7 reps),
@@ -150,12 +94,7 @@ def child(cpus: int, input_dir: str) -> None:
     def pct(p):
         return sw[min(len(sw) - 1, int(round(p * (len(sw) - 1))))]
 
-    agg = (
-        extract(tdf)
-        .select(F.expr(CHECK_EXPR).cast("decimal(38,0)").alias("h"))
-        .agg(F.sum("h").alias("checksum"), F.count(F.lit(1)).alias("n"))
-        .collect()[0]
-    )
+    check, n_results = checksum(extract(tdf))
     print(
         json.dumps(
             {
@@ -167,33 +106,16 @@ def child(cpus: int, input_dir: str) -> None:
                 "wall_p90": round(pct(0.9), 3),
                 "wall_spread": round(max(walls) / min(walls), 2),
                 "turns_per_sec": round(n_turns / wall, 1),
-                "loadavgs": loadavgs,
-                "steal_pcts": steals,
-                "gc_ms_per_rep": gc_deltas,
+                "loadavgs": [r["loadavg"] for r in records],
+                "steal_pcts": [r["steal_pct"] for r in records],
+                "gc_ms_per_rep": [r["gc_ms"] for r in records],
                 "outlier_evidence": outlier_evidence,
-                "checksum": str(agg.checksum),
-                "n_results": int(agg.n),
+                "checksum": check,
+                "n_results": n_results,
             }
         )
     )
     spark.stop()
-
-
-def oracle_checksum(input_dir: str) -> tuple[str, int]:
-    """Pure-Python referee: same checksum over oracle extractions."""
-    import duckdb
-
-    from yomitoku_spark import oracle
-
-    rows = duckdb.sql(
-        f"SELECT conv_id, turn_idx, text, tool FROM '{input_dir}/*.parquet'"
-    ).fetchall()
-    total = 0
-    for conv_id, turn_idx, text, tool in rows:
-        r = oracle.extract_payload(text, tool)
-        key = f"{conv_id}|{turn_idx}|{r['extracted_text']}|{r['chars_emitted']}"
-        total += int(hashlib.md5(key.encode()).hexdigest()[:15], 16)
-    return str(total), len(rows)
 
 
 def main() -> None:
@@ -216,7 +138,7 @@ def main() -> None:
         from yomitoku_spark.datagen import transcripts_df
         from yomitoku_spark.session import get_spark
 
-        spark = get_spark(app="scale_gen", master="local[32]")
+        spark = get_spark(app="scale_gen")
         # 256 input splits so both parallelism levels have work for every
         # slot (a 100 TB table has orders of magnitude more splits)
         transcripts_df(spark, n_convs=n_convs, seed=42).repartition(256).write.mode(
@@ -240,7 +162,7 @@ def main() -> None:
     eff = (r8["wall_sec"] / r32["wall_sec"]) / 4
     eff_p50 = (r8["wall_p50"] / r32["wall_p50"]) / 4
     checks_match = r8["checksum"] == r32["checksum"]
-    o_sum, o_n = oracle_checksum(input_dir)
+    o_sum, o_n = measure.oracle_checksum(input_dir)
     oracle_match = o_sum == r8["checksum"] and o_n == r8["n_results"]
 
     os.makedirs(os.path.dirname(out_md), exist_ok=True)
@@ -251,7 +173,8 @@ Job: fused extraction (`yomitoku_spark.extract`) over the deterministic
 synthetic transcripts table (seed=42, {n_convs} conversations,
 {r8['n_turns']} turns, one 12× skewed conversation), materialized once
 to parquet and read identically by both runs. Each parallelism level is
-a fresh JVM; timing is best-of-N full passes after a full warmup pass.
+a fresh JVM; timing is best-of-N full passes after one or two untimed
+warm-up passes (`tools/measure.py`).
 
 | parallelism | wall best (s) | p50 | p90 | max/min | turns/sec |
 |---|---|---|---|---|---|
@@ -273,7 +196,7 @@ steady state; best-of-N is the steady-state measure.)
 Every timed rep records the two signals that explain wall outliers on
 this box, so each outlier is ATTRIBUTED rather than asserted away:
 
-1. **CPU steal time** (/proc/stat col 8 delta) — this sandbox is a
+1. **CPU steal time** (`perfbench.host.steal_pct`) — this host is a
    microVM guest, and host-level tenant contention is invisible to
    guest ps/loadavg; steal is the one observable trace of it.
 2. **Driver-JVM GC time** (GarbageCollectorMXBeans delta) — local mode
@@ -297,7 +220,7 @@ the tables below let a reader match every slow rep to its cause.
 
 - checksum(local[8]) == checksum(local[32]): **{checks_match}**
 - checksum matches pure-Python oracle over all {o_n} turns: **{oracle_match}**
-  (checksum = Σ md5-int60 over `conv_id|turn_idx|extracted_text|chars_emitted`
+  (checksum = Σ `perfbench.inputs.turn_checksum` over `conv_id|turn_idx|extracted_text|chars_emitted`
   → equality pass rate 100% at bench scale; the byte-level per-turn gate
   also runs in `tests/test_pipeline.py` via `python -m pytest -x -q`)
 

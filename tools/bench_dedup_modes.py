@@ -12,11 +12,12 @@ from __future__ import annotations
 
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
+
+from tools import measure  # noqa: E402
 
 
 def sparse_boxes(spark, n: int):
@@ -52,18 +53,10 @@ def main():
     from yomitoku_spark.queries import QUERIES
     from yomitoku_spark.session import get_spark
 
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    spark = get_spark(app="dedup_modes", master=f"local[{cpus}]", shuffle_partitions=cpus)
+    spark = get_spark(app="dedup_modes")
 
-    def timed(fn, reps=3, warm=True):
-        if warm:
-            fn()
-        walls = []
-        for _ in range(reps):
-            t0 = time.perf_counter()
-            fn()
-            walls.append(time.perf_counter() - t0)
-        return round(min(walls), 2)
+    def timed(fn):
+        return round(min(r["wall"] for r in measure.timed(spark, fn, 3)), 2)
 
     def row(label, name, strat, wall):
         print(f"{label:<26} {name:<10} {strat:<18} {wall:>8}", flush=True)
@@ -97,18 +90,17 @@ def main():
 
     dense = _part_boxes(spark, "/root/testdata/sf0.1").localCheckpoint(eager=True)
     mode, cell = SP.dedup_strategy(dense)
-    for name, kw, reps, warm in (
-        ("theta", {}, 3, True),
-        ("blocked", {"blocked_cell": 64}, 1, False),  # ~9 min; once, no warmup
-        ("auto", {"blocked_cell": "auto"}, 3, True),
-    ):
+    for name, kw in (("theta", {}), ("blocked", None), ("auto", {"blocked_cell": "auto"})):
+        if kw is None:
+            # blocked_cell=64 measured once (r5): 481 s vs 3.37 s theta
+            # — skipped from the repeated table
+            row("dense stress (sf0.1)", name, "(skipped: ~n² pairs; 481 s measured once)", "-")
+            continue
         w = timed(
             lambda kw=kw: SP.dedup_contained(dense, "p_partkey", **kw)
             .write.mode("overwrite")
             .format("noop")
-            .save(),
-            reps=reps,
-            warm=warm,
+            .save()
         )
         row("dense stress (sf0.1)", name, f"auto->{mode}" if name == "auto" else name, w)
     spark.stop()

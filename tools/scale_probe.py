@@ -1,13 +1,17 @@
 """One-shot 10x scale probe of the two flagships (r5 verdict item 7).
 
-Runs, at ~10x the per-round bench input, on local[32]:
+Runs, at ~10x the per-round bench input, on local[$SPARK_GRAFT_CPUS]:
 
 * fused extraction over a 60k-conversation synthetic transcripts table
-  (~1M turns) — wall, turns/sec, the scaling harness's checksum vs the
-  pure-Python oracle, and peak JVM heap vs -Xmx headroom;
+  (~1M turns) — walls, turns/sec, the engine's checksum vs the
+  pure-Python oracle, and the driver JVM's old-generation peak vs -Xmx
+  headroom;
 * ``corpus_build_full`` (the whole extraction→dedup→select→JSON brief
   as one plan) over a 10x-replicated documents table (50k docs) — wall,
-  result rows, peak heap.
+  result rows, old-generation peak.
+
+Walls follow ``tools/measure.py``'s rule; each peak spans that rule's
+warm-up and timed passes.
 
 Prints one JSON line; findings land in BENCH/NOTES.md.
 
@@ -19,36 +23,17 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from bench_scaling import CHECK_EXPR, oracle_checksum  # noqa: E402
-
-
-def _peak_heap_mb(spark) -> tuple[int, int]:
-    """(peak heap used, max heap) in MB from the driver JVM's memory
-    pool beans — local mode runs executors in this JVM, so the pool
-    peaks bound the whole job's memory footprint."""
-    mf = spark._jvm.java.lang.management.ManagementFactory
-    peak = 0
-    for pool in mf.getMemoryPoolMXBeans():
-        if pool.getType().toString() == "Heap memory":
-            peak += pool.getPeakUsage().getUsed()
-    mx = spark._jvm.java.lang.Runtime.getRuntime().maxMemory()
-    return peak // (1 << 20), mx // (1 << 20)
-
-
-def _reset_peaks(spark) -> None:
-    mf = spark._jvm.java.lang.management.ManagementFactory
-    for pool in mf.getMemoryPoolMXBeans():
-        pool.resetPeakUsage()
+from perfbench.probes import old_gen_peak_mb, reset_old_gen_peak  # noqa: E402
+from perfbench.workloads import checksum, noop  # noqa: E402
+from tools import measure  # noqa: E402
 
 
 def main() -> None:
     n_convs = int(sys.argv[1]) if len(sys.argv) > 1 else 60_000
     doc_mult = int(sys.argv[2]) if len(sys.argv) > 2 else 10
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
     from pyspark.sql import functions as F
@@ -58,10 +43,9 @@ def main() -> None:
     from yomitoku_spark.queries import corpus_build_full
     from yomitoku_spark.session import get_spark
 
-    spark = get_spark(
-        app="scale_probe", master=f"local[{cpus}]", shuffle_partitions=cpus
-    )
-    out: dict = {"cpus": cpus}
+    spark = get_spark(app="scale_probe")
+    max_mb = spark._jvm.java.lang.Runtime.getRuntime().maxMemory() // (1 << 20)
+    out: dict = {"cpus": spark.sparkContext.defaultParallelism}
 
     # ---- flagship 1: fused extraction at ~1M turns -------------------
     input_dir = f"/tmp/yomitoku_probe_input_{n_convs}"
@@ -72,28 +56,18 @@ def main() -> None:
     tdf = spark.read.parquet(input_dir)
     n_turns = tdf.count()
 
-    extract(tdf).write.mode("overwrite").format("noop").save()  # warm JIT
-    walls = []
-    _reset_peaks(spark)
-    for _ in range(3):
-        t0 = time.perf_counter()
-        extract(tdf).write.mode("overwrite").format("noop").save()
-        walls.append(round(time.perf_counter() - t0, 3))
-    peak_mb, max_mb = _peak_heap_mb(spark)
-    agg = (
-        extract(tdf)
-        .select(F.expr(CHECK_EXPR).cast("decimal(38,0)").alias("h"))
-        .agg(F.sum("h").alias("checksum"), F.count(F.lit(1)).alias("n"))
-        .collect()[0]
-    )
+    reset_old_gen_peak(spark)
+    walls = [round(r["wall"], 3) for r in measure.timed(spark, lambda: noop(extract(tdf)), 3)]
+    peak_mb = round(old_gen_peak_mb(spark))
+    spark_sum, n_results = checksum(extract(tdf))
     out["extract"] = {
         "n_turns": int(n_turns),
         "walls": walls,
         "turns_per_sec": round(n_turns / min(walls), 1),
         "peak_heap_mb": peak_mb,
         "max_heap_mb": max_mb,
-        "spark_checksum": str(agg.checksum),
-        "n_results": int(agg.n),
+        "spark_checksum": spark_sum,
+        "n_results": n_results,
     }
 
     # ---- flagship 2: corpus_build_full at 10x documents --------------
@@ -115,24 +89,26 @@ def main() -> None:
         big.repartition(64).write.mode("overwrite").parquet(docs_path)
     n_docs_big = spark.read.parquet(docs_path).count()
 
-    corpus_build_full(spark, probe_dir).write.mode("overwrite").format("noop").save()
-    _reset_peaks(spark)
-    t0 = time.perf_counter()
-    res = corpus_build_full(spark, probe_dir)
-    n_rows = res.count()
-    wall = round(time.perf_counter() - t0, 3)
-    peak_mb2, _ = _peak_heap_mb(spark)
+    reset_old_gen_peak(spark)
+    rows: list[int] = []
+    walls2 = [
+        r["wall"]
+        for r in measure.timed(
+            spark, lambda: rows.append(corpus_build_full(spark, probe_dir).count()), 1
+        )
+    ]
+    peak_mb2 = round(old_gen_peak_mb(spark))
     out["corpus_build_full"] = {
         "n_docs": int(n_docs_big),
-        "wall": wall,
-        "rows": int(n_rows),
+        "wall": round(min(walls2), 3),
+        "rows": rows[-1],
         "peak_heap_mb": peak_mb2,
         "max_heap_mb": max_mb,
     }
     spark.stop()
 
     # pure-Python oracle checksum over the same 1M-turn input
-    osum, on = oracle_checksum(input_dir)
+    osum, on = measure.oracle_checksum(input_dir)
     out["extract"]["oracle_checksum"] = osum
     out["extract"]["oracle_n"] = on
     out["extract"]["checksum_equal"] = (

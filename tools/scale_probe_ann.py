@@ -18,41 +18,30 @@ from __future__ import annotations
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from tools import measure
 from yomitoku_spark.operators import similarity as SIM
 from yomitoku_spark.session import get_spark
 
 
 def _probe(name, build, spark):
+    """Best wall of ``build()`` to the noop sink. ``measure`` releases
+    only the blocks each pass pins (the operators' internal
+    localCheckpoints), so the shared replica table built outside the
+    probe stays resident across reps."""
     spark.sparkContext.setJobDescription(f"scale_probe_ann:{name}")
-    best = None
-    for _ in range(2):
-        # release only the blocks THIS rep pins (the operators'
-        # internal localCheckpoints) — the shared replica table built
-        # outside the probe must stay resident across reps
-        before = set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
-        t0 = time.time()
-        build().write.format("noop").mode("overwrite").save()
-        w = time.time() - t0
-        best = w if best is None or w < best else best
-        for rid, jrdd in spark.sparkContext._jsc.getPersistentRDDs().items():
-            if rid not in before:
-                jrdd.unpersist(False)
-    return round(best, 2)
+    recs = measure.timed(spark, lambda: build().write.format("noop").mode("overwrite").save(), 3)
+    return round(min(r["wall"] for r in recs), 2)
 
 
 def main():
     mult = int(sys.argv[1]) if len(sys.argv) > 1 else 10
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    spark = get_spark(
-        app="scale_probe_ann", master=f"local[{cpus}]", shuffle_partitions=cpus
-    )
+    spark = get_spark(app="scale_probe_ann")
     e1 = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     n1 = e1.count()
     blocks = spark.range(mult).select(F.col("id").alias("blk"))

@@ -51,15 +51,6 @@ from yomitoku_spark.functions.textstats import hash64, token_count, tokens
 from yomitoku_spark.session import fan_out
 
 
-def _fan(df: DataFrame) -> DataFrame:
-    """Fan a small scan out to the session's parallelism before the
-    expensive tokenize/gram map stages — see
-    :func:`yomitoku_spark.session.fan_out` (guide §2.5 input skew;
-    skips itself when the scan already has ample input files, so it
-    is a no-op at real scale)."""
-    return fan_out(df)
-
-
 def _grams(t: Column, n: int) -> Column:
     """Sliding word n-grams of the token array (1-based positions;
     empty when the doc has fewer than n tokens). The size guard
@@ -186,7 +177,7 @@ def exact_substring_spans(
     doc_id repartition.
     """
     t = tokens(F.lower(F.col(text_col)))
-    occ = _fan(df).select(F.col(id_col), t.alias("t")).select(
+    occ = fan_out(df).select(F.col(id_col), t.alias("t")).select(
         id_col, F.posexplode(_grams(F.col("t"), k)).alias("i0", "gram")
     )
     occ = occ.select(id_col, (F.col("i0") + 1).alias("pos"), hash64(F.col("gram")).alias("gh"))
@@ -264,7 +255,7 @@ def scrub_duplicate_spans(
     document — untouched docs ride through with n_removed = 0, and
     zero-token docs with n_tokens = 0 and empty cleaned_text."""
     t = tokens(F.lower(F.col(text_col)))
-    base = _fan(df).select(F.col(id_col).alias("id"), t.alias("t"))
+    base = fan_out(df).select(F.col(id_col).alias("id"), t.alias("t"))
     toks = base.select(
         "id", F.posexplode(F.col("t")).alias("i0", "tok")
     ).select("id", (F.col("i0") + 1).cast("bigint").alias("p"), "tok")
@@ -503,7 +494,7 @@ def decontaminate(
     """
     t = tokens(F.lower(F.col(text_col)))
     is_eval = (hash64(F.col(id_col).cast("string")) % 1000) < eval_permille
-    base = _fan(df).select(
+    base = fan_out(df).select(
         F.col(id_col),
         token_count(F.col(text_col)).alias("n_tokens"),
         t.alias("t"),
@@ -584,7 +575,7 @@ def decontaminate_bloom(
 
     t = tokens(F.lower(F.col(text_col)))
     is_eval = (hash64(F.col(id_col).cast("string")) % 1000) < eval_permille
-    base = _fan(df).select(
+    base = fan_out(df).select(
         F.col(id_col),
         token_count(F.col(text_col)).alias("n_tokens"),
         t.alias("t"),
@@ -707,7 +698,7 @@ def importance_weights(
     """
     t = tokens(F.lower(F.col(text_col)))
     is_target = (hash64(F.col(id_col).cast("string")) % 1000) < target_permille
-    base = _fan(df).select(F.col(id_col), t.alias("t"), is_target.alias("is_target"))
+    base = fan_out(df).select(F.col(id_col), t.alias("t"), is_target.alias("is_target"))
     occ = base.select(
         id_col,
         "is_target",
@@ -803,7 +794,7 @@ def lm_perplexity(
     is_train = (
         hash64(F.concat(F.col(id_col).cast("string"), F.lit(":lm"))) % 1000
     ) < train_permille
-    base = _fan(df).select(F.col(id_col), t.alias("t"), is_train.alias("is_train"))
+    base = fan_out(df).select(F.col(id_col), t.alias("t"), is_train.alias("is_train"))
     pairs = F.when(
         F.size("t") >= 2,
         F.zip_with(

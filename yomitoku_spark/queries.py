@@ -32,14 +32,6 @@ def t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(f"{sf_dir}/{name}.parquet")
 
 
-def _par(df: DataFrame) -> DataFrame:
-    """Fan a small scan out to the session's parallelism before
-    expensive per-row work — see :func:`yomitoku_spark.session.fan_out`
-    (guide §2.5 input skew; skips itself when the scan already has
-    ample input files, so it is a no-op at real scale)."""
-    return fan_out(df)
-
-
 def _cents(c) -> F.Column:
     return F.round(F.col(c) * 100).cast("bigint")
 
@@ -1080,7 +1072,7 @@ def cmsketch_token_counts(spark, sf_dir):
     collision-free). The sketch table merges across shards by SUM —
     pytest pins the merge law."""
     d = t(spark, sf_dir, "documents")
-    occ = _par(d).select(
+    occ = fan_out(d).select(
         "doc_id", F.explode(TS.tokens(F.lower(F.col("text")))).alias("tok")
     )
     sk = SK.cm_build(occ, F.col("tok"), [])
@@ -1578,7 +1570,7 @@ def containment_near_pairs(spark, sf_dir):
     # (~5.9 s/pass at sf0.1, ~80% of the query wall). Fan out to every
     # core first (guide §2.5), materialize ONCE (guide §2.4).
     sh = (
-        _par(corpus)
+        fan_out(corpus)
         .select(F.col("doc_id").alias("id"), DD.shingles(F.col("text"), 3).alias("sh"))
         .localCheckpoint(eager=True)
     )
@@ -1879,7 +1871,7 @@ def kmv_sample_tokens(spark, sf_dir):
     rows per group. Exact distinct counts ride alongside; the referee
     replays hash, rank, and estimator arithmetic bit for bit."""
     d = t(spark, sf_dir, "documents")
-    occ = _par(d).select(
+    occ = fan_out(d).select(
         "lang", F.explode(TS.tokens(F.lower(F.col("text")))).alias("tok")
     )
     sk = SK.kmv_build(occ, F.col("tok"), ["lang"], k=64)
@@ -2075,7 +2067,7 @@ def training_set_selection(spark, sf_dir):
     stop = TS.stopword_count(F.col("text"), "en")
     punct = F.length(F.regexp_replace("text", r"[\w\s]", ""))
     n_tok = TS.token_count(F.col("text"))
-    stats = _par(d).select(
+    stats = fan_out(d).select(
         "doc_id",
         TS.lang_id(F.col("text")).alias("lang_detected"),
         n_tok.alias("n_tokens"),
