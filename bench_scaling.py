@@ -41,22 +41,21 @@ def child(cpus: int, input_dir: str) -> None:
     from perfbench import host
     from perfbench.workloads import checksum, noop
     from yomitoku_spark.plans.pipeline import extract
-    from yomitoku_spark.session import get_spark
+    from yomitoku_spark.session import engine_conf, get_spark
 
     # Pin the collector: G1 with a bounded pause target and a fixed heap
-    # (Xms == Xmx via spark.driver.memory + extraJavaOptions) — the
-    # local[32] wall-time outliers (30 s max in earlier runs) are
-    # full-heap growth/GC events, not extraction variance; a pinned heap
-    # keeps max/min wall ratio < 3 so best-of-N margins are trustworthy.
-    heap = os.environ.get("SPARK_DRIVER_MEM", "32g")  # Xms == Xmx (get_spark's -Xmx source)
+    # (Xms == Xmx == the engine's heap), after the engine's own flags — the
+    # local[32] wall-time outliers (30 s max in earlier runs) are full-heap
+    # growth/GC events, not extraction variance; a pinned heap keeps max/min
+    # wall ratio < 3 so best-of-N margins are trustworthy.
+    conf = engine_conf()
     spark = get_spark(
         app=f"scale_{cpus}",
         master=f"local[{cpus}]",
         shuffle_partitions=cpus,
         extra_conf={
-            "spark.driver.extraJavaOptions": (
-                f"-XX:+UseG1GC -XX:MaxGCPauseMillis=200 -Xms{heap}"
-            ),
+            "spark.driver.extraJavaOptions": f"{conf['spark.driver.extraJavaOptions']}"
+            f" -XX:+UseG1GC -XX:MaxGCPauseMillis=200 -Xms{conf['spark.driver.memory']}",
         },
     )
     tdf = spark.read.parquet(input_dir)
@@ -99,6 +98,7 @@ def child(cpus: int, input_dir: str) -> None:
         json.dumps(
             {
                 "cpus": cpus,
+                "heap": conf["spark.driver.memory"],
                 "n_turns": int(n_turns),
                 "wall_sec": round(wall, 3),
                 "all_walls": [round(w, 3) for w in walls],
@@ -181,7 +181,7 @@ warm-up passes (`tools/measure.py`).
 | local[8]  (N)  | {r8['wall_sec']} | {r8['wall_p50']} | {r8['wall_p90']} | {r8['wall_spread']} | {r8['turns_per_sec']} |
 | local[32] (4N) | {r32['wall_sec']} | {r32['wall_p50']} | {r32['wall_p90']} | {r32['wall_spread']} | {r32['turns_per_sec']} |
 
-GC pinned per child JVM (G1, 200 ms pause target, Xms=Xmx=32g) — the
+GC pinned per child JVM (G1, 200 ms pause target, Xms=Xmx={r32['heap']}) — the
 wall-time distribution above is the evidence the best-of-N margin is
 real (target: max/min < 3 at local[32]).
 

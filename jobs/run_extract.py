@@ -2,14 +2,16 @@
 
 Usage:
     python tools/make_pyfiles.py                       # build dist/yomitoku_spark.zip
-    spark-submit --master local[32] \
+    spark-submit --master 'local[*]' --driver-memory 4g \
+        --driver-java-options -XX:+ExplicitGCInvokesConcurrent \
         --py-files dist/yomitoku_spark.zip \
         jobs/run_extract.py --input /path/transcripts --output /path/out \
         [--resume] [--n-buckets 256]
 
 With --resume the job uses the bucket-wave checkpoint runner
 (idempotent per-bucket overwrite + lineage/metrics state table);
-without it, a straight extract → ordered write.
+without it, a straight extract → ordered write. First prints one JSON
+line: the master and every engine setting in effect (session.get_spark).
 """
 
 from __future__ import annotations
@@ -27,14 +29,13 @@ def main():
     ap.add_argument("--partitions", type=int, default=0)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from yomitoku_spark.plans.checkpoint import run_resumable
     from yomitoku_spark.plans.pipeline import extract
+    from yomitoku_spark.session import conf_line, get_spark
     from yomitoku_spark.sources.tables import read_transcripts, salt_repartition, write_result
 
-    spark = SparkSession.builder.appName("yomitoku_extract").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark(app="yomitoku_extract")
+    print(conf_line(spark))
     tdf = read_transcripts(spark, args.input, args.format)
     if args.partitions:
         tdf = salt_repartition(tdf, args.partitions)

@@ -4,7 +4,9 @@ cli/main.py → extractor/rule_pipeline.run_rule_extraction).
 
 Usage:
     python tools/make_pyfiles.py
-    spark-submit --master local[32] --py-files dist/yomitoku_spark.zip \
+    spark-submit --master 'local[*]' --driver-memory 4g \
+        --driver-java-options -XX:+ExplicitGCInvokesConcurrent \
+        --py-files dist/yomitoku_spark.zip \
         jobs/run_extract_fields.py \
         --cells /path/cells --schema schema.yaml --output /path/out \
         [--paragraphs /path/paragraphs] [--words /path/words]
@@ -31,13 +33,12 @@ def main():
     ap.add_argument("--words", default=None)
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from yomitoku_spark.operators.kv_graph import parse_kv_items
     from yomitoku_spark.semantic import extract_scalar_fields, load_schema
+    from yomitoku_spark.session import conf_line, get_spark
 
-    spark = SparkSession.builder.appName("yomitoku_extract_fields").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark(app="yomitoku_extract_fields")
+    print(conf_line(spark))
 
     cells = spark.read.parquet(args.cells)
     empty_paras = spark.createDataFrame(

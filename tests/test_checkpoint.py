@@ -59,6 +59,22 @@ def test_metrics_exactly_once(spark, tdf, tmp_path):
     assert all(r.lineage for r in state.collect())
 
 
+def test_empty_buckets_get_zero_rows(spark, tdf, tmp_path):
+    """More buckets than turns: every bucket still gets exactly one done
+    row, the empty ones with zero metrics, and the totals match."""
+    small = tdf.limit(5)
+    out = str(tmp_path / "out_sparse")
+    assert CP.run_resumable(small, out, n_buckets=64, wave_size=16) == 64
+    state = CP.read_state(spark, out).collect()
+    assert sorted(r.bucket for r in state) == list(range(64))
+    assert all(r.status == "done" for r in state)
+    empty = [r for r in state if r.n_turns == 0]
+    assert len(empty) >= 64 - 5
+    assert all((r.blocks_kept, r.blocks_dropped, r.chars_emitted) == (0, 0, 0) for r in empty)
+    assert sum(r.n_turns for r in state) == 5
+    assert CP.read_result(spark, out).count() == 5
+
+
 def test_bigint_turn_idx_buckets_consistently(spark, tdf, tmp_path):
     """xxhash64 is type-sensitive: a caller passing bigint turn_idx must
     still land every row in the bucket that selected it (the input-side

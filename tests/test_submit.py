@@ -2,6 +2,7 @@
 path): package the library, submit the job from a foreign cwd so ONLY
 the zip provides the code, verify ordered output, then a --resume run."""
 
+import json
 import os
 import subprocess
 import sys
@@ -9,6 +10,43 @@ import sys
 import pytest
 
 ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+BATCH = "spark.sql.execution.arrow.maxRecordsPerBatch"
+
+
+def _submit(job: str, args: list[str], cwd) -> None:
+    """spark-submit one job at local[4] with the launch flags its usage
+    gives, plus one --conf that must win over the engine's value; assert
+    the session the job printed."""
+    from yomitoku_spark.session import engine_conf
+
+    zip_path = subprocess.run(
+        [sys.executable, os.path.join(ROOT, "tools", "make_pyfiles.py")],
+        capture_output=True, text=True, check=True,
+    ).stdout.strip()
+    spark_submit = os.path.join(os.path.dirname(sys.executable), "spark-submit")
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["PYSPARK_PYTHON"] = sys.executable
+    want = engine_conf()
+    cmd = [
+        spark_submit, "--master", "local[4]",
+        "--driver-memory", want["spark.driver.memory"],
+        "--driver-java-options", want["spark.driver.extraJavaOptions"],
+        "--conf", f"{BATCH}=1000",
+        "--py-files", zip_path,
+        os.path.join(ROOT, "jobs", job),
+    ] + args
+    p = subprocess.run(cmd, capture_output=True, text=True, cwd=cwd,
+                       env=env, timeout=420)
+    assert p.returncode == 0, p.stderr[-3000:]
+    got = json.loads(next(ln for ln in p.stdout.splitlines() if ln.startswith("{")))
+    assert got.pop("master") == "local[4]"
+    assert got.pop("spark.sql.shuffle.partitions") == "4"
+    assert got.pop(BATCH) == "1000"
+    del want[BATCH]
+    # Spark puts its own JVM module options in front of the driver's flags
+    java = "spark.driver.extraJavaOptions"
+    assert got.pop(java).endswith(" " + want.pop(java))
+    assert got == want
 
 
 @pytest.mark.slow
@@ -23,26 +61,9 @@ def test_spark_submit_pyfiles(spark, tmp_path):
     tdf.write.parquet(in_dir)
     want = extract(tdf).count()
 
-    zip_path = subprocess.run(
-        [sys.executable, os.path.join(ROOT, "tools", "make_pyfiles.py")],
-        capture_output=True, text=True, check=True,
-    ).stdout.strip()
-    spark_submit = os.path.join(os.path.dirname(sys.executable), "spark-submit")
-
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["PYSPARK_PYTHON"] = sys.executable
     for resume, out in ((False, out_dir), (True, out_dir2)):
-        cmd = [
-            spark_submit, "--master", "local[4]",
-            "--conf", "spark.ui.enabled=false",
-            "--py-files", zip_path,
-            os.path.join(ROOT, "jobs", "run_extract.py"),
-            "--input", in_dir, "--output", out,
-            "--partitions", "8",
-        ] + (["--resume", "--n-buckets", "8"] if resume else [])
-        p = subprocess.run(cmd, capture_output=True, text=True, cwd="/tmp",
-                           env=env, timeout=420)
-        assert p.returncode == 0, p.stderr[-3000:]
+        _submit("run_extract.py", ["--input", in_dir, "--output", out, "--partitions", "8"]
+                + (["--resume", "--n-buckets", "8"] if resume else []), tmp_path)
 
     got = spark.read.parquet(out_dir)
     assert got.count() == want
@@ -75,23 +96,8 @@ def test_spark_submit_extract_fields_job(spark, tmp_path):
             "  - name: digits\n    regex: '[0-9]{3,}'\n"
         )
 
-    zip_path = subprocess.run(
-        [sys.executable, os.path.join(ROOT, "tools", "make_pyfiles.py")],
-        capture_output=True, text=True, check=True,
-    ).stdout.strip()
-    spark_submit = os.path.join(os.path.dirname(sys.executable), "spark-submit")
-    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
-    env["PYSPARK_PYTHON"] = sys.executable
-    cmd = [
-        spark_submit, "--master", "local[4]",
-        "--conf", "spark.ui.enabled=false",
-        "--py-files", zip_path,
-        os.path.join(ROOT, "jobs", "run_extract_fields.py"),
-        "--cells", cells_dir, "--schema", schema_path, "--output", out_dir,
-    ]
-    p = subprocess.run(cmd, capture_output=True, text=True, cwd="/tmp",
-                       env=env, timeout=420)
-    assert p.returncode == 0, p.stderr[-3000:]
+    _submit("run_extract_fields.py",
+            ["--cells", cells_dir, "--schema", schema_path, "--output", out_dir], tmp_path)
 
     got = {(r.doc_id, r.field): (r.value, r.source) for r in
            spark.read.parquet(out_dir).collect()}

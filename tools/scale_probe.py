@@ -1,6 +1,6 @@
 """One-shot 10x scale probe of the two flagships (r5 verdict item 7).
 
-Runs, at ~10x the per-round bench input, on local[$SPARK_GRAFT_CPUS]:
+Runs, at ~10x the per-round bench input, on get_spark's local[*]:
 
 * fused extraction over a 60k-conversation synthetic transcripts table
   (~1M turns) — walls, turns/sec, the engine's checksum vs the

@@ -30,6 +30,7 @@ from __future__ import annotations
 import os
 import time
 
+import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -75,34 +76,6 @@ def run_resumable(
     ``max_waves`` exists for fault-injection tests (stop early, then
     call again to resume)."""
     spark = transcripts.sparkSession
-    prev_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        return _run_resumable(
-            spark, transcripts, output_dir, n_buckets, wave_size, max_waves, lineage
-        )
-    finally:
-        if prev_mode is None:
-            spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-        else:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev_mode)
-
-
-def _bucket_expr(n_buckets: int) -> F.Column:
-    # xxhash64 is TYPE-sensitive (int vs bigint hash differently), and
-    # extract() emits turn_idx as int — so the input-side filter and the
-    # output-side write MUST hash the same types, or rows written land
-    # in a bucket other than the one that selected them and a later
-    # wave's dynamic overwrite silently deletes them.
-    return F.pmod(
-        F.xxhash64(F.col("conv_id").cast("string"), F.col("turn_idx").cast("int")),
-        F.lit(n_buckets),
-    ).cast("int")
-
-
-def _run_resumable(
-    spark, transcripts, output_dir, n_buckets, wave_size, max_waves, lineage
-) -> int:
     done = done_buckets(spark, output_dir)
     todo = sorted(set(range(n_buckets)) - done)
     lineage = lineage or f"yomitoku_spark-{__version__}"
@@ -117,39 +90,39 @@ def _run_resumable(
         part = bucketed.filter(F.col("bucket").isin(wave))
         res = extract(part.drop("bucket")).withColumn("bucket", _bucket_expr(n_buckets))
         # idempotent per-bucket replace (dynamic partition overwrite)
-        res.write.mode("overwrite").partitionBy("bucket").parquet(_result_dir(output_dir))
-        # metrics from the COMMITTED output → exactly-once
-        committed = spark.read.parquet(_result_dir(output_dir)).filter(
-            F.col("bucket").isin(wave)
-        )
-        stats = committed.groupBy("bucket").agg(
-            F.count(F.lit(1)).alias("n_turns"),
-            F.sum("blocks_kept").alias("blocks_kept"),
-            F.sum("blocks_dropped").alias("blocks_dropped"),
-            F.sum("chars_emitted").alias("chars_emitted"),
-        )
+        res.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
+            "bucket"
+        ).parquet(_result_dir(output_dir))
+        # metrics from the COMMITTED output → exactly-once, read back once
+        # (with the schema: an all-empty first wave commits no file)
+        committed = spark.read.schema(res.schema).parquet(_result_dir(output_dir))
+        sums = [F.sum(c) for c in ("blocks_kept", "blocks_dropped", "chars_emitted")]
+        stats = {
+            r[0]: tuple(r[1:])
+            for r in committed.filter(F.col("bucket").isin(wave))
+            .groupBy("bucket").agg(F.count(F.lit(1)), *sums).collect()
+        }
         now = time.time()
-        state_rows = stats.select(
-            F.col("bucket").cast("int"),
-            F.lit("done").alias("status"),
-            F.col("n_turns").cast("bigint"),
-            F.col("blocks_kept").cast("bigint"),
-            F.col("blocks_dropped").cast("bigint"),
-            F.col("chars_emitted").cast("bigint"),
-            F.lit(now).alias("attempt_ts"),
-            F.lit(lineage).alias("lineage"),
-        )
         # buckets that happened to be empty still need a done marker
-        seen = {r.bucket for r in stats.select("bucket").collect()}
-        empty = [b for b in wave if b not in seen]
-        if empty:
-            edf = spark.createDataFrame(
-                [(b, "done", 0, 0, 0, 0, now, lineage) for b in empty], STATE_SCHEMA
-            )
-            state_rows = state_rows.unionByName(edf)
-        state_rows.write.mode("append").parquet(_state_dir(output_dir))
+        rows = [(b, "done", *stats.get(b, (0, 0, 0, 0)), now, lineage) for b in wave]
+        # via pandas: Arrow needs no Python worker (a list of tuples does);
+        # one state file per wave
+        state = spark.createDataFrame(pd.DataFrame(rows), STATE_SCHEMA).coalesce(1)
+        state.write.mode("append").parquet(_state_dir(output_dir))
         processed += len(wave)
     return processed
+
+
+def _bucket_expr(n_buckets: int) -> F.Column:
+    # xxhash64 is TYPE-sensitive (int vs bigint hash differently), and
+    # extract() emits turn_idx as int — so the input-side filter and the
+    # output-side write MUST hash the same types, or rows written land
+    # in a bucket other than the one that selected them and a later
+    # wave's dynamic overwrite silently deletes them.
+    return F.pmod(
+        F.xxhash64(F.col("conv_id").cast("string"), F.col("turn_idx").cast("int")),
+        F.lit(n_buckets),
+    ).cast("int")
 
 
 def read_result(spark: SparkSession, output_dir: str) -> DataFrame:

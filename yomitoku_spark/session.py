@@ -4,14 +4,54 @@ Local-mode defaults mirror what we would set on a real cluster: AQE on
 (runtime skew-join splitting, partition coalescing), shuffle partitions
 sized to cores rather than the 200 default, Arrow enabled for the
 pandas-UDF stages, UTC session timezone so parquet timestamps compare
-byte-stably against the DuckDB oracle.
+byte-stably against the DuckDB oracle. Sizes come from the host or the
+launcher: Spark's own ``local[*]``, ``defaultParallelism``, a heap share.
 """
 
 from __future__ import annotations
 
+import json
 import os
 
+from pyspark import SparkConf, SparkContext
 from pyspark.sql import SparkSession
+
+SHUFFLE_PARTITIONS = "spark.sql.shuffle.partitions"
+
+
+def engine_conf() -> dict[str, str]:
+    """Every key ``get_spark`` sets but shuffle partitions (from the session)."""
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return {
+        "spark.sql.adaptive.enabled": "true",
+        "spark.sql.adaptive.coalescePartitions.enabled": "true",
+        "spark.sql.adaptive.skewJoin.enabled": "true",
+        "spark.sql.session.timeZone": "UTC",
+        "spark.sql.execution.arrow.pyspark.enabled": "true",
+        "spark.sql.execution.arrow.maxRecordsPerBatch": "4096",
+        "spark.ui.enabled": "false",
+        "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+        # ContextCleaner only reclaims shuffle files / broadcast blocks
+        # when driver GC collects their references; with a large heap a
+        # long session (the 59-query bench, a day-long cluster app)
+        # accumulates them for the default 30 MINUTES, and that
+        # block-manager pressure bleeds into later queries' walls.
+        # A 1-minute periodic GC bounds the accumulation at a cost of
+        # ~10ms/min of driver GC — same setting a long-lived cluster
+        # driver would run with.
+        "spark.cleaner.periodicGC.interval": "1min",
+        # The two launch keys below take effect only when get_spark itself
+        # launches the driver JVM (plain python); under spark-submit pass
+        # --driver-memory and --driver-java-options instead. The heap is
+        # the JVM's own default share of physical memory, a quarter: local
+        # mode runs the Python workers beside it.
+        "spark.driver.memory": os.environ.get("SPARK_DRIVER_MEM") or f"{phys // 4 >> 20}m",
+        # ...and make that explicit System.gc() a CONCURRENT G1 cycle
+        # instead of a stop-the-world full GC, so the periodic cleanup
+        # costs background CPU rather than a multi-hundred-ms pause
+        # landing inside whatever query is running when it fires
+        "spark.driver.extraJavaOptions": "-XX:+ExplicitGCInvokesConcurrent",
+    }
 
 
 def get_spark(
@@ -20,47 +60,31 @@ def get_spark(
     shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
-    master = master or f"local[{cpus}]"
-    if shuffle_partitions is None:
-        # local[N] → N; local[*] → cpu count
-        inner = master.split("[", 1)[-1].rstrip("]")
-        shuffle_partitions = cpus if inner in ("*", "") else int(inner)
-    b = (
-        SparkSession.builder.master(master)
-        .appName(app)
-        .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "4096")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "32g"))
-        .config("spark.ui.enabled", "false")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        # ContextCleaner only reclaims shuffle files / broadcast blocks
-        # when driver GC collects their references; with a 32g heap a
-        # long session (the 59-query bench, a day-long cluster app)
-        # accumulates them for the default 30 MINUTES, and that
-        # block-manager pressure bleeds into later queries' walls.
-        # A 1-minute periodic GC bounds the accumulation at a cost of
-        # ~10ms/min of driver GC — same setting a long-lived cluster
-        # driver would run with.
-        .config("spark.cleaner.periodicGC.interval", "1min")
-        # ...and make that explicit System.gc() a CONCURRENT G1 cycle
-        # instead of a stop-the-world full GC, so the periodic cleanup
-        # costs background CPU rather than a multi-hundred-ms pause
-        # landing inside whatever query is running when it fires
-        .config(
-            "spark.driver.extraJavaOptions", "-XX:+ExplicitGCInvokesConcurrent"
-        )
-    )
-    for k, v in (extra_conf or {}).items():
-        b = b.config(k, v)
-    spark = b.getOrCreate()
+    """The engine's session: arguments, then spark-submit's conf, win over ``engine_conf()``."""
+    launched: set[str] = set()
+    if "PYSPARK_GATEWAY_PORT" in os.environ:
+        # spark-submit started the JVM and holds its conf; probing under
+        # plain python would launch the JVM before the heap is applied
+        SparkContext._ensure_initialized()
+        launched = {k for k, _ in SparkConf().getAll()}
+    conf = {k: v for k, v in engine_conf().items() if k not in launched}
+    if shuffle_partitions is not None:
+        conf[SHUFFLE_PARTITIONS] = str(shuffle_partitions)
+    conf.update(extra_conf or {})
+    if master:
+        conf["spark.master"] = master
+    spark = SparkSession.builder.appName(app).config(map=conf).getOrCreate()
+    if SHUFFLE_PARTITIONS not in conf and SHUFFLE_PARTITIONS not in launched:
+        spark.conf.set(SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def conf_line(spark: SparkSession) -> str:
+    """One JSON line: the session's master and the value in effect for
+    every key ``get_spark`` sets."""
+    conf = {k: spark.conf.get(k) for k in [SHUFFLE_PARTITIONS, *engine_conf()]}
+    return json.dumps({"master": spark.sparkContext.master, **conf})
 
 
 def fan_out(df):
