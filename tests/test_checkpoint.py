@@ -89,6 +89,19 @@ def test_bigint_turn_idx_buckets_consistently(spark, tdf, tmp_path):
     assert _sorted(got.toPandas()).equals(_sorted(want))
 
 
+def test_unreadable_state_raises(spark, tdf, tmp_path):
+    """A corrupt ``_checkpoint`` must fail the run, not read as "nothing
+    done": that would redo committed buckets and append duplicate state
+    rows, breaking exactly-once. A fresh output still reads as empty."""
+    out = tmp_path / "out_corrupt"
+    assert CP.done_buckets(spark, str(out)) == set()
+    (out / "_checkpoint").mkdir(parents=True)
+    (out / "_checkpoint" / "part-00000.parquet").write_text("not parquet")
+    # the reader's own diagnosis, not the path (which names .parquet)
+    with pytest.raises(Exception, match="is not a Parquet file"):
+        CP.run_resumable(tdf.limit(20), str(out), n_buckets=4, wave_size=4)
+
+
 def test_overwrite_mode_conf_restored(spark, tdf, tmp_path):
     prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
     CP.run_resumable(tdf.limit(50), str(tmp_path / "out_conf"), n_buckets=4, wave_size=4)

@@ -13,7 +13,7 @@ from yomitoku_spark.operators.sizefilter import (
     valley_threshold_numpy,
 )
 from yomitoku_spark.plans.export import export_blocks
-from yomitoku_spark.plans.pipeline import classify, featurize, order_blocks, segment_blocks
+from yomitoku_spark.plans import pipeline
 
 
 @pytest.fixture(scope="module")
@@ -29,7 +29,7 @@ def blocks(spark):
     tdf = spark.createDataFrame(
         rows, "conv_id string, turn_idx int, role string, text string, tool string, ts timestamp"
     )
-    return classify(featurize(order_blocks(segment_blocks(tdf))))
+    return pipeline.blocks(tdf)
 
 
 def test_export_formats(spark, blocks):

@@ -132,9 +132,9 @@ fields:
 
 
 def test_kv_items_and_cells(spark, turns):
-    from yomitoku_spark.plans.pipeline import classify, featurize, order_blocks, segment_blocks
+    from yomitoku_spark.plans import pipeline
 
-    blocks = classify(featurize(order_blocks(segment_blocks(turns))))
+    blocks = pipeline.blocks(turns)
     kv = {(r.key, r.value) for r in EX.kv_items(blocks).collect()}
     assert ("Customer Name", "山田") in kv
     cells = EX.table_cells(blocks)

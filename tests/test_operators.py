@@ -449,16 +449,43 @@ def test_lsh_ann_quantized_recall_vs_brute_force(spark, emb):
     assert hits / total > 0.5, hits / total
 
 
-def test_label_propagation_equals_union_find(spark):
-    """Global hash-min label propagation (the scale path) produces the
-    same component labels as the per-group union-find on a random-ish
-    graph whose diameter fits the sweep budget."""
+def _plan_tree(df) -> str:
+    """The operator tree of ``df.explain("formatted")`` (node details cut)."""
+    import io
+    from contextlib import redirect_stdout
+
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        df.explain("formatted")
+    return buf.getvalue().split("(1) ")[0]
+
+
+@pytest.fixture
+def sweep_loop(monkeypatch):
+    """Force label_propagation's distributed sweep loop on a tiny graph
+    (its size-based pick would otherwise take one union-find task)."""
+    from yomitoku_spark.operators import components as CC
+
+    monkeypatch.setattr(CC, "SMALL_GRAPH_EDGES", 0)
+
+
+def _components(edf):
+    """The independent referee: per-group union-find over one group."""
+    from yomitoku_spark.operators.components import connected_components
+
+    return {
+        r.node: r.component
+        for r in connected_components(edf.withColumn("g", F.lit(0)), ["g"]).collect()
+    }
+
+
+def test_label_propagation_equals_union_find(spark, monkeypatch):
+    """Global label propagation produces the same component labels as
+    the per-group union-find referee on a random-ish graph, through both
+    the small-graph union-find pick and the distributed sweep loop."""
     import random
 
-    from yomitoku_spark.operators.components import (
-        connected_components,
-        label_propagation,
-    )
+    from yomitoku_spark.operators import components as CC
 
     rng = random.Random(7)
     edges = []
@@ -472,21 +499,18 @@ def test_label_propagation_equals_union_find(spark):
     edf = spark.createDataFrame(
         [(a, b) for a, b in edges], "src bigint, dst bigint"
     )
-    lp = {r.node: r.label for r in label_propagation(edf, iters=5).collect()}
-    uf = {
-        r.node: r.component
-        for r in connected_components(
-            edf.withColumn("g", F.lit(0)), ["g"]
-        ).collect()
-    }
-    assert lp == uf
+    uf = _components(edf)
+    assert {r.node: r.label for r in CC.label_propagation(edf).collect()} == uf
+    monkeypatch.setattr(CC, "SMALL_GRAPH_EDGES", 0)
+    assert {r.node: r.label for r in CC.label_propagation(edf).collect()} == uf
 
 
-def test_label_propagation_small_graph_shortcut(spark):
-    """The opt-in small-graph strategy (r7 optimization: one union-find
+def test_label_propagation_small_graph_shortcut(spark, monkeypatch):
+    """The size-based strategy pick (r7 optimization: one union-find
     task instead of the sweep loop when the materialized edge list is
-    under the bound) must return EXACTLY the fixpoint labels, and must
-    NOT fire when the bound is 0 (default) or exceeded."""
+    under the bound) must return EXACTLY the fixpoint labels. The
+    returned plan shows the pick: a MapInPandas over the materialized
+    edges for union-find, a bare checkpoint scan for the sweep loop."""
     import random
 
     from yomitoku_spark.operators import components as CC
@@ -496,36 +520,24 @@ def test_label_propagation_small_graph_shortcut(spark):
     edges += [(100 + rng.randint(0, 20), 100 + rng.randint(0, 20)) for _ in range(40)]
     edges += [(500, 501), (502, 502)]
     edf = spark.createDataFrame(edges, "src bigint, dst bigint")
-    fast = {
-        r.node: r.label
-        for r in CC.label_propagation(
-            edf, compress=True, small_graph_edges=CC.SMALL_GRAPH_EDGES
-        ).collect()
-    }
-    assert CC.LAST_SWEEPS == 1  # took the union-find shortcut
-    slow = {
-        r.node: r.label for r in CC.label_propagation(edf, compress=True).collect()
-    }
-    assert CC.LAST_SWEEPS > 1  # took the sweep loop
-    assert fast == slow
-    # bound below the graph size -> sweep loop even when opted in
-    tiny_bound = {
-        r.node: r.label
-        for r in CC.label_propagation(
-            edf, compress=True, small_graph_edges=10
-        ).collect()
-    }
-    assert CC.LAST_SWEEPS > 1
-    assert tiny_bound == slow
+    fast_df = CC.label_propagation(edf)
+    assert "MapInPandas" in _plan_tree(fast_df)  # took the union-find shortcut
+    fast = {r.node: r.label for r in fast_df.collect()}
+    # bound below the graph size -> sweep loop
+    monkeypatch.setattr(CC, "SMALL_GRAPH_EDGES", 10)
+    slow_df = CC.label_propagation(edf)
+    tree = _plan_tree(slow_df)
+    assert "Scan ExistingRDD" in tree and "MapInPandas" not in tree, tree
+    assert fast == {r.node: r.label for r in slow_df.collect()} == _components(edf)
 
 
-def test_label_propagation_fixpoint_long_chain(spark):
-    """Fixpoint mode (iters=None) must converge EXACTLY on a path graph
-    whose diameter (12) exceeds the old fixed sweep count (5) — the
-    chain-shaped duplicate-family hazard at scale. Also checks the
-    non-convergence guard raises instead of silently under-merging."""
-    import pytest as _pytest
-
+def test_label_propagation_fixpoint_long_chain(spark, sweep_loop):
+    """The sweep loop runs to a FIXPOINT: it converges EXACTLY on a path
+    graph whose diameter (12) exceeds its sweep count, and the
+    non-convergence guard raises instead of silently under-merging when
+    the budget is too small. At the boundary, a budget of exactly the
+    productive sweeps the graph needs (3) converges: the quiet
+    confirming sweep comes on top of max_iters."""
     from yomitoku_spark.operators.components import label_propagation
 
     # path 0-1-2-...-12 (diameter 12) plus a disjoint triangle
@@ -533,59 +545,39 @@ def test_label_propagation_fixpoint_long_chain(spark):
     edf = spark.createDataFrame(edges, "src bigint, dst bigint")
     lp = {r.node: r.label for r in label_propagation(edf).collect()}
     assert lp == {**{i: 0 for i in range(13)}, 100: 100, 101: 100, 102: 100}
-    # a fixed sweep budget below the diameter under-merges (old hazard)...
-    lp5 = {r.node: r.label for r in label_propagation(edf, iters=5).collect()}
-    assert lp5[12] != 0
-    # ...and the fixpoint guard refuses rather than returning that state
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        label_propagation(edf, max_iters=3)
-    # boundary: diameter == max_iters converges (the quiet confirming
-    # sweep is allowed on top of max_iters productive ones)
-    lp12 = {r.node: r.label for r in label_propagation(edf, max_iters=12).collect()}
-    assert all(lp12[i] == 0 for i in range(13))
+    assert {r.node: r.label for r in label_propagation(edf, max_iters=3).collect()} == lp
+    with pytest.raises(RuntimeError, match="did not converge"):
+        label_propagation(edf, max_iters=2)
 
 
-def test_label_propagation_pointer_jumping(spark):
-    """compress=True (pointer jumping) must converge in O(log diameter)
-    sweeps: a 40-long chain exceeds max_iters=7 for plain hash-min
-    (raises) but converges under the same budget with compression —
-    the escape hatch for chain-shaped duplicate families whose
-    diameter exceeds any fixed sweep cap at 100 TB. Labels must equal
-    the plain fixpoint result exactly."""
-    import pytest as _pytest
-
+def test_label_propagation_pointer_jumping(spark, sweep_loop):
+    """Pointer jumping lets a 40-long chain converge under max_iters=7
+    (plain hash-min would need 40 sweeps) — the escape hatch for
+    chain-shaped duplicate families whose diameter exceeds any fixed
+    sweep cap at 100 TB. Labels must equal the union-find referee."""
     from yomitoku_spark.operators.components import label_propagation
 
     edges = [(i, i + 1) for i in range(40)] + [(500, 501)]
     edf = spark.createDataFrame(edges, "src bigint, dst bigint")
-    with _pytest.raises(RuntimeError, match="did not converge"):
-        label_propagation(edf, max_iters=7)
-    fast = {
-        r.node: r.label
-        for r in label_propagation(edf, max_iters=7, compress=True).collect()
-    }
+    fast = {r.node: r.label for r in label_propagation(edf, max_iters=7).collect()}
     assert fast == {**{i: 0 for i in range(41)}, 500: 500, 501: 500}
-    slow = {r.node: r.label for r in label_propagation(edf, max_iters=40).collect()}
-    assert fast == slow
+    assert fast == _components(edf)
 
 
-def test_pointer_jumping_sweep_count_logarithmic(spark):
+def test_pointer_jumping_sweep_count_logarithmic(spark, sweep_loop):
     """Pin the O(log diameter) claim on the flagship LP path: a
-    100-long chain needs 100 productive sweeps plain but ≤ 9
-    (≈ log2(100) + confirm) with compress=True — the mode the flagship
-    consumers (training_set_selection, corpus_build_full,
-    doc_near_dup_clusters) now enable (r5 advice item 5)."""
+    100-long chain needs 100 productive sweeps plain but converges
+    under max_iters=8 (≈ log2(100) + confirm) with pointer jumping,
+    while a budget below log2(100) still raises."""
     from yomitoku_spark.operators import components as CC
 
     edf = spark.createDataFrame(
         [(i, i + 1) for i in range(100)], "src bigint, dst bigint"
     )
-    out = {
-        r.node: r.label
-        for r in CC.label_propagation(edf, max_iters=12, compress=True).collect()
-    }
+    out = {r.node: r.label for r in CC.label_propagation(edf, max_iters=8).collect()}
     assert out == {i: 0 for i in range(101)}
-    assert CC.LAST_SWEEPS <= 9
+    with pytest.raises(RuntimeError, match="did not converge"):
+        CC.label_propagation(edf, max_iters=4)
 
 
 def test_index_stage_single_evaluation(spark):
@@ -596,16 +588,7 @@ def test_index_stage_single_evaluation(spark):
     lazy plan silently runs the stage twice over the corpus (the
     round-4 finding — 2x corpus passes at 100 TB). The eager index
     materialization pins it to one."""
-    import io
-    from contextlib import redirect_stdout
-
     from yomitoku_spark.queries import QUERIES
-
-    def tree_of(df):
-        buf = io.StringIO()
-        with redirect_stdout(buf):
-            df.explain("formatted")
-        return buf.getvalue().split("(1) ")[0]
 
     sf = "/root/testdata/sf0.001"
     # index paths: the python stage ran eagerly at build time, so the
@@ -613,19 +596,19 @@ def test_index_stage_single_evaluation(spark):
     # contains ZERO in-plan index stages — the lazy-plan regression
     # this guards against shows up as MapInPandas nodes reappearing
     for name in ("ann_lsh_topk", "ivf_flat_topk", "minhash_lsh_pairs"):
-        t = tree_of(QUERIES[name](spark, sf))
+        t = _plan_tree(QUERIES[name](spark, sf))
         assert t.count("MapInPandas") == 0, (name, t)
         assert "Scan ExistingRDD" in t, (name, t)
     # simhash_near_pairs: 4 band rotations self-joined — without the
     # eager signature materialization the plan held SIXTEEN copies of
     # the per-token-hash python stage (the round-4 perf finding)
     docs = spark.read.parquet(f"{sf}/documents.parquet")
-    t = tree_of(DD.simhash_near_pairs(docs, "doc_id", "text"))
+    t = _plan_tree(DD.simhash_near_pairs(docs, "doc_id", "text"))
     assert t.count("MapInPandas") == 0, t
     assert "Scan ExistingRDD" in t, t
     # corpus_build keeps its single extraction stage in-plan (the fused
     # kernel is an Arrow map, so the stage shows as MapInArrow)
-    t = tree_of(QUERIES["corpus_build"](spark, sf))
+    t = _plan_tree(QUERIES["corpus_build"](spark, sf))
     assert t.count("MapInArrow") == 1, t
     assert t.count("MapInPandas") == 0, t
 

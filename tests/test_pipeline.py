@@ -11,6 +11,7 @@ import pytest
 
 from yomitoku_spark import datagen, oracle
 from yomitoku_spark.plans import pipeline
+from yomitoku_spark.sources.tables import salt_repartition
 
 
 def _oracle_frame(pdf: pd.DataFrame) -> pd.DataFrame:
@@ -106,10 +107,12 @@ def test_spark_generator_matches_local(spark, data):
 
 
 def test_fused_repartition_invariant(spark, data):
-    """Salting/repartitioning must not change results (determinism under
-    arbitrary partitioning — the property the scaling bench relies on)."""
+    """Salting must not change results (determinism under arbitrary
+    partitioning — the property the scaling bench relies on). Covers
+    the turn-grain skew defusal ``jobs/run_extract.py --partitions``
+    runs before the fused stage."""
     tdf, _, want = data
-    got = _result_frame(pipeline.extract(tdf, repartition=13))
+    got = _result_frame(pipeline.extract(salt_repartition(tdf, 13)))
     _assert_equal(got, want)
 
 

@@ -1,7 +1,8 @@
 """get_spark sizes a plain-python session from the host: Spark's own
-local[*] master, shuffle partitions from defaultParallelism, and a driver
-heap below physical memory. Run in a fresh interpreter, since the heap
-only applies when get_spark launches the JVM."""
+local[*] master, shuffle partitions from defaultParallelism (in sessions
+made by newSession() too), and a driver heap below physical memory. Run
+in a fresh interpreter, since the heap only applies when get_spark
+launches the JVM."""
 
 import json
 import os
@@ -20,6 +21,7 @@ sc = s.sparkContext
 print(json.dumps({
     "master": sc.master,
     "shuffle": int(s.conf.get("spark.sql.shuffle.partitions")),
+    "new_session_shuffle": int(s.newSession().conf.get("spark.sql.shuffle.partitions")),
     "parallelism": sc.defaultParallelism,
     "max_heap": sc._jvm.java.lang.Runtime.getRuntime().maxMemory(),
 }))
@@ -38,4 +40,5 @@ def test_plain_python_session_sized_from_host(tmp_path):
     got = json.loads(p.stdout.strip().splitlines()[-1])
     assert got["master"] == "local[*]"
     assert got["shuffle"] == got["parallelism"] == len(os.sched_getaffinity(0))
+    assert got["new_session_shuffle"] == got["shuffle"]
     assert got["max_heap"] < os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")

@@ -1,7 +1,7 @@
 """Dump physical plans for the headline queries → PLANS.md.
 
 The scale review artifact: shows the fused path is Exchange-free, the
-staged path shuffles exactly where designed, filters/projections reach
+staged path has one Arrow block stage and shuffles exactly where designed, filters/projections reach
 the parquet scans (PushedFilters / ReadSchema), joins that should
 broadcast do broadcast, and the whole-stage-codegen spans over the
 column-expression stages.
@@ -33,6 +33,7 @@ def main():
     from yomitoku_spark.plans.pipeline import extract, extract_staged
     from yomitoku_spark.queries import QUERIES
     from yomitoku_spark.session import get_spark
+    from yomitoku_spark.sources.transcripts_corpus import corpus_transcripts
 
     spark = get_spark(app="plans", master="local[8]", shuffle_partitions=8)
     tdf = transcripts_df(spark, n_convs=10, seed=42)
@@ -46,8 +47,17 @@ def main():
     assert p.split("(1) ")[0].count("MapInArrow") == 1, p
     sections.append(("Fused extraction (zero Exchange — embarrassingly parallel)", p))
 
-    sections.append(("Staged extraction (shuffles only at reading-order group + emit agg)",
-                     plan_of(extract_staged(tdf))))
+    # over the parquet-derived corpus, so no generator stage counts: the
+    # blocks come from ONE Arrow stage, and the only shuffle is the emit
+    # aggregation (the turn spine join broadcasts it)
+    p = plan_of(extract_staged(corpus_transcripts(spark, SF)))
+    tree = p.split("(1) ")[0]
+    assert tree.count("MapInArrow") == 1, tree
+    assert tree.count("FlatMapGroupsInPandas") == 0, tree
+    assert tree.count("MapInPandas") == 0, tree
+    assert tree.count("Exchange") <= 2, tree
+    sections.append(("Staged extraction (one MapInArrow block stage; shuffles only at "
+                     "the emit agg)", p))
 
     # predicate pushdown evidence
     l = spark.read.parquet(f"{SF}/lineitem.parquet")

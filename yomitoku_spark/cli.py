@@ -65,15 +65,14 @@ def render(spark, input_path: str, fmt: str, pages: list[int] | None,
     from pyspark.sql import functions as F
 
     from yomitoku_spark.plans.export import export_blocks
-    from yomitoku_spark.plans.pipeline import classify, featurize, order_blocks, segment_blocks
+    from yomitoku_spark.plans.pipeline import blocks
     from yomitoku_spark.sources.tables import read_transcripts
 
     col = FORMATS[fmt]
     tdf = read_transcripts(spark, input_path)
     if pages is not None:
         tdf = tdf.filter(F.col("turn_idx").isin(pages))
-    blocks = classify(featurize(order_blocks(segment_blocks(tdf))))
-    out = export_blocks(blocks, ignore_line_break=ignore_line_break).select(
+    out = export_blocks(blocks(tdf), ignore_line_break=ignore_line_break).select(
         "conv_id", "turn_idx", F.col(col).alias("content")
     )
     if not combine:

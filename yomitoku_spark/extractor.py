@@ -38,13 +38,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from yomitoku_spark.functions.normalize import NORMALIZERS
-from yomitoku_spark.plans.pipeline import (
-    classify,
-    emit,
-    featurize,
-    order_blocks,
-    segment_blocks,
-)
+from yomitoku_spark.plans.pipeline import blocks, emit
 
 
 @dataclass
@@ -161,10 +155,10 @@ def extract_fields(
     """Compile the schema into a per-turn field table:
     (conv_id, turn_idx, <field> ...) with the KV→regex cascade and
     normalizers applied."""
-    blocks = classify(featurize(order_blocks(segment_blocks(transcripts))))
+    blk = blocks(transcripts)
     if result is None:
-        result = emit(blocks, transcripts)
-    kv = kv_items(blocks)
+        result = emit(blk, transcripts)
+    kv = kv_items(blk)
     out = result.select("conv_id", "turn_idx", "extracted_text")
     for spec in schema.fields:
         kvf = _field_from_kv(kv, spec)

@@ -21,14 +21,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-# sweep count of the most recent label_propagation call (diagnostics /
-# tests pinning the O(log diameter) pointer-jumping claim). Plain
-# module global: label_propagation materializes eagerly on the driver
-# thread, so concurrent writers would need driver-side threading the
-# engine never does — read it immediately after the call it describes.
-LAST_SWEEPS: int = 0
-
-
 class UnionFind:
     """Path-compressed union-find over arbitrary hashable ids."""
 
@@ -74,14 +66,14 @@ def connected_components(
     )
 
 
-# opt-in small-graph cutoff for label_propagation: below this many
-# UNDIRECTED edge rows (2x edge count) the whole graph trivially fits
-# one task and a single union-find pass beats >= 3 distributed sweeps
-# (each sweep is 2-3 shuffle jobs; at sf0.1 the LSH graphs are a few
-# hundred edges and the sweep loop alone cost ~2 s of pure scheduling).
-# The SAME size-based strategy pick as broadcast-vs-sort-merge joins:
-# a 100 TB near-dup graph blows past the bound and takes the
-# distributed fixpoint path unchanged.
+# small-graph cutoff for label_propagation: up to this many UNDIRECTED
+# edge rows (2x edge count) the whole graph trivially fits one task and
+# a single union-find pass beats >= 3 distributed sweeps (each sweep is
+# 2-3 shuffle jobs; at sf0.1 the LSH graphs are a few hundred edges and
+# the sweep loop alone cost ~2 s of pure scheduling). The SAME
+# size-based strategy pick as broadcast-vs-sort-merge joins: a 100 TB
+# near-dup graph blows past the bound and takes the distributed
+# fixpoint path unchanged.
 SMALL_GRAPH_EDGES = 1 << 18
 
 
@@ -89,91 +81,63 @@ def label_propagation(
     edges: DataFrame,
     src: str = "src",
     dst: str = "dst",
-    iters: int | None = None,
     max_iters: int = 64,
-    compress: bool = False,
-    small_graph_edges: int = 0,
 ) -> DataFrame:
     """GLOBAL weakly-connected components by iterative min-label
-    (hash-min) propagation — the scale path for corpus-wide graphs.
+    (hash-min) propagation with pointer jumping — the scale path for
+    corpus-wide graphs.
 
-    Each sweep every node takes the minimum of its own label and its
-    direct neighbors' labels: one equi-join + one min aggregation (two
-    shuffles), fully distributed, no single-task state. Hash-min needs
-    ``diameter`` sweeps to converge, so by default (``iters=None``) the
-    loop runs to a FIXPOINT: each sweep's result is eagerly
-    ``localCheckpoint``-ed (truncating lineage so plans stay bounded)
-    and carries a ``_changed`` flag; the sweep loop stops the first
-    time no label changed. The convergence probe is a ``limit(1)``
-    scan of the already-materialized checkpoint — near-free. A graph
-    whose diameter exceeds ``max_iters`` (the loop allows max_iters
-    productive sweeps plus the quiet confirming one) raises a
-    ``RuntimeError`` rather than silently returning under-merged
-    labels — the round-3 hazard where chain-shaped duplicate families
-    at 100 TB exceeded a fixed sweep count and
+    The undirected edge list is materialized once. When it holds at
+    most ``2 * SMALL_GRAPH_EDGES`` rows, one union-find task labels the
+    graph (a ``MapInPandas`` over the materialized edges). Labels are
+    IDENTICAL to the fixpoint's: union-by-smaller-root makes every root
+    the component minimum.
+
+    Larger graphs run distributed sweeps. Each sweep every node takes
+    the minimum of its own label and its direct neighbors' labels (one
+    equi-join + one min aggregation), then POINTER JUMPING: each node
+    also takes its label's label (one more self-join), so convergence
+    needs O(log diameter) sweeps instead of O(diameter) — a 10⁶-long
+    chain of chained near-duplicates converges in ~20 sweeps. Each
+    sweep's result is eagerly ``localCheckpoint``-ed (lineage stays
+    bounded; the returned plan is a ``Scan ExistingRDD``) and carries a
+    ``_changed`` flag; the loop stops the first time no label changed.
+    A graph that has not converged after ``max_iters`` productive sweeps
+    plus the quiet confirming one raises a ``RuntimeError`` rather than
+    silently returning under-merged labels — the round-3 hazard where
+    chain-shaped duplicate families exceeded a fixed sweep count and
     ``training_set_selection`` kept duplicates.
 
-    ``compress=True`` adds POINTER JUMPING (shortcutting) to every
-    sweep: after the neighbor-min step each node also takes its
-    label's label (one extra self-join), so convergence needs
-    O(log diameter) sweeps instead of O(diameter) — a 10⁶-long chain
-    of chained near-duplicates converges in ~20 sweeps where plain
-    hash-min would need 10⁶. Default off: the composed registry
-    queries run over star-capped LSH graphs whose diameter is tiny,
-    and the plain sweep is one join cheaper there.
-
-    Passing an explicit ``iters`` runs exactly that many sweeps with
-    no convergence probe (for tests / known-diameter graphs).
-
     Returns (node, label) for every node that appears in an edge.
-    The module-level ``LAST_SWEEPS`` records how many sweeps the last
-    call ran (including the quiet confirming one) so tests can pin the
-    O(log diameter) claim on chain topologies.
     """
-    global LAST_SWEEPS
     und = edges.select(F.col(src).alias("a"), F.col(dst).alias("b")).unionByName(
         edges.select(F.col(dst).alias("a"), F.col(src).alias("b"))
     )
-    fixed = iters is not None
-    if not fixed:
-        # the edge list is the loop invariant — materialize it ONCE.
-        # Left lazy, every eager sweep re-runs the whole upstream
-        # candidate-generation pipeline (e.g. MinHash-LSH shingling),
-        # which multiplied the composed-query wall by ~1.8x at sf0.1.
-        und = und.localCheckpoint(eager=True)
-        if small_graph_edges and und.count() <= 2 * small_graph_edges:
-            # opt-in size-based strategy pick (see SMALL_GRAPH_EDGES):
-            # the materialized edge list fits one task, so a single
-            # union-find pass replaces the whole sweep loop. Labels are
-            # IDENTICAL — union-by-smaller-root makes every root the
-            # component minimum, exactly the hash-min fixpoint.
-            LAST_SWEEPS = 1
-            id_type = dict(und.dtypes)["a"]
+    # the edge list is the loop invariant — materialize it ONCE. Left
+    # lazy, every eager sweep re-runs the whole upstream candidate-
+    # generation pipeline (e.g. MinHash-LSH shingling), which multiplied
+    # the composed-query wall by ~1.8x at sf0.1.
+    und = und.localCheckpoint(eager=True)
+    if und.count() <= 2 * SMALL_GRAPH_EDGES:
+        id_type = dict(und.dtypes)["a"]
 
-            def all_edges(batches):
-                uf = UnionFind()
-                for pdf in batches:
-                    for a, b in zip(pdf["a"], pdf["b"]):
-                        uf.union(a, b)
-                nodes = sorted(uf.parent)
-                yield pd.DataFrame(
-                    {"node": nodes, "label": [uf.find(n) for n in nodes]}
-                )
+        def all_edges(batches):
+            uf = UnionFind()
+            for pdf in batches:
+                for a, b in zip(pdf["a"], pdf["b"]):
+                    uf.union(a, b)
+            nodes = sorted(uf.parent)
+            yield pd.DataFrame({"node": nodes, "label": [uf.find(n) for n in nodes]})
 
-            return und.repartition(1).mapInPandas(
-                all_edges, schema=f"node {id_type}, label {id_type}"
-            )
+        return und.repartition(1).mapInPandas(
+            all_edges, schema=f"node {id_type}, label {id_type}"
+        )
     labels = und.select(F.col("a").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
-    # a diameter-d graph needs d productive sweeps plus ONE quiet
-    # confirming sweep: run max_iters + 1 so max_iters bounds the
-    # supported diameter, not the sweep count
-    sweeps = iters if fixed else max_iters + 1
-    converged = fixed
-    LAST_SWEEPS = 0
-    for _ in range(sweeps):
-        LAST_SWEEPS += 1
+    # a graph needing d productive sweeps converges on sweep d + 1 (the
+    # quiet confirming one): max_iters bounds the productive sweeps
+    for _ in range(max_iters + 1):
         nbr_min = (
             und.join(
                 labels.select(
@@ -185,53 +149,38 @@ def label_propagation(
             .agg(F.min("blabel").alias("nmin"))
             .select(F.col("a").alias("node"), "nmin")
         )
+        # materialize the neighbor-min step FIRST: the pointer-jumping
+        # self-join consumes it twice, and left lazy each sweep would
+        # evaluate the join/agg subtree twice (r5 advice)
         stepped = labels.join(nbr_min, "node", "left").select(
             "node",
             F.least(F.col("label"), F.coalesce("nmin", F.col("label"))).alias(
                 "label"
             ),
             (F.coalesce("nmin", F.col("label")) < F.col("label")).alias("_changed"),
+        ).localCheckpoint(eager=True)
+        # pointer jumping: label <- min(label, label(label)). Every label
+        # is a node id (init label=node; mins preserve that), so the
+        # lookup is total and monotone toward the component minimum.
+        l2 = stepped.select(F.col("node").alias("__ln"), F.col("label").alias("__ll"))
+        stepped = (
+            stepped.join(l2, stepped["label"] == l2["__ln"], "left")
+            .select(
+                "node",
+                F.least(F.col("label"), F.coalesce("__ll", F.col("label"))).alias(
+                    "label"
+                ),
+                (
+                    F.col("_changed")
+                    | (F.coalesce("__ll", F.col("label")) < F.col("label"))
+                ).alias("_changed"),
+            )
+            .localCheckpoint(eager=True)
         )
-        if compress:
-            # pointer jumping: label <- min(label, label(label)). Every
-            # label is a node id (init label=node; mins preserve that),
-            # so the lookup is total and monotone toward the component
-            # minimum — the standard O(log d) shortcutting step.
-            # Materialize the neighbor-min step FIRST: the self-join
-            # consumes `stepped` twice, and left lazy each sweep would
-            # evaluate the join/agg subtree twice before the sweep's
-            # own checkpoint (r5 advice) — doubling the cost the
-            # compression amortizes.
-            stepped = stepped.localCheckpoint(eager=True)
-            l2 = stepped.select(
-                F.col("node").alias("__ln"), F.col("label").alias("__ll")
-            )
-            stepped = (
-                stepped.join(l2, stepped["label"] == l2["__ln"], "left")
-                .select(
-                    "node",
-                    F.least(
-                        F.col("label"), F.coalesce("__ll", F.col("label"))
-                    ).alias("label"),
-                    (
-                        F.col("_changed")
-                        | (F.coalesce("__ll", F.col("label")) < F.col("label"))
-                    ).alias("_changed"),
-                )
-            )
-        if fixed:
-            labels = stepped.drop("_changed")
-            continue
-        stepped = stepped.localCheckpoint(eager=True)
         labels = stepped.drop("_changed")
         if stepped.filter("_changed").limit(1).count() == 0:
-            converged = True
-            break
-    if not converged:
-        raise RuntimeError(
-            f"label_propagation did not converge within {max_iters} sweeps; "
-            "the graph has a component with diameter > max_iters — raise "
-            "max_iters, pass compress=True (O(log diameter) pointer "
-            "jumping), or pre-contract the graph"
-        )
-    return labels
+            return labels
+    raise RuntimeError(
+        f"label_propagation did not converge within {max_iters} sweeps; "
+        "raise max_iters or pre-contract the graph"
+    )

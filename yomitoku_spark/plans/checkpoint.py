@@ -52,11 +52,16 @@ def _result_dir(output_dir: str) -> str:
 
 
 def done_buckets(spark: SparkSession, output_dir: str) -> set[int]:
+    """Buckets with a done row. A missing state directory means nothing
+    is done; any other read error propagates, since treating an
+    unreadable state as empty would redo committed buckets and append
+    duplicate state rows."""
     sd = _state_dir(output_dir)
-    try:
-        state = spark.read.parquet(sd)
-    except Exception:
+    path = spark._jvm.org.apache.hadoop.fs.Path(sd)  # the path's own FS, so any URI works
+    if not path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(path):
         return set()
+    # with the schema: a state dir holding no committed file reads as empty
+    state = spark.read.schema(STATE_SCHEMA).parquet(sd)
     return {
         r.bucket for r in state.filter(F.col("status") == "done").select("bucket").distinct().collect()
     }

@@ -1,12 +1,16 @@
 """The extraction pipeline — fused fast path + staged inspectable path.
 
 Both implement the spec in :mod:`yomitoku_spark.spec` and must match the
-pure-Python oracle byte-for-byte per ``(conv_id, turn_idx)``.
+pure-Python oracle byte-for-byte per ``(conv_id, turn_idx)``. Both get
+their blocks from one function, :func:`_ordered_blocks`: per-turn
+``segment_turn``, block columns built once per Arrow batch, then each
+block's emit order — batch-wide ``layout_order`` for layout turns
+(reference: reading_order.py:14-223), document order for the rest.
 
 **Fused path** (:func:`extract`): ONE ``mapInArrow`` stage over the
 transcripts scan — segment, featurize, classify, reading-order, emit all
-inside a single Arrow batch (:func:`extract_batch`: per-turn
-segmentation, then batch-wide numpy keep/order and Arrow assembly).
+inside a single Arrow batch (:func:`extract_batch`: the ordered blocks,
+then numpy keep rule and Arrow assembly).
 Zero shuffles; embarrassingly parallel over turns. This is the plan you
 want at 10^12 turns: throughput scales
 linearly with executors because no stage exchanges data (the reference's
@@ -16,10 +20,9 @@ across pages/turns instead of within one).
 **Staged path** (:func:`extract_staged`): the same semantics decomposed
 into Catalyst-visible stages so features/decisions are queryable:
 
-- ``segment_blocks``  — mapInPandas payload → long-form blocks rows
-- ``order_blocks``    — grouped pandas UDF: layout turns get the same
-  batch-wide reading order as the fused path (reference:
-  reading_order.py:14-223)
+- :func:`blocks`      — ONE ``mapInArrow`` block stage (payload →
+  long-form block rows with their ``order``), then ``featurize`` and
+  ``classify``; the queryable intermediate every block consumer reads
 - ``featurize``       — pure column expressions (link density etc. —
   jusText/Readability-style block features; whole-stage codegen)
 - ``classify``        — pure column expressions (keep/drop; the analog
@@ -34,7 +37,6 @@ from __future__ import annotations
 from itertools import chain
 
 import numpy as np
-import pandas as pd
 import pyarrow as pa
 import pyarrow.compute as pc
 from pyspark.sql import DataFrame
@@ -94,7 +96,7 @@ def _keep_mask(c: dict) -> np.ndarray:
 
 
 # ------------------------------------------------------------------
-# fused path
+# ordered blocks — the one block stage both paths run per Arrow batch
 # ------------------------------------------------------------------
 
 _NUMERIC = {
@@ -103,18 +105,16 @@ _NUMERIC = {
     "boiler": bool, "meta": bool, "vertical": bool,
     "x1": np.int64, "y1": np.int64, "x2": np.int64, "y2": np.int64,
 }
-_SPAN_FIELDS = [
-    pa.field("start", pa.int32()), pa.field("end", pa.int32()), pa.field("kind", pa.string())
-]
 
 
-def extract_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
-    """One Arrow batch of turns → one batch of results (RESULT_SCHEMA).
+def _ordered_blocks(rb: pa.RecordBatch):
+    """Segment every turn of ``rb`` and give each block its emit order.
 
-    ``segment_turn`` runs per turn; everything after it is batch-wide:
-    block columns built once, keep rule and reading order in numpy, the
-    kept blocks put in (turn, order) by one ``lexsort``, and the output
-    assembled as Arrow arrays over per-turn offsets."""
+    Returns the per-turn block counts, the raw per-field block columns
+    ``cols``, and the numpy columns ``c``: the ``_NUMERIC`` fields plus
+    ``kind``, ``source``, ``turn`` (the block's row in ``rb``) and
+    ``order`` — ``layout_order`` over the batch's layout turns,
+    ``block_id`` for every other turn."""
     n = rb.num_rows
     per_turn = [
         segment_turn(tx, tl)
@@ -126,14 +126,53 @@ def extract_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
     c = {f: np.asarray(cols[f], dtype=dt) for f, dt in _NUMERIC.items()}
     c["kind"] = np.asarray(cols["kind"], dtype=object)
     c["source"] = np.asarray(cols["source"], dtype=object)
-    turn = np.repeat(np.arange(n), counts)
+    c["turn"] = turn = np.repeat(np.arange(n), counts)
 
-    order = c["block_id"].copy()
+    c["order"] = order = c["block_id"].copy()
     lay = c["source"] == "layout"
     if lay.any():
         boxes = np.stack([c["x1"], c["y1"], c["x2"], c["y2"]], axis=1)[lay]
         roles = np.asarray(cols["role"], dtype=object)[lay]
         order[lay] = layout_order(turn[lay], roles, c["vertical"][lay], boxes)
+    return counts, cols, c
+
+
+def _arrow_stage(kernel):
+    """The ``mapInArrow`` function that applies ``kernel`` to every batch."""
+
+    def run(batches):
+        install_zip_stat_shim()  # runs on the Python worker, once per process
+        for rb in batches:
+            yield kernel(rb)
+
+    return run
+
+
+def _turns(transcripts: DataFrame, *extra) -> DataFrame:
+    return transcripts.select(
+        F.col("conv_id").cast("string"), F.col("turn_idx").cast("int"), "text", "tool", *extra
+    )
+
+
+# ------------------------------------------------------------------
+# fused path
+# ------------------------------------------------------------------
+
+_SPAN_FIELDS = [
+    pa.field("start", pa.int32()), pa.field("end", pa.int32()), pa.field("kind", pa.string())
+]
+
+
+def extract_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
+    """One Arrow batch of turns → one batch of results (RESULT_SCHEMA).
+
+    The ordered blocks come from :func:`_ordered_blocks`; the keep rule
+    runs in numpy, the kept blocks are put in (turn, order) by one
+    ``lexsort``, and the output is assembled as Arrow arrays over
+    per-turn offsets."""
+    n = rb.num_rows
+    counts, cols, c = _ordered_blocks(rb)
+    turn, order = c["turn"], c["order"]
     kept = np.flatnonzero(_keep_mask(c))
     kept = kept[np.lexsort((order[kept], turn[kept]))]
     n_kept = np.bincount(turn[kept], minlength=n)
@@ -161,83 +200,46 @@ def extract_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
     )
 
 
-def _extract_arrow(batches):
-    install_zip_stat_shim()  # runs on the Python worker, once per process
-    for rb in batches:
-        yield extract_batch(rb)
-
-
-def extract(transcripts: DataFrame, repartition: int | None = None) -> DataFrame:
+def extract(transcripts: DataFrame) -> DataFrame:
     """Fused extraction: transcripts → result, one Arrow stage, no shuffle.
 
-    ``repartition`` optionally round-robin rebalances the scan first —
-    the unit of work is the TURN, so even a single hot conversation
-    (long-conversation skew, the north rule's case) spreads evenly.
-    """
-    df = transcripts.select(
-        F.col("conv_id").cast("string"),
-        F.col("turn_idx").cast("int"),
-        "text",
-        "tool",
-        F.col("ts").cast("timestamp"),
+    The unit of work is the TURN: rebalance a skewed scan first with
+    :func:`yomitoku_spark.sources.tables.salt_repartition`."""
+    return _turns(transcripts, F.col("ts").cast("timestamp")).mapInArrow(
+        _arrow_stage(extract_batch), schema=RESULT_SCHEMA
     )
-    if repartition:
-        df = df.repartition(repartition)
-    return df.mapInArrow(_extract_arrow, schema=RESULT_SCHEMA)
 
 
 # ------------------------------------------------------------------
 # staged path
 # ------------------------------------------------------------------
 
-
-def segment_blocks(transcripts: DataFrame) -> DataFrame:
-    """S2: payload → long-form raw blocks (one row per block)."""
-
-    def seg(batches):
-        for pdf in batches:
-            rows, convs, turns = [], [], []
-            for cid, ti, tx, tl in zip(
-                pdf["conv_id"], pdf["turn_idx"], pdf["text"].tolist(), pdf["tool"].tolist()
-            ):
-                blks = segment_turn(tx, tl)
-                rows.extend(blks)
-                convs.extend([cid] * len(blks))
-                turns.extend([ti] * len(blks))
-            bdf = pd.DataFrame(rows, columns=BLOCK_FIELDS)
-            bdf.insert(0, "turn_idx", pd.Series(turns, dtype="int32"))
-            bdf.insert(0, "conv_id", convs)
-            yield bdf
-
-    return transcripts.select("conv_id", "turn_idx", "text", "tool").mapInPandas(
-        seg, schema=BLOCKS_SCHEMA
-    )
+_BLOCK_COLUMNS = ["conv_id", "turn_idx", *BLOCK_FIELDS, "order"]
 
 
-def order_blocks(blocks: DataFrame) -> DataFrame:
-    """S5: reading-order assignment (grouped pandas UDF over the tiny
-    per-turn group — reference reading_order.py:14-223). Layout turns
-    get :func:`layout_order` on their one-turn group, the function the
-    fused path runs batch-wide; all other payload classes keep document
-    order. ONE grouped pass over all blocks — splitting layout/rest
-    into two branches would re-run the upstream Python segment stage
-    once per branch (no common-subplan reuse across a mapInPandas)."""
-
-    def og(pdf: pd.DataFrame) -> pd.DataFrame:
-        if len(pdf) and pdf["source"].iat[0] == "layout":
-            order = layout_order(
-                np.zeros(len(pdf), dtype=np.int64),
-                pdf["role"].to_numpy(dtype=object),
-                pdf["vertical"].to_numpy(dtype=bool),
-                pdf[["x1", "y1", "x2", "y2"]].to_numpy(dtype=np.int64),
-            )
+def _blocks_batch(rb: pa.RecordBatch) -> pa.RecordBatch:
+    """One Arrow batch of turns → its block rows (``BLOCKS_SCHEMA`` +
+    ``order int``); ``conv_id``/``turn_idx`` taken by each block's turn."""
+    _, cols, c = _ordered_blocks(rb)
+    turn = pa.array(c["turn"])
+    arrays = [rb.column("conv_id").take(turn), rb.column("turn_idx").take(turn)]
+    for f in _BLOCK_COLUMNS[2:]:
+        v = c.get(f)
+        if v is None or v.dtype == object:
+            arrays.append(pa.array(cols[f], pa.string()))
         else:
-            order = pdf["block_id"].to_numpy()
-        return pdf.assign(order=order.astype("int32"))
+            arrays.append(pa.array(v, pa.bool_() if v.dtype == bool else pa.int32()))
+    return pa.RecordBatch.from_arrays(arrays, names=_BLOCK_COLUMNS)
 
-    return blocks.groupBy("conv_id", "turn_idx").applyInPandas(
-        og, schema=BLOCKS_SCHEMA + ", order int"
+
+def blocks(transcripts: DataFrame) -> DataFrame:
+    """S2–S5: transcripts → one row per block with its emit ``order``,
+    features and keep decision (``BLOCKS_SCHEMA`` + order + featurize +
+    classify columns). One ``mapInArrow`` stage, no shuffle."""
+    ordered = _turns(transcripts).mapInArrow(
+        _arrow_stage(_blocks_batch), schema=BLOCKS_SCHEMA + ", order int"
     )
+    return classify(featurize(ordered))
 
 
 def featurize(blocks: DataFrame) -> DataFrame:
@@ -330,5 +332,4 @@ def emit(blocks: DataFrame, transcripts: DataFrame) -> DataFrame:
 
 
 def extract_staged(transcripts: DataFrame) -> DataFrame:
-    blocks = classify(featurize(order_blocks(segment_blocks(transcripts))))
-    return emit(blocks, transcripts)
+    return emit(blocks(transcripts), transcripts)

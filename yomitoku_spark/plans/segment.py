@@ -1,9 +1,9 @@
 """S2 segmenter: one turn payload → raw block rows (engine side).
 
 Produces RAW blocks only — no keep/drop decisions, no ordering: those
-are separate plan stages (featurize/classify are Catalyst column
-expressions in :mod:`yomitoku_spark.plans.pipeline`; reading order is a
-grouped pandas UDF). This mirrors the reference's separation of
+are separate steps in :mod:`yomitoku_spark.plans.pipeline` (reading
+order is numpy over the batch's block columns; featurize/classify are
+Catalyst column expressions on the staged path). This mirrors the reference's separation of
 detection (layout_parser.py) from filtering (document_analyzer.py:552-568)
 from ordering (reading_order.py).
 

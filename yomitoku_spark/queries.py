@@ -2086,15 +2086,7 @@ def training_set_selection(spark, sf_dir):
         max_bucket_size=_LSH_CAP,
     )
     comp = CC.label_propagation(
-        # compress=True: pointer jumping keeps the sweep count
-        # O(log diameter) even on chain-shaped duplicate families
-        # (star-capped LSH graphs are usually shallow, but a 100 TB
-        # corpus can chain near-dups arbitrarily long — r5 advice)
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        compress=True,
-        # size-based strategy pick: tiny materialized graphs run one
-        # union-find task instead of >= 3 sweep jobs (identical labels)
-        small_graph_edges=CC.SMALL_GRAPH_EDGES,
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     ).withColumnRenamed("node", "doc_id")
     out = (
         stats.join(exact, "doc_id", "left")
@@ -2203,15 +2195,7 @@ def doc_near_dup_clusters(spark, sf_dir):
         max_bucket_size=_LSH_CAP,
     )
     comp = CC.label_propagation(
-        # compress=True: pointer jumping keeps the sweep count
-        # O(log diameter) even on chain-shaped duplicate families
-        # (star-capped LSH graphs are usually shallow, but a 100 TB
-        # corpus can chain near-dups arbitrarily long — r5 advice)
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        compress=True,
-        # size-based strategy pick: tiny materialized graphs run one
-        # union-find task instead of >= 3 sweep jobs (identical labels)
-        small_graph_edges=CC.SMALL_GRAPH_EDGES,
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     )
     return (
         d.select("doc_id")
@@ -2562,13 +2546,10 @@ def export_formats(spark, sf_dir):
     / export_json.py:61-97) over the parquet-derived transcript corpus —
     every rendered format is reproduced by the DuckDB referee."""
     from yomitoku_spark.plans.export import export_blocks
-    from yomitoku_spark.plans.pipeline import classify, featurize, order_blocks, segment_blocks
+    from yomitoku_spark.plans.pipeline import blocks
     from yomitoku_spark.sources.transcripts_corpus import corpus_transcripts
 
-    blocks = classify(
-        featurize(order_blocks(segment_blocks(corpus_transcripts(spark, sf_dir))))
-    )
-    return export_blocks(blocks)
+    return export_blocks(blocks(corpus_transcripts(spark, sf_dir)))
 
 
 def extract_fields_kv(spark, sf_dir):
@@ -3061,13 +3042,10 @@ def segment_features(spark, sf_dir):
     corpus transcripts — kinds, content lengths, link densities
     (integer permille), keep decisions, and block order all recomputed
     by the DuckDB referee."""
-    from yomitoku_spark.plans.pipeline import classify, featurize, order_blocks, segment_blocks
+    from yomitoku_spark.plans.pipeline import blocks
     from yomitoku_spark.sources.transcripts_corpus import corpus_transcripts
 
-    blocks = classify(
-        featurize(order_blocks(segment_blocks(corpus_transcripts(spark, sf_dir))))
-    )
-    return blocks.select(
+    return blocks(corpus_transcripts(spark, sf_dir)).select(
         "conv_id",
         "turn_idx",
         "block_id",
@@ -3427,15 +3405,7 @@ def corpus_build_full(spark, sf_dir):
         max_bucket_size=_LSH_CAP,
     )
     comp = CC.label_propagation(
-        # compress=True: pointer jumping keeps the sweep count
-        # O(log diameter) even on chain-shaped duplicate families
-        # (star-capped LSH graphs are usually shallow, but a 100 TB
-        # corpus can chain near-dups arbitrarily long — r5 advice)
-        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst")),
-        compress=True,
-        # size-based strategy pick: tiny materialized graphs run one
-        # union-find task instead of >= 3 sweep jobs (identical labels)
-        small_graph_edges=CC.SMALL_GRAPH_EDGES,
+        pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
     ).withColumnRenamed("node", "turn_key")
     j = stats.join(comp, "turn_key", "left")
     neardup = F.coalesce("label", F.col("turn_key")) == F.col("turn_key")

@@ -75,7 +75,12 @@ def get_spark(
         conf["spark.master"] = master
     spark = SparkSession.builder.appName(app).config(map=conf).getOrCreate()
     if SHUFFLE_PARTITIONS not in conf and SHUFFLE_PARTITIONS not in launched:
-        spark.conf.set(SHUFFLE_PARTITIONS, str(spark.sparkContext.defaultParallelism))
+        sc = spark.sparkContext
+        n = str(sc.defaultParallelism)
+        # on the live context conf too: newSession() starts from it, not
+        # from this session's settings
+        sc._conf.set(SHUFFLE_PARTITIONS, n)
+        spark.conf.set(SHUFFLE_PARTITIONS, n)
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
