@@ -75,6 +75,17 @@ def test_empty_buckets_get_zero_rows(spark, tdf, tmp_path):
     assert CP.read_result(spark, out).count() == 5
 
 
+def test_empty_input_reads_back_empty(spark, tdf, tmp_path):
+    """An input with no rows commits no result file: every bucket still
+    gets one done row, and the result reads back as 0 rows."""
+    out = str(tmp_path / "out_empty")
+    assert CP.run_resumable(tdf.limit(0), out, n_buckets=4, wave_size=4) == 4
+    state = CP.read_state(spark, out).collect()
+    assert sorted(r.bucket for r in state) == [0, 1, 2, 3]
+    assert all(r.status == "done" and r.n_turns == 0 for r in state)
+    assert CP.read_result(spark, out).count() == 0
+
+
 def test_bigint_turn_idx_buckets_consistently(spark, tdf, tmp_path):
     """xxhash64 is type-sensitive: a caller passing bigint turn_idx must
     still land every row in the bucket that selected it (the input-side

@@ -134,54 +134,42 @@ def test_derive_grid_headers(spark):
     assert merged[(3, 0)] == ("S", "stray")
 
 
-def test_derive_grid_headers_memo_no_cache_growth(spark):
-    """Repeated derive_grid_headers calls on a semantically equal input
-    must reuse the memoized tuple — exactly ONE session-lived cache
-    entry, not one per call (round-3 advice: three registry queries
-    each cached its own copy of `units`)."""
+def test_derive_grid_headers_pins_units_per_call(spark):
+    """``units`` lives for one call: derive_grid_headers registers
+    nothing with the CacheManager, and a second call on an equal plan
+    after ``clearCache()`` pins its own ``units`` instead of returning
+    a result whose cache was dropped."""
     from yomitoku_spark.operators import grid_headers as GH
-    from yomitoku_spark.sources.layout import form_table_cells
 
-    GH.clear_derive_memo()
-    cells = form_table_cells(spark, "/root/testdata/sf0.001")
-    r1 = GH.derive_grid_headers(cells)
-    r1[0].count()  # materialize: the lazy cache() registers its RDD here
-    n_after_first = spark.sparkContext._jsc.getPersistentRDDs().size()
-    assert n_after_first >= 1
-    # a FRESH but semantically equal plan hits the memo
-    r2 = GH.derive_grid_headers(form_table_cells(spark, "/root/testdata/sf0.001"))
-    assert r2 is r1
-    r2[1].count()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_after_first
-    assert len(GH._DERIVE_MEMO) == 1
-    # the lifecycle hook releases the cache
-    GH.clear_derive_memo()
-    assert spark.sparkContext._jsc.getPersistentRDDs().size() == n_after_first - 1
+    roles = ["header", "header", "cell", "cell"]
+    boxes = _boxes_from_spec([(0, 0, 1, 1), (0, 1, 1, 1), (1, 0, 1, 1), (1, 1, 1, 1)])
+    rows = [
+        (0, "g", f"C{i}", role, *map(int, box))
+        for i, (role, box) in enumerate(zip(roles, boxes))
+    ]
+    schema = (
+        "doc_id bigint, grid_id string, cell_id string, role string, "
+        "x1 int, y1 int, x2 int, y2 int"
+    )
 
+    def pinned():
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
-def test_derive_grid_headers_memo_eviction(spark):
-    """The memo is CAPPED: distinct input plans beyond _DERIVE_MEMO_MAX
-    evict (and unpersist) the oldest entry, so a long-lived session
-    feeding many plans cannot pin unbounded cached RDDs (r4 advice)."""
-    from pyspark.sql import functions as F
+    cache_manager = spark._jsparkSession.sharedState().cacheManager()
+    spark.catalog.clearCache()
+    r1 = GH.derive_grid_headers(spark.createDataFrame(rows, schema))
+    want = sorted((r.col, r.hdr_pos, r.cell_id) for r in r1[0].collect())
+    assert want == [(0, 0, "C0"), (1, 0, "C1")]
+    assert cache_manager.isEmpty()
 
-    from yomitoku_spark.operators import grid_headers as GH
-    from yomitoku_spark.sources.layout import form_table_cells
-
-    GH.clear_derive_memo()
-    old_max = GH._DERIVE_MEMO_MAX
-    GH._DERIVE_MEMO_MAX = 2
-    try:
-        base = form_table_cells(spark, "/root/testdata/sf0.001")
-        plans = [base.filter(F.col("doc_id") >= i) for i in range(3)]
-        results = [GH.derive_grid_headers(p) for p in plans]
-        assert len(GH._DERIVE_MEMO) == 2
-        # oldest (plans[0]) evicted: a repeat call recomputes, newest hits
-        assert GH.derive_grid_headers(plans[2]) is results[2]
-        assert GH.derive_grid_headers(plans[0]) is not results[0]
-    finally:
-        GH._DERIVE_MEMO_MAX = old_max
-        GH.clear_derive_memo()
+    spark.catalog.clearCache()
+    before = pinned()
+    r2 = GH.derive_grid_headers(spark.createDataFrame(rows, schema))
+    got = sorted((r.col, r.hdr_pos, r.cell_id) for r in r2[0].collect())
+    assert r2 is not r1
+    assert pinned() - before, "second call must pin its own units"
+    assert cache_manager.isEmpty()
+    assert got == want
 
 
 @settings(max_examples=25, deadline=None)

@@ -136,14 +136,6 @@ def test_quantized_topk_matches_sql_semantics(spark, emb):
         assert dots[qi, ci] == r.dot_q
 
 
-def test_lsh_ann_returns_bucket_neighbors(spark, emb):
-    got = SIM.lsh_ann_topk(emb.limit(100), k=3, n_planes=4)
-    rows = got.collect()
-    assert len(rows) > 0
-    assert all(r.query_id != r.corpus_id for r in rows)
-    assert all(-1.0 <= r.sim <= 1.0 for r in rows)
-
-
 # ------------------------------------------------------------ textstats
 
 
@@ -286,24 +278,6 @@ def test_dedup_contained_auto_switch(spark):
             assert auto == theta, (keep, len(auto), len(theta))
     n_kept = len(SP.dedup_contained(df_sparse, "id", blocked_cell="auto").collect())
     assert n_kept < df_sparse.count()  # containments actually removed
-
-
-def test_lsh_ann_recall_vs_brute_force(spark, emb):
-    """Recall@3 of the LSH-ANN path against exact brute force — the
-    documented quality/speed trade of the approximate scale path."""
-    sub = emb.limit(200)
-    exact = {}
-    for r in SIM.brute_force_topk(sub, sub, k=3).collect():
-        exact.setdefault(r.query_id, set()).add(r.corpus_id)
-    approx = {}
-    for r in SIM.lsh_ann_topk(sub, k=3, n_planes=4, n_tables=6).collect():
-        approx.setdefault(r.query_id, set()).add(r.corpus_id)
-    hits = sum(len(exact[q] & approx.get(q, set())) for q in exact)
-    total = sum(len(v) for v in exact.values())
-    recall = hits / total
-    # 6 tables × 4 hyperplanes over 200 vectors: recall well above
-    # chance (3/199 ≈ 0.015) and above the single-table ~0.15 level
-    assert recall > 0.5, recall
 
 
 def test_multiprobe_lifts_recall(spark, emb):
@@ -842,6 +816,16 @@ class TestFanOut:
         base = docs.select("doc_id").orderBy("doc_id").collect()
         fanned = fan_out(docs.select("doc_id")).orderBy("doc_id").collect()
         assert base == fanned
+
+    def test_kmv_sample_tokens_skips_fan_out(self, spark):
+        """The KMV build's tokenize map feeds map-side-combined
+        aggregates; a round-robin fan-out in front of them measured
+        neutral, so the plan carries none."""
+        from yomitoku_spark.queries import QUERIES
+
+        df = QUERIES["kmv_sample_tokens"](spark, SF)
+        plan = df._jdf.queryExecution().executedPlan().toString()
+        assert "RoundRobinPartitioning" not in plan, plan
 
 
 class TestAssignProbesQv:

@@ -11,6 +11,7 @@ from __future__ import annotations
 
 import io
 import os
+import re
 import sys
 from contextlib import redirect_stdout
 
@@ -24,6 +25,24 @@ def plan_of(df) -> str:
     with redirect_stdout(buf):
         df.explain("formatted")
     return buf.getvalue()
+
+
+# session-global counters the plan text carries: expression ids
+# (``id#12L``), plan ids, RDD ids and lambda variable names
+_GLOBAL_IDS = re.compile(r"(#|plan_id=|RDD\[|lambda x_)(\d+)")
+
+
+def renumber(plan: str) -> str:
+    """Number each kind of session-global id by its first appearance in
+    this plan, so a section's text only changes when its own plan does,
+    not when another query runs earlier in the session."""
+    seen: dict[str, dict[str, int]] = {}
+
+    def sub(m: re.Match) -> str:
+        ids = seen.setdefault(m[1], {})
+        return m[1] + str(ids.setdefault(m[2], len(ids)))
+
+    return _GLOBAL_IDS.sub(sub, plan)
 
 
 def main():
@@ -214,7 +233,7 @@ def main():
                 "Generated by tools/explain_plans.py — asserts the fused path is\n"
                 "Exchange-free and scan pruning reaches parquet.\n")
         for title, plan in sections:
-            f.write(f"\n## {title}\n\n```\n{plan}\n```\n")
+            f.write(f"\n## {title}\n\n```\n{renumber(plan)}\n```\n")
     print("wrote PLANS.md")
     spark.stop()
 

@@ -149,15 +149,12 @@ def _field_from_kv(kv: DataFrame, spec: FieldSpec) -> DataFrame:
     )
 
 
-def extract_fields(
-    transcripts: DataFrame, schema: ExtractionSchema, result: DataFrame | None = None
-) -> DataFrame:
+def extract_fields(transcripts: DataFrame, schema: ExtractionSchema) -> DataFrame:
     """Compile the schema into a per-turn field table:
     (conv_id, turn_idx, <field> ...) with the KV→regex cascade and
     normalizers applied."""
     blk = blocks(transcripts)
-    if result is None:
-        result = emit(blk, transcripts)
+    result = emit(blk, transcripts)
     kv = kv_items(blk)
     out = result.select("conv_id", "turn_idx", "extracted_text")
     for spec in schema.fields:

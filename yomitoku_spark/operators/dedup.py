@@ -71,7 +71,11 @@ def _perm_hash(j: int):
 
 def minhash_signature(col: Column, n_hashes: int = 16, shingle_n: int = 5) -> Column:
     """MinHash signature: per permutation j, min over shingles of
-    hash64(j || shingle). Returns array<bigint> of length n_hashes."""
+    hash64(j || shingle). Returns array<bigint> of length n_hashes.
+
+    The column-expression twin of :func:`minhash_signatures_arrow`,
+    which is what :func:`lsh_candidate_pairs` runs; tests hold the two
+    bit-identical."""
     sh = shingles(col, shingle_n)
     sig = [F.array_min(F.transform(sh, _perm_hash(j))) for j in range(n_hashes)]
     return F.array(*sig)
@@ -133,7 +137,6 @@ def lsh_candidate_pairs(
     n_hashes: int = 16,
     bands: int = 4,
     shingle_n: int = 5,
-    use_arrow: bool = True,
     max_bucket_size: int | None = None,
 ) -> DataFrame:
     """MinHash-LSH near-dup candidates: signatures banded into
@@ -155,11 +158,7 @@ def lsh_candidate_pairs(
     connected through the star center. None by default so the
     oracle-checked registry rows stay bit-identical."""
     rows_per_band = n_hashes // bands
-    if use_arrow:
-        sdf = minhash_signatures_arrow(df, id_col, text_col, n_hashes, shingle_n)
-    else:
-        sig = minhash_signature(F.col(text_col), n_hashes, shingle_n)
-        sdf = df.select(F.col(id_col).alias("id"), sig.alias("sig"))
+    sdf = minhash_signatures_arrow(df, id_col, text_col, n_hashes, shingle_n)
     # materialize the signature table ONCE (id + n_hashes ints — this
     # IS the MinHash index). A repartition barrier does not dedupe the
     # banded self-join's branches (they prune differently; no

@@ -101,29 +101,6 @@ def expand_units(assigned: DataFrame) -> DataFrame:
     )
 
 
-# Memo of (input DataFrame, cached units, result tuple) per DISTINCT
-# input plan: repeated derive_grid_headers calls on semantically equal
-# inputs (the registry/bench paths call it from three queries) reuse
-# ONE cached `units` instead of accumulating session-lived cache
-# entries per call. Capped at _DERIVE_MEMO_MAX entries (FIFO — the
-# oldest entry is unpersisted and evicted), so a long-lived session
-# feeding many distinct plans cannot pin unbounded cached RDDs;
-# clear_derive_memo() unpersists and resets everything.
-_DERIVE_MEMO: list[tuple[DataFrame, DataFrame, tuple]] = []
-_DERIVE_MEMO_MAX = 8
-
-
-def clear_derive_memo() -> None:
-    """Unpersist every memoized ``units`` cache and reset the memo —
-    the explicit lifecycle hook for long-lived services."""
-    for _, units, _ in _DERIVE_MEMO:
-        try:
-            units.unpersist()
-        except Exception:
-            pass  # session already stopped
-    _DERIVE_MEMO.clear()
-
-
 def derive_grid_headers(
     cells: DataFrame,
 ) -> tuple[DataFrame, DataFrame, DataFrame, DataFrame]:
@@ -141,29 +118,16 @@ def derive_grid_headers(
     * colmap(doc_id, grid_id, col, merged_col) — same-column merge map
       (identity when no two columns share a trailing header).
 
-    ``units`` is cached because it feeds four consumers (header rows,
-    header stacks, demotions, data) — without it each output re-runs
-    the grouped grid-recovery UDF. Calls with a semantically equal
-    input plan (``DataFrame.sameSemantics``) return the SAME memoized
-    tuple, so repeated registry/bench calls hold exactly one cache
-    entry per distinct input; ``clear_derive_memo()`` unpersists them.
-
-    The memo keys on the PLAN, not the data: if the files behind a
-    semantically equal plan are rewritten in place, the memo serves the
-    materialization of the OLD data — call ``clear_derive_memo()``
-    after mutating inputs (immutable-corpus batch runs, the intended
-    callers, never hit this).
+    ``units`` feeds four consumers (header rows, header stacks,
+    demotions, data), so each call pins it once as a local checkpoint;
+    without it each output re-runs the grouped grid-recovery UDF. No
+    state is kept between calls: every call derives its own ``units``.
     """
-    for prev_cells, _, result in _DERIVE_MEMO:
-        try:
-            if (
-                prev_cells.sparkSession is cells.sparkSession
-                and cells.sameSemantics(prev_cells)
-            ):
-                return result
-        except Exception:
-            continue  # stale session entry — fall through to recompute
-    units = expand_units(assign_grid(cells)).cache()
+    # lazy: the first action that reads units computes and pins it
+    # inside its own job, and the other consumers read the pinned
+    # blocks; an eager checkpoint adds a separate job per call that
+    # measured slower on the grid registry rows
+    units = expand_units(assign_grid(cells)).localCheckpoint(eager=False)
 
     is_ok = F.col("role").isin(*HEADER_OK_ROLES).cast("int")
     hdr_rows = (
@@ -211,15 +175,7 @@ def derive_grid_headers(
         "col",
         F.min("col").over(wmerge).cast("int").alias("merged_col"),
     )
-    result = (headers, data, demoted, colmap)
-    _DERIVE_MEMO.append((cells, units, result))
-    while len(_DERIVE_MEMO) > _DERIVE_MEMO_MAX:
-        _, old_units, _ = _DERIVE_MEMO.pop(0)
-        try:
-            old_units.unpersist()
-        except Exception:
-            pass  # session already stopped
-    return result
+    return headers, data, demoted, colmap
 
 
 def merged_grid_data(

@@ -4,16 +4,17 @@ Two tiers, per the scale plan:
 
 * ``brute_force_topk`` — exact top-k by cosine; the query side is
   broadcast, the corpus side streams: one pass, no shuffle of the big
-  side. Right up to ~10^4 queries × any corpus size.
-* ``lsh_ann_topk`` — random-hyperplane LSH bucketing (Arrow-batched
+  side. Right up to ~10^4 queries × any corpus size. The tests use it
+  as the float recall referee for the approximate paths.
+* ``lsh_ann_topk_quantized`` — md5-sign LSH bucketing (Arrow-batched
   numpy matmul for signatures), candidates only within a bucket, then
   exact re-rank. The scale path: bucket join keeps candidate counts
   ~corpus/2^bits per query.
 
-``dot_quantized`` provides an integer-exact similarity used by the
-DuckDB-checked oracle queries (float summation order is engine-
-specific; quantized integer dot products are bit-reproducible
-everywhere).
+Every approximate path ranks by a quantized integer dot product
+(round(x*scale) int64 products), so the DuckDB-checked oracle queries
+reproduce it bit for bit (float summation order is engine-specific;
+quantized integer dot products are bit-reproducible everywhere).
 """
 
 from __future__ import annotations
@@ -67,22 +68,11 @@ def _q_away(v: np.ndarray) -> np.ndarray:
     return (np.sign(v) * np.floor(np.abs(v) + 0.5)).astype(np.int64)
 
 
-def dot_quantized(a: Column, b: Column, scale: int = 1000) -> Column:
-    """Integer dot product of round(x*scale) vectors — bit-exact across
-    engines (no float summation-order sensitivity)."""
-    q = lambda x: F.round(x.cast("double") * scale).cast("bigint")  # noqa: E731
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: q(x) * q(y)),
-        F.lit(0).cast("bigint"),
-        lambda acc, x: acc + x,
-    )
-
-
 def quantized_vecs(
     df: DataFrame, id_col: str, vec_col: str, scale: int = 1000
 ) -> DataFrame:
     """(id, qv array<int>) — vectors pre-quantized ONCE at corpus grain
-    with the same half-away rounding as :func:`dot_quantized`. The
+    with the same half-away rounding as :func:`dot_quantized_arrow`. The
     re-rank joins then ship 4-byte ints instead of 8-byte doubles per
     component (half the exchange + Arrow bytes of the heaviest ANN
     stage — guide §2.3 "narrower types"), and the pair-dot skips the
@@ -121,11 +111,11 @@ def dot_int_arrow():
 
 
 def dot_quantized_arrow(scale: int = 1000):
-    """Arrow-batched pandas UDF computing the SAME quantized integer
-    dot as :func:`dot_quantized` (int64 products — bit-exact), but
-    vectorized with numpy instead of interpreted Catalyst higher-order
-    expressions (~50× faster on wide candidate sets; HOFs are not
-    codegen'd)."""
+    """Arrow-batched pandas UDF computing the quantized integer dot
+    ``sum(round(q*scale) * round(c*scale))`` (int64 products, rounding
+    half away from zero like SQL ROUND — bit-exact), vectorized with
+    numpy instead of interpreted Catalyst higher-order expressions
+    (~50× faster on wide candidate sets; HOFs are not codegen'd)."""
     import pandas as pd  # noqa: F811
 
     @F.pandas_udf("bigint")
@@ -178,7 +168,7 @@ def brute_force_topk_quantized(
     than evaluating higher-order expressions per pair: HOFs like
     F.aggregate are interpreted, a matmul is BLAS. The corpus side is a
     driver-collected broadcast — the same constraint as any broadcast
-    join side (fine to ~10^6×dim; beyond that use lsh_ann_topk)."""
+    join side (fine to ~10^6×dim; beyond that use lsh_ann_topk_quantized)."""
     spark = corpus.sparkSession
     rows = corpus.select(id_col, vec_col).collect()
     c_ids = np.asarray([r[0] for r in rows], dtype=np.int64)
@@ -383,8 +373,10 @@ def lsh_ann_topk_quantized(
     + flipped buckets — recall@3 0.55 → 0.88 at the registry config
     with the same index size (measured in bench.py's recall map).
 
-    Same shuffle discipline as :func:`lsh_ann_topk`: vectors never ride
-    through candidate generation; they join back once for the re-rank."""
+    Shuffle discipline (the property that survives 10^9 vectors): the
+    (table, bucket) equi-join and the pair dedup run over ids-only
+    rows, so vectors never ride through candidate generation; they
+    join back once, onto the deduped pair set, for the re-rank."""
     # ONE corpus pass (guide §2.4): bucketing emits the pre-quantized
     # vector on each id's (table 0, probe 0) row, so the re-rank
     # vector sides read the same checkpointed signature artifact
@@ -672,103 +664,6 @@ def ivf_assign_probes(
     # prune different columns, so no exchange/stage reuse applies and a
     # lazy plan re-runs the assignment matmul twice over the corpus.
     return ap.localCheckpoint(eager=True)
-
-
-def _hyperplanes(dim: int, n_planes: int, seed: int = 7) -> np.ndarray:
-    rng = np.random.RandomState(seed)
-    return rng.standard_normal((n_planes, dim)).astype(np.float64)
-
-
-def lsh_signatures(
-    df: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 8,
-    seed: int = 7,
-    n_tables: int = 1,
-) -> DataFrame:
-    """Random-hyperplane bucket ids per vector — ``n_tables`` independent
-    hash tables (the standard recall lever: a true neighbor pair only
-    needs to collide in ONE table). One numpy matmul per Arrow batch
-    against all tables' planes at once; the planes matrix is
-    closure-captured once per executor, not per row. Output:
-    (id, table, bucket) — one row per table."""
-    planes = np.concatenate(
-        [_hyperplanes(dim, n_planes, seed + 1000 * t) for t in range(n_tables)]
-    )
-    weights = (1 << np.arange(n_planes)).astype(np.int64)
-
-    def sig(it):
-        for pdf in it:
-            mat = _mat(pdf[vec_col])
-            if len(mat) == 0:
-                continue
-            bits = (mat @ planes.T) > 0  # (n, n_tables*n_planes)
-            ids = pdf[id_col].to_numpy()
-            frames = []
-            for t in range(n_tables):
-                b = bits[:, t * n_planes : (t + 1) * n_planes]
-                bucket = (b.astype(np.int64) * weights).sum(axis=1)
-                frames.append(
-                    pd.DataFrame(
-                        {"id": ids, "table": np.int32(t), "bucket": bucket}
-                    )
-                )
-            yield pd.concat(frames, ignore_index=True)
-
-    return df.select(id_col, vec_col).mapInPandas(
-        sig, schema="id bigint, table int, bucket bigint"
-    )
-
-
-def lsh_ann_topk(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    dim: int = 64,
-    n_planes: int = 8,
-    k: int = 5,
-    seed: int = 7,
-    n_tables: int = 4,
-) -> DataFrame:
-    """Approximate all-pairs top-k: candidates share an LSH bucket in
-    ANY of ``n_tables`` hash tables, deduped, re-ranked by exact cosine.
-
-    Shuffle discipline (the property that survives 10^9 vectors): the
-    (table, bucket) equi-join and the pair dedup are computed over
-    (id, table, bucket) rows ONLY — the full embedding vectors never
-    ride through the candidate generation. Vectors are joined back
-    exactly once, onto the already-deduped (query_id, corpus_id) pair
-    set, for the exact re-rank; so each vector crosses the wire a
-    constant number of times independent of n_tables. Recall rises with
-    n_tables at linear candidate cost (measured in
-    tests/test_operators.py::test_lsh_ann_recall_vs_brute_force)."""
-    sigs = lsh_signatures(corpus, id_col, vec_col, dim, n_planes, seed, n_tables)
-    # materialize the ids-only signature table ONCE (this IS the LSH
-    # index; see lsh_ann_topk_quantized for why a repartition barrier
-    # does not dedupe the self-join branches)
-    sigs = sigs.localCheckpoint(eager=True)
-    a = sigs.select(F.col("id").alias("query_id"), "table", "bucket")
-    b = sigs.select(F.col("id").alias("corpus_id"), "table", "bucket")
-    pairs = (
-        a.join(b, ["table", "bucket"])
-        .filter(F.col("query_id") != F.col("corpus_id"))
-        .select("query_id", "corpus_id")
-        .distinct()
-    )
-    vecs = corpus.select(F.col(id_col).alias("id"), F.col(vec_col).alias("vec"))
-    j = (
-        pairs.join(vecs.withColumnRenamed("id", "query_id").withColumnRenamed("vec", "qvec"), "query_id")
-        .join(vecs.withColumnRenamed("id", "corpus_id").withColumnRenamed("vec", "cvec"), "corpus_id")
-    )
-    sim = cosine(F.col("cvec"), F.col("qvec")).alias("sim")
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("corpus_id"))
-    return (
-        j.select("query_id", "corpus_id", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
 
 
 # ------------------------------------------------- product quantization

@@ -35,7 +35,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from yomitoku_spark import __version__
-from yomitoku_spark.plans.pipeline import extract
+from yomitoku_spark.plans.pipeline import RESULT_SCHEMA, extract
 
 STATE_SCHEMA = (
     "bucket int, status string, n_turns bigint, blocks_kept bigint, "
@@ -130,9 +130,15 @@ def _bucket_expr(n_buckets: int) -> F.Column:
     ).cast("int")
 
 
+# with the declared schemas: a run whose input has no rows commits no
+# result file, and schema inference over an empty directory fails
 def read_result(spark: SparkSession, output_dir: str) -> DataFrame:
-    return spark.read.parquet(_result_dir(output_dir)).drop("bucket")
+    return (
+        spark.read.schema(RESULT_SCHEMA + ", bucket int")
+        .parquet(_result_dir(output_dir))
+        .drop("bucket")
+    )
 
 
 def read_state(spark: SparkSession, output_dir: str) -> DataFrame:
-    return spark.read.parquet(_state_dir(output_dir))
+    return spark.read.schema(STATE_SCHEMA).parquet(_state_dir(output_dir))

@@ -1871,7 +1871,9 @@ def kmv_sample_tokens(spark, sf_dir):
     rows per group. Exact distinct counts ride alongside; the referee
     replays hash, rank, and estimator arithmetic bit for bit."""
     d = t(spark, sf_dir, "documents")
-    occ = fan_out(d).select(
+    # no fan_out: the tokenize map feeds map-side-combined aggregates,
+    # and a round-robin exchange in front of them measured neutral
+    occ = d.select(
         "lang", F.explode(TS.tokens(F.lower(F.col("text")))).alias("tok")
     )
     sk = SK.kmv_build(occ, F.col("tok"), ["lang"], k=64)
@@ -2229,8 +2231,8 @@ FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
 
 def embedding_topk(spark, sf_dir):
     """Brute-force top-3 neighbors per vector by quantized dot product
-    (integer-exact across engines; the float cosine variant lives in
-    operators.similarity and is pytest-verified)."""
+    (integer-exact across engines; the float cosine twin,
+    ``similarity.brute_force_topk``, is the tests' recall referee)."""
     e = t(spark, sf_dir, "embeddings")
     return SIM.brute_force_topk_quantized(e, e, "vec_id", "embedding", k=3, scale=1000)
 

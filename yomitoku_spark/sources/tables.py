@@ -40,15 +40,12 @@ def salt_repartition(df: DataFrame, n_partitions: int) -> DataFrame:
     return df.repartition(n_partitions, F.xxhash64("conv_id", "turn_idx"))
 
 
-def write_result(result: DataFrame, path: str, order: bool = True) -> None:
+def write_result(result: DataFrame, path: str) -> None:
     """Stable (conv_id, turn_idx) ordered output (north rule): range
     partition on the key so files are globally ordered, sort within."""
-    out = result
-    if order:
-        out = result.repartitionByRange("conv_id", "turn_idx").sortWithinPartitions(
-            "conv_id", "turn_idx"
-        )
-    out.write.mode("overwrite").parquet(path)
+    result.repartitionByRange("conv_id", "turn_idx").sortWithinPartitions(
+        "conv_id", "turn_idx"
+    ).write.mode("overwrite").parquet(path)
 
 
 def write_bucketed(
