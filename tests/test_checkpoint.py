@@ -1,6 +1,11 @@
 """Resume/checkpoint semantics: kill-after-partial → re-run → identical
 final table; idempotent replays; exactly-once metrics."""
 
+import os
+import re
+import subprocess
+import sys
+
 import pandas as pd
 import pytest
 from pyspark.sql import functions as F
@@ -118,3 +123,82 @@ def test_overwrite_mode_conf_restored(spark, tdf, tmp_path):
     CP.run_resumable(tdf.limit(50), str(tmp_path / "out_conf"), n_buckets=4, wave_size=4)
     after = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
     assert after == prev
+
+
+def test_resume_with_other_bucket_count_raises(spark, tdf, tmp_path):
+    """Another ``n_buckets`` hashes the committed rows to other buckets:
+    resuming would write them a second time and count them twice in
+    the state, so the resume is refused before any wave runs."""
+    out = str(tmp_path / "out_rebucket")
+    CP.run_resumable(tdf, out, n_buckets=8, wave_size=4, max_waves=1)
+    with pytest.raises(ValueError, match=r"n_buckets=16: its done rows have n_buckets=8"):
+        CP.run_resumable(tdf, out, n_buckets=16, wave_size=4)
+    state = CP.read_state(spark, out).collect()
+    assert len(state) == 4 and {r.n_buckets for r in state} == {8}
+    assert CP.read_result(spark, out).count() == sum(r.n_turns for r in state)
+
+
+def test_wave_is_one_pass(spark, tdf, tmp_path):
+    """Each wave's metrics come from its own write: the write plan
+    carries them (CollectMetrics, with no Exchange that could replay a
+    map stage's accumulator updates), and no plan reads the result
+    directory back. A wave runs two SQL executions: write, state append."""
+    out = str(tmp_path / "out_pass")
+    CP.run_resumable(tdf, out, n_buckets=8, wave_size=4)
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
+    plans = [d for d in (execs.apply(i).physicalPlanDescription() for i in range(execs.size()))
+             if out in d]
+    result = os.path.join(out, "result")
+    assert not [d for d in plans if re.search(r"Location: \w+ \[[^\]]*" + re.escape(result), d)]
+    writes = [d for d in plans if f"Arguments: file:{result}, " in d]
+    assert len(writes) == 2 and len(plans) == 4
+    assert all("CollectMetrics" in d and "Exchange" not in d for d in writes)
+
+
+_RETRY_JOB = """
+import sys
+from pyspark import TaskContext
+from yomitoku_spark import datagen
+from yomitoku_spark.plans.checkpoint import run_resumable
+from yomitoku_spark.session import get_spark
+
+out, marker = sys.argv[1:]
+spark = get_spark(master="local[2,2]")
+tdf = datagen.transcripts_df(spark, n_convs=15, seed=42)
+
+
+def flaky(batches):
+    # partition 0's first attempt hands on all its rows, then fails
+    yield from batches
+    ctx = TaskContext.get()
+    if ctx.partitionId() == 0 and ctx.attemptNumber() == 0:
+        with open(marker, "a") as f:
+            f.write("failed\\n")
+        raise RuntimeError("injected first-attempt failure")
+
+
+run_resumable(tdf.mapInArrow(flaky, tdf.schema), out, n_buckets=8, wave_size=4)
+spark.stop()
+"""
+
+
+@pytest.mark.slow
+def test_metrics_exactly_once_under_task_retry(spark, tdf, tmp_path):
+    """A write task that observed all its rows and then failed is
+    retried (local[2,2] allows one retry); the failed attempt's
+    metrics must not reach the state rows."""
+    out, marker = str(tmp_path / "out_retry"), str(tmp_path / "failures")
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root)
+    p = subprocess.run([sys.executable, "-c", _RETRY_JOB, out, marker],
+                       capture_output=True, text=True, env=env, timeout=420)
+    assert p.returncode == 0, p.stderr[-3000:]
+    with open(marker) as f:
+        assert f.read().split() == ["failed"] * 2  # once per wave
+    state = CP.read_state(spark, out)
+    assert sorted(r.bucket for r in state.collect()) == list(range(8))
+    sums = [F.sum(c).alias(c) for c in ("blocks_kept", "chars_emitted")]
+    got = state.agg(F.sum("n_turns").alias("n"), *sums).collect()[0]
+    want = extract(tdf).agg(F.count(F.lit(1)).alias("n"), *sums).collect()[0]
+    assert got == want

@@ -10,12 +10,13 @@ metric rows. Design:
 * results land in a parquet table partitioned by ``bucket`` with
   dynamic partition overwrite — re-processing a bucket is an
   idempotent replace, never a double-count;
-* the state table gains one row per committed bucket with row count,
-  metric sums (blocks kept/dropped, chars emitted — aggregated from
-  the COMMITTED output, so metrics are exactly-once by construction),
-  an attempt timestamp, and a lineage string (code version + input id);
-* on restart, done buckets are anti-joined away and only the remainder
-  runs.
+* the state table gains one row per committed bucket with the bucket
+  count, row count, metric sums (blocks kept/dropped, chars emitted —
+  observed on the write's own pass, exactly-once per committed
+  partition), an attempt timestamp, and a lineage string (code
+  version + input id);
+* on restart, done buckets are skipped and only the remainder runs; a
+  restart with another bucket count is refused.
 
 On a real cluster the state table would be Iceberg (atomic appends);
 the parquet append used here has the same layout and the same
@@ -31,14 +32,14 @@ import os
 import time
 
 import pandas as pd
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from yomitoku_spark import __version__
 from yomitoku_spark.plans.pipeline import RESULT_SCHEMA, extract
 
 STATE_SCHEMA = (
-    "bucket int, status string, n_turns bigint, blocks_kept bigint, "
+    "bucket int, n_buckets int, status string, n_turns bigint, blocks_kept bigint, "
     "blocks_dropped bigint, chars_emitted bigint, attempt_ts double, lineage string"
 )
 
@@ -51,20 +52,23 @@ def _result_dir(output_dir: str) -> str:
     return os.path.join(output_dir, "result")
 
 
-def done_buckets(spark: SparkSession, output_dir: str) -> set[int]:
-    """Buckets with a done row. A missing state directory means nothing
-    is done; any other read error propagates, since treating an
-    unreadable state as empty would redo committed buckets and append
-    duplicate state rows."""
+def _done_rows(spark: SparkSession, output_dir: str) -> list:
+    """Distinct ``(bucket, n_buckets)`` of the done rows. A missing state
+    directory means nothing is done; any other read error propagates,
+    since treating an unreadable state as empty would redo committed
+    buckets and append duplicate state rows."""
     sd = _state_dir(output_dir)
     path = spark._jvm.org.apache.hadoop.fs.Path(sd)  # the path's own FS, so any URI works
     if not path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(path):
-        return set()
+        return []
     # with the schema: a state dir holding no committed file reads as empty
     state = spark.read.schema(STATE_SCHEMA).parquet(sd)
-    return {
-        r.bucket for r in state.filter(F.col("status") == "done").select("bucket").distinct().collect()
-    }
+    return state.filter(F.col("status") == "done").select("bucket", "n_buckets").distinct().collect()
+
+
+def done_buckets(spark: SparkSession, output_dir: str) -> set[int]:
+    """Buckets with a done row."""
+    return {r.bucket for r in _done_rows(spark, output_dir)}
 
 
 def run_resumable(
@@ -77,15 +81,24 @@ def run_resumable(
 ) -> int:
     """Run extraction bucket-wave by bucket-wave, checkpointing after
     each wave. Returns the number of buckets processed this invocation.
+    Raises ``ValueError`` if the output was started with another
+    ``n_buckets``: its rows hash to other buckets, so resuming would
+    write them twice.
 
     ``max_waves`` exists for fault-injection tests (stop early, then
     call again to resume)."""
     spark = transcripts.sparkSession
-    done = done_buckets(spark, output_dir)
-    todo = sorted(set(range(n_buckets)) - done)
+    done = _done_rows(spark, output_dir)
+    started = {r.n_buckets for r in done} - {n_buckets}
+    if started:
+        raise ValueError(f"cannot resume {output_dir} with n_buckets={n_buckets}: its done "
+                         f"rows have n_buckets={'/'.join(map(str, started))}")
+    todo = sorted(set(range(n_buckets)) - {r.bucket for r in done})
     lineage = lineage or f"yomitoku_spark-{__version__}"
 
     bucketed = transcripts.withColumn("bucket", _bucket_expr(n_buckets))
+    # n_turns and the metric sums, in STATE_SCHEMA order
+    vals = [F.lit(1)] + [F.col(c) for c in ("blocks_kept", "blocks_dropped", "chars_emitted")]
 
     processed = 0
     waves = [todo[i : i + wave_size] for i in range(0, len(todo), wave_size)]
@@ -94,22 +107,20 @@ def run_resumable(
             break
         part = bucketed.filter(F.col("bucket").isin(wave))
         res = extract(part.drop("bucket")).withColumn("bucket", _bucket_expr(n_buckets))
+        # Exactly-once: Spark applies a result task's accumulator updates once per
+        # partition and drops a failed attempt's. That needs no Exchange between observe
+        # and the write: extract has none, and a caller's repartition sits below it.
+        obs = Observation()
+        res = res.observe(obs, *(F.sum(F.when(F.col("bucket") == b, v)).alias(f"{b}_{i}")
+                                 for b in wave for i, v in enumerate(vals)))
         # idempotent per-bucket replace (dynamic partition overwrite)
         res.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
             "bucket"
         ).parquet(_result_dir(output_dir))
-        # metrics from the COMMITTED output → exactly-once, read back once
-        # (with the schema: an all-empty first wave commits no file)
-        committed = spark.read.schema(res.schema).parquet(_result_dir(output_dir))
-        sums = [F.sum(c) for c in ("blocks_kept", "blocks_dropped", "chars_emitted")]
-        stats = {
-            r[0]: tuple(r[1:])
-            for r in committed.filter(F.col("bucket").isin(wave))
-            .groupBy("bucket").agg(F.count(F.lit(1)), *sums).collect()
-        }
-        now = time.time()
-        # buckets that happened to be empty still need a done marker
-        rows = [(b, "done", *stats.get(b, (0, 0, 0, 0)), now, lineage) for b in wave]
+        got, now = obs.get, time.time()
+        # an empty bucket's sums are null; it still needs a done marker
+        rows = [(b, n_buckets, "done", *(got[f"{b}_{i}"] or 0 for i in range(len(vals))),
+                 now, lineage) for b in wave]
         # via pandas: Arrow needs no Python worker (a list of tuples does);
         # one state file per wave
         state = spark.createDataFrame(pd.DataFrame(rows), STATE_SCHEMA).coalesce(1)

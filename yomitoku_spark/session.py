@@ -106,9 +106,18 @@ def fan_out(df):
     (the opposite of the guide's advice), while the scan itself
     already yields ample parallel splits. The probe is
     ``DataFrame.inputFiles()`` (driver-side listing, already cached by
-    the read — measured ~6 ms); it UNDERCOUNTS splits (a large file
-    yields several), so the gate only errs toward keeping today's
-    behavior. Derived relations (no backing files) keep the fan-out.
+    the read — measured ~6 ms). Derived relations (no backing files)
+    keep the fan-out.
+
+    File count is not split count, in either direction. A large file
+    yields several splits, so there the gate errs toward keeping the
+    fan-out. But small files are packed into one split up to
+    ``spark.sql.files.openCostInBytes``, and a plan with several scans
+    (a join or union) counts the files of all its leaves, unrelated to
+    this frame's partitioning; in both cases the gate can skip the
+    fan-out while the map work still runs on few cores. ROADMAP
+    direction 3 replaces this gate with a price over partition count
+    and plan size.
     """
     sc = df.sparkSession.sparkContext
     par = sc.defaultParallelism
