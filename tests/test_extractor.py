@@ -146,3 +146,76 @@ def test_kv_items_and_cells(spark, turns):
 def test_unknown_normalizer_rejected():
     with pytest.raises(ValueError):
         EX.FieldSpec(name="x", normalize="nope")
+
+
+_KEYED = [
+    {"name": "invoice_no", "keys": ["invoice no", "order id"], "normalize": "digits"},
+    {"name": "due", "keys": ["due date", "date"]},
+    {"name": "customer", "keys": ["customer name"], "normalize": "collapse_ws"},
+    {"name": "total", "keys": ["total", "amount"]},
+    {"name": "status", "keys": ["status"]},
+]
+
+
+@pytest.mark.parametrize("n_keyed", [1, 5])
+@pytest.mark.parametrize("with_regex", [False, True])
+def test_extract_fields_kernel_count_is_schema_width_free(spark, turns, n_keyed, with_regex):
+    # every keyed field shares one KV pick, so the executed plan runs the
+    # block kernel once, plus once for emit's extracted_text when a field
+    # has a regex fallback
+    fields = _KEYED[:n_keyed]
+    if with_regex:
+        fields = fields + [{"name": "year", "regex": r"\d{4}"}]
+    df = EX.extract_fields(turns, EX.ExtractionSchema.from_dict({"fields": fields}))
+    got = {(r.conv_id, r.turn_idx): r.invoice_no for r in df.collect()}
+    assert got[("c1", 0)] == "00123"
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    final = plan.split("== Initial Plan ==")[0]
+    assert final.count("MapInArrow") == (2 if with_regex else 1), final
+
+
+@pytest.mark.parametrize(
+    "names", [["a", "a"], ["a", "conv_id"], ["turn_idx"]], ids=["dup", "conv_id", "turn_idx"]
+)
+def test_clashing_field_names_rejected(names):
+    with pytest.raises(ValueError):
+        EX.ExtractionSchema.from_dict({"fields": [{"name": n, "keys": ["x"]} for n in names]})
+
+
+def test_field_named_extracted_text_is_returned(spark, turns):
+    schema = EX.ExtractionSchema.from_dict(
+        {"fields": [{"name": "extracted_text", "keys": ["customer name"]}]}
+    )
+    df = EX.extract_fields(turns, schema)
+    assert df.columns == ["conv_id", "turn_idx", "extracted_text"]
+    got = {(r.conv_id, r.turn_idx): r.extracted_text for r in df.collect()}
+    assert got[("c1", 0)] == "山田" and got[("c1", 1)] is None
+
+
+def test_schema_files_read_as_utf8_under_c_locale(tmp_path):
+    import os
+    import subprocess
+    import sys
+
+    (tmp_path / "kv.yaml").write_text(
+        'fields:\n  - name: total\n    keys: ["合計"]\n', encoding="utf-8")
+    (tmp_path / "desc.yaml").write_text(
+        'fields:\n  - name: total\n    description: "合計"\n', encoding="utf-8")
+    code = (
+        "import sys\n"
+        "from yomitoku_spark.extractor import ExtractionSchema\n"
+        "from yomitoku_spark.extractor_llm import LLMSchema\n"
+        "from yomitoku_spark.semantic import load_schema\n"
+        "d = sys.argv[1]\n"
+        "assert ExtractionSchema.from_yaml(d + '/kv.yaml').fields[0].keys == ['\\u5408\\u8a08']\n"
+        "assert load_schema(d + '/desc.yaml')[0].description == '\\u5408\\u8a08'\n"
+        "assert LLMSchema.from_yaml(d + '/desc.yaml').fields[0].description == '\\u5408\\u8a08'\n"
+    )
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {**os.environ, "LC_ALL": "C", "LANG": "C", "PYTHONCOERCECLOCALE": "0",
+           "PYTHONUTF8": "0", "PYTHONPATH": root}
+    proc = subprocess.run(
+        [sys.executable, "-X", "utf8=0", "-c", code, str(tmp_path)],
+        env=env, capture_output=True, text=True, timeout=120,
+    )
+    assert proc.returncode == 0, proc.stderr

@@ -23,6 +23,7 @@ from yomitoku_spark.semantic import (
     apply_template,
     extract_scalar_fields,
     extract_table_field,
+    load_schema,
 )
 
 # ------------------------------------------------------------- adjacency
@@ -293,6 +294,17 @@ def test_cascade_merge_values(spark, mini_layout):
     out = extract_scalar_fields(cells, kv, paragraphs, words, fields).collect()[0]
     # value cells c0 (y=0) and c1 (y=22): y-spread 22 >= x-spread 0 → y order
     assert out.value == "INV-001|2024-05-01" and out.source == "kv"
+
+
+def test_duplicate_scalar_field_names_rejected(mini_layout):
+    # two fields named f would emit two identical (doc, f) rows and lose
+    # the second spec, so both the loader and the resolver refuse them
+    with pytest.raises(ValueError):
+        load_schema('fields:\n  - name: f\n    regex: "[0-9]+"\n'
+                    '  - name: f\n    description: Date\n')
+    fields = [ScalarField("f", regex="[0-9]{4}"), ScalarField("f", description="Date")]
+    with pytest.raises(ValueError):
+        extract_scalar_fields(*mini_layout, fields)
 
 
 # ------------------------------------------------------------ table field

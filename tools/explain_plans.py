@@ -192,6 +192,14 @@ def main():
                  "kv_dict_view", "grid_row_dicts", "simhash_near_dup_pairs"]:
         sections.append((f"query: {name}", plan_of(QUERIES[name](spark, SF))))
 
+    # declarative field extraction: the schema is a broadcast key
+    # table, so one KV pick serves every field — the block kernel runs
+    # once for the pick and once for emit's text (a field has a regex)
+    p = plan_of(QUERIES["extract_fields_kv"](spark, SF))
+    assert p.split("(1) ")[0].count("MapInArrow") == 2, p
+    sections.append(("query: extract_fields_kv (one broadcast-key KV pick for "
+                     "every field; 2 MapInArrow whatever the schema width)", p))
+
     # composed corpus-build flagship: extraction + quality stay
     # shuffle-free; the ONLY exchange is the dedup window's digest
     # hash, and the extraction MapInArrow appears exactly once

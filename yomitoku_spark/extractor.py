@@ -11,10 +11,16 @@ Here the same schema compiles to DataFrame operations:
 * per-turn KV items and table cells are recovered from the extraction
   pipeline's blocks as COLUMN EXPRESSIONS (split/explode/regexp over
   the rendered markdown — the normalized intermediate is the contract);
-* each field becomes an ordered ``coalesce`` of per-source picks, each
-  pick an aggregation keyed by (conv_id, turn_idx) with explicit
-  tiebreaks (the reference relies on Python's stable iteration order;
-  Spark must order explicitly — SURVEY.md §7.3);
+* the schema is data: every field's keys form one broadcast table
+  (field, prio, normalized key) that the KV items join once on
+  substring, and ONE aggregation keyed by (conv_id, turn_idx) picks
+  every field's value — the match with the least (key prio, block
+  order, line index); the reference relies on Python's stable
+  iteration order, Spark must order explicitly (SURVEY.md §7.3). So
+  the block kernel runs once, or twice when a field has a regex,
+  whatever the schema width;
+* each field is the ``coalesce`` of its KV pick and its regex over
+  ``extracted_text``;
 * normalizers resolve from :mod:`yomitoku_spark.functions.normalize`.
 
 Example schema (YAML or dict)::
@@ -34,7 +40,6 @@ from __future__ import annotations
 from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from yomitoku_spark.functions.normalize import NORMALIZERS
@@ -53,9 +58,35 @@ class FieldSpec:
             raise ValueError(f"unknown normalizer {self.normalize!r} for {self.name}")
 
 
+def read_yaml(text_or_path: str):
+    """Parse a YAML file (read as UTF-8, whatever the locale) or, when
+    no such file exists, the YAML text itself."""
+    import os
+
+    import yaml
+
+    if os.path.exists(text_or_path):
+        with open(text_or_path, encoding="utf-8") as f:
+            return yaml.safe_load(f)
+    return yaml.safe_load(text_or_path)
+
+
+def check_field_names(names: list[str], reserved: tuple[str, ...] = ()) -> None:
+    """Reject a schema whose field names repeat or take a reserved
+    output column name."""
+    seen = set()
+    for n in names:
+        if n in seen or n in reserved:
+            raise ValueError(f"field name {n!r} is duplicated or reserved")
+        seen.add(n)
+
+
 @dataclass
 class ExtractionSchema:
     fields: list[FieldSpec]
+
+    def __post_init__(self):
+        check_field_names([f.name for f in self.fields], ("conv_id", "turn_idx"))
 
     @classmethod
     def from_dict(cls, d: dict) -> "ExtractionSchema":
@@ -63,16 +94,7 @@ class ExtractionSchema:
 
     @classmethod
     def from_yaml(cls, text_or_path: str) -> "ExtractionSchema":
-        import os
-
-        import yaml
-
-        if os.path.exists(text_or_path):
-            with open(text_or_path) as f:
-                d = yaml.safe_load(f)
-        else:
-            d = yaml.safe_load(text_or_path)
-        return cls.from_dict(d)
+        return cls.from_dict(read_yaml(text_or_path))
 
 
 def _norm_key(col) -> F.Column:
@@ -131,41 +153,33 @@ def table_cells(blocks: DataFrame) -> DataFrame:
     return cells.withColumn("text", F.trim("raw")).drop("raw")
 
 
-def _field_from_kv(kv: DataFrame, spec: FieldSpec) -> DataFrame:
-    """Best KV match per turn: earliest matching key substring (by the
-    schema's key-priority order, then block order, then line index)."""
-    if not spec.keys:
-        return None
-    prio = F.lit(None).cast("int")
-    nk = _norm_key(F.col("key"))
-    for i, k in enumerate(reversed(spec.keys)):
-        prio = F.when(nk.contains(_norm_key(F.lit(k))), F.lit(len(spec.keys) - 1 - i)).otherwise(prio)
-    cand = kv.withColumn("prio", prio).filter(F.col("prio").isNotNull())
-    w = W.partitionBy("conv_id", "turn_idx").orderBy("prio", "order", "kv_idx")
-    return (
-        cand.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") == 1)
-        .select("conv_id", "turn_idx", F.col("value").alias(f"__kv_{spec.name}"))
-    )
-
-
 def extract_fields(transcripts: DataFrame, schema: ExtractionSchema) -> DataFrame:
     """Compile the schema into a per-turn field table:
     (conv_id, turn_idx, <field> ...) with the KV→regex cascade and
     normalizers applied."""
     blk = blocks(transcripts)
-    result = emit(blk, transcripts)
-    kv = kv_items(blk)
-    out = result.select("conv_id", "turn_idx", "extracted_text")
-    for spec in schema.fields:
-        kvf = _field_from_kv(kv, spec)
-        if kvf is not None:
-            out = out.join(kvf, ["conv_id", "turn_idx"], "left")
-        raw = F.col(f"__kv_{spec.name}") if kvf is not None else F.lit(None).cast("string")
+    out = emit(blk, transcripts).select("conv_id", "turn_idx", "extracted_text")
+    keyed = [i for i, spec in enumerate(schema.fields) if spec.keys]
+    if keyed:
+        # one row per (field index, key priority, key); the pivot names
+        # each field's pick column by its index, so no field name can
+        # clash with the join keys or extracted_text
+        keys = [(i, p, k) for i in keyed for p, k in enumerate(schema.fields[i].keys)]
+        kdf = blk.sparkSession.createDataFrame(keys, "fi int, prio int, key string")
+        kdf = kdf.select("fi", "prio", _norm_key(F.col("key")).alias("nkey"))
+        kv = kv_items(blk)
+        hits = kv.join(F.broadcast(kdf), _norm_key(kv["key"]).contains(F.col("nkey")))
+        picks = (
+            hits.groupBy("conv_id", "turn_idx")
+            .pivot("fi", keyed)
+            .agg(F.min_by("value", F.struct("prio", "order", "kv_idx")))
+        )
+        out = out.join(picks, ["conv_id", "turn_idx"], "left")
+    cols = []
+    for i, spec in enumerate(schema.fields):
+        raw = F.col(str(i)) if spec.keys else F.lit(None).cast("string")
         if spec.regex:
             rx = F.regexp_extract("extracted_text", spec.regex, 0)
             raw = F.coalesce(raw, F.nullif(rx, F.lit("")))
-        out = out.withColumn(spec.name, NORMALIZERS[spec.normalize](raw))
-        if kvf is not None:
-            out = out.drop(f"__kv_{spec.name}")
-    return out.drop("extracted_text")
+        cols.append(NORMALIZERS[spec.normalize](raw).alias(spec.name))
+    return out.select("conv_id", "turn_idx", *cols)

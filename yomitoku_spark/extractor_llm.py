@@ -94,16 +94,9 @@ class LLMSchema:
 
     @classmethod
     def from_yaml(cls, path_or_text: str) -> "LLMSchema":
-        import os
+        from yomitoku_spark.extractor import read_yaml
 
-        import yaml
-
-        if os.path.exists(path_or_text):
-            with open(path_or_text, encoding="utf-8") as f:
-                d = yaml.safe_load(f)
-        else:
-            d = yaml.safe_load(path_or_text)
-        return cls.from_dict(d)
+        return cls.from_dict(read_yaml(path_or_text))
 
 
 # ===================================================================

@@ -47,6 +47,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from yomitoku_spark.extractor import check_field_names, read_yaml
 from yomitoku_spark.operators import spatial as SP
 
 
@@ -85,20 +86,12 @@ def load_schema(text_or_path: str) -> list[ScalarField]:
     """YAML extraction schema → field specs (the declarative surface of
     the reference's ExtractionSchema, extractor/schema.py:51-58, with
     the layout-cascade matchers of rule_pipeline.py)."""
-    import os
-
-    import yaml
-
-    if os.path.exists(text_or_path):
-        with open(text_or_path) as f:
-            d = yaml.safe_load(f)
-    else:
-        d = yaml.safe_load(text_or_path)
     out = []
-    for fd in d["fields"]:
+    for fd in read_yaml(text_or_path)["fields"]:
         if "bbox" in fd and fd["bbox"] is not None:
             fd = {**fd, "bbox": tuple(fd["bbox"])}
         out.append(ScalarField(**fd))
+    check_field_names([f.name for f in out])
     return out
 
 
@@ -122,6 +115,7 @@ def extract_scalar_fields(
     the KV tier (different input relation, plus the merge_values
     aggregate) adds branches, so the plan is 3 branches + one window
     regardless of schema width."""
+    check_field_names([f.name for f in fields])
     spark = cells.sparkSession
     noncells = _boxed(cells.filter(F.col("role") != "group"))
     # paragraphs/words can only match text tiers (5, 7, 8), all of

@@ -15,6 +15,8 @@ extraction pipeline is exposed over ``readStream``:
 
 from __future__ import annotations
 
+import operator
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -260,6 +262,52 @@ def stream_sessionize(events_stream: DataFrame, gap_sec: int = 3600) -> DataFram
     )
 
 
+def _stateful_sketch(d, group_col, cells, out_col, init, step) -> DataFrame:
+    """The stateful half every stream sketch shares: one BIGINT of
+    state per occupied (group, *cells) key, ``init`` before its first
+    row. ``step(state, pdfs)`` returns the new state and the value to
+    emit; an emitted ``None`` leaves the state as it was and emits no
+    row."""
+    import pandas as pd
+    from pyspark.sql.streaming.state import GroupStateTimeout
+
+    out_schema = ", ".join([f"{group_col} string"] + [f"{c} bigint" for c in [*cells, out_col]])
+
+    def fn(key, pdfs, state):
+        cur = int(state.get[0]) if state.exists else init
+        new, out = step(cur, pdfs)
+        if out is None:
+            return
+        state.update((new,))
+        row = {c: [int(k)] for c, k in zip(cells, key[1:])}
+        yield pd.DataFrame({group_col: [key[0]], **row, out_col: [out]})
+
+    return d.groupBy(group_col, *cells).applyInPandasWithState(
+        fn, out_schema, f"{out_col} bigint", "append", GroupStateTimeout.NoTimeout
+    )
+
+
+def _count_step(cur, pdfs):
+    """Counter sketches merge by SUM: add the batch's row count to the
+    state and emit that delta."""
+    add = sum(len(pdf) for pdf in pdfs)
+    return cur + add, add or None
+
+
+def _merge_step(col, op):
+    """Idempotent sketches merge by ``op`` (MAX, bit-or): fold the
+    batch's ``col`` into the state and emit the state when it changed."""
+
+    def step(cur, pdfs):
+        new = cur
+        for pdf in pdfs:
+            for v in pdf[col]:
+                new = op(new, int(v))
+        return new, new if new != cur else None
+
+    return step
+
+
 def stream_hll_registers(
     values_stream: DataFrame,
     value_col: str = "tok",
@@ -280,32 +328,10 @@ def stream_hll_registers(
     bounded by 2^p rows per group no matter how many values arrive —
     the streaming analog of the map-side-combined register exchange.
     """
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from yomitoku_spark.functions.sketch import hll_bucket_rho
 
     d = hll_bucket_rho(values_stream, F.col(value_col), [group_col], p=p)
-    out_schema = f"{group_col} string, bucket bigint, rho bigint"
-    state_schema = "rho bigint"
-
-    def fn(key, pdfs, state):
-        mx = -1
-        for pdf in pdfs:
-            if len(pdf):
-                mx = max(mx, int(pdf["rho"].max()))
-        if mx < 0:
-            return
-        cur = int(state.get[0]) if state.exists else -1
-        if mx > cur:
-            state.update((mx,))
-            yield pd.DataFrame(
-                {group_col: [key[0]], "bucket": [int(key[1])], "rho": [mx]}
-            )
-
-    return d.groupBy(group_col, "bucket").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return _stateful_sketch(d, group_col, ["bucket"], "rho", -1, _merge_step("rho", max))
 
 
 def stream_bloom_filter(
@@ -330,34 +356,11 @@ def stream_bloom_filter(
     `stream_exact_dedup` (one int per DISTINCT value), this is
     dedup/decontamination state with a FIXED footprint — no false
     negatives ever, false-positive rate set by m and k."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from yomitoku_spark.functions.sketch import _bloom_cells
 
     src = values_stream.select(group_col, F.col(value_col).alias("v"))
     d = _bloom_cells(src, "v", m_bits, k).select(group_col, "word", "mask")
-    out_schema = f"{group_col} string, word bigint, bits bigint"
-    state_schema = "bits bigint"
-
-    def fn(key, pdfs, state):
-        m = 0
-        for pdf in pdfs:
-            for v in pdf["mask"]:
-                m |= int(v)
-        if not m:
-            return
-        cur = int(state.get[0]) if state.exists else 0
-        new = cur | m
-        if new != cur:
-            state.update((new,))
-            yield pd.DataFrame(
-                {group_col: [key[0]], "word": [int(key[1])], "bits": [new]}
-            )
-
-    return d.groupBy(group_col, "word").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return _stateful_sketch(d, group_col, ["word"], "bits", 0, _merge_step("mask", operator.or_))
 
 
 def stream_q_buckets(
@@ -381,30 +384,10 @@ def stream_q_buckets(
     checkpointed restarts. State is bounded by (64 - s)·2^s rows per
     group no matter how many values arrive, and any quantile is
     available mid-stream by folding + `sketch.q_quantiles`."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from yomitoku_spark.functions.sketch import q_bucket_rows
 
     d = q_bucket_rows(values_stream, F.col(value_col), [group_col], sub_bits)
-    out_schema = f"{group_col} string, bucket bigint, cnt bigint"
-    state_schema = "cnt bigint"
-
-    def fn(key, pdfs, state):
-        add = 0
-        for pdf in pdfs:
-            add += len(pdf)
-        if not add:
-            return
-        cur = int(state.get[0]) if state.exists else 0
-        state.update((cur + add,))
-        yield pd.DataFrame(
-            {group_col: [key[0]], "bucket": [int(key[1])], "cnt": [add]}
-        )
-
-    return d.groupBy(group_col, "bucket").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return _stateful_sketch(d, group_col, ["bucket"], "cnt", 0, _count_step)
 
 
 def stream_cm_counters(
@@ -427,32 +410,7 @@ def stream_cm_counters(
     emitted so far (`sketch.cm_merge`) equals the batch sketch over
     everything ingested so far, at any point and across checkpointed
     restarts. State is bounded by depth·width rows per group."""
-    import pandas as pd
-    from pyspark.sql.streaming.state import GroupStateTimeout
-
     from yomitoku_spark.functions.sketch import cm_cells
 
     d = cm_cells(values_stream, F.col(value_col), [group_col], depth, width)
-    out_schema = f"{group_col} string, row bigint, bucket bigint, cnt bigint"
-    state_schema = "cnt bigint"
-
-    def fn(key, pdfs, state):
-        add = 0
-        for pdf in pdfs:
-            add += len(pdf)
-        if not add:
-            return
-        cur = int(state.get[0]) if state.exists else 0
-        state.update((cur + add,))
-        yield pd.DataFrame(
-            {
-                group_col: [key[0]],
-                "row": [int(key[1])],
-                "bucket": [int(key[2])],
-                "cnt": [add],
-            }
-        )
-
-    return d.groupBy(group_col, "row", "bucket").applyInPandasWithState(
-        fn, out_schema, state_schema, "append", GroupStateTimeout.NoTimeout
-    )
+    return _stateful_sketch(d, group_col, ["row", "bucket"], "cnt", 0, _count_step)
