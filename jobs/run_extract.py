@@ -9,7 +9,7 @@ Usage:
         [--resume] [--n-buckets 256]
 
 With --resume the job uses the bucket-wave checkpoint runner
-(idempotent per-bucket overwrite + lineage/metrics state table);
+(idempotent per-wave overwrite + per-bucket lineage/metrics state table);
 without it, a straight extract → ordered write. First prints one JSON
 line: the master and every engine setting in effect (session.get_spark).
 """

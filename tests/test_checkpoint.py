@@ -93,9 +93,9 @@ def test_empty_input_reads_back_empty(spark, tdf, tmp_path):
 
 def test_bigint_turn_idx_buckets_consistently(spark, tdf, tmp_path):
     """xxhash64 is type-sensitive: a caller passing bigint turn_idx must
-    still land every row in the bucket that selected it (the input-side
-    filter and output-side write hash explicitly typed keys), or a later
-    wave's dynamic partition overwrite silently deletes rows."""
+    still have each row's metrics counted in the bucket that selected it
+    (the input-side filter and the output-side observe hash explicitly
+    typed keys), or a bucket's state row counts another bucket's rows."""
     out = str(tmp_path / "out_bigint")
     wide = tdf.withColumn("turn_idx", F.col("turn_idx").cast("bigint"))
     CP.run_resumable(wide, out, n_buckets=8, wave_size=2)
@@ -103,6 +103,56 @@ def test_bigint_turn_idx_buckets_consistently(spark, tdf, tmp_path):
     assert got.count() == tdf.count()
     want = extract(tdf).toPandas()
     assert _sorted(got.toPandas()).equals(_sorted(want))
+    per_bucket = dict(got.groupBy(CP._bucket_expr(8)).count().collect())
+    state = {r.bucket: r.n_turns for r in CP.read_state(spark, out).collect()}
+    assert state == {b: per_bucket.get(b, 0) for b in range(8)}
+
+
+def _result_layout(out):
+    """The result table's partition directories."""
+    return sorted(d for d in os.listdir(os.path.join(out, "result")) if "=" in d)
+
+
+def test_crash_between_result_commit_and_state_append(spark, tdf, tmp_path):
+    """A wave whose result committed but whose state append did not is
+    redone by the resume, even with another wave_size: the done set is a
+    prefix of the buckets, so the redo starts at the orphan's first
+    bucket and its overwrite of that wave partition replaces the
+    orphan's rows. The result holds one ``wave=`` partition per wave."""
+    out = str(tmp_path / "out_crash")
+    CP.run_resumable(tdf, out, n_buckets=16, wave_size=4, max_waves=2)
+    assert _result_layout(out) == ["wave=0", "wave=4"]
+    state_dir = os.path.join(out, "_checkpoint")
+    second = [f for f in os.listdir(state_dir) if f.endswith(".parquet")
+              and pd.read_parquet(os.path.join(state_dir, f)).bucket.min() == 4]
+    assert len(second) == 1
+    for f in os.listdir(state_dir):
+        if second[0] in f:  # the file and its checksum
+            os.remove(os.path.join(state_dir, f))
+    assert CP.done_buckets(spark, out) == set(range(4))
+
+    assert CP.run_resumable(tdf, out, n_buckets=16, wave_size=8) == 12
+    assert _result_layout(out) == ["wave=0", "wave=12", "wave=4"]
+    got = _sorted(CP.read_result(spark, out).toPandas())
+    assert not got.duplicated(["conv_id", "turn_idx"]).any()
+    pd.testing.assert_frame_equal(got, _sorted(extract(tdf).toPandas()), check_dtype=False)
+    state = CP.read_state(spark, out).collect()
+    assert sorted(r.bucket for r in state) == list(range(16))
+    assert sum(r.n_turns for r in state) == len(got)
+
+
+def test_bucket_partitioned_output_refused(spark, tdf, tmp_path):
+    """An output started when results were partitioned by bucket cannot
+    take wave partitions beside them (the read-back would fail on the
+    two partition columns), so the resume is refused before any wave
+    writes."""
+    out = str(tmp_path / "out_old")
+    old = extract(tdf.limit(5)).withColumn("bucket", F.lit(3))
+    old.write.partitionBy("bucket").parquet(os.path.join(out, "result"))
+    with pytest.raises(ValueError, match="partitioned by bucket; restart into a fresh"):
+        CP.run_resumable(tdf, out, n_buckets=8, wave_size=4)
+    assert _result_layout(out) == ["bucket=3"]
+    assert not os.path.exists(os.path.join(out, "_checkpoint"))
 
 
 def test_unreadable_state_raises(spark, tdf, tmp_path):

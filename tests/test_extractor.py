@@ -175,7 +175,11 @@ def test_extract_fields_kernel_count_is_schema_width_free(spark, turns, n_keyed,
 
 
 @pytest.mark.parametrize(
-    "names", [["a", "a"], ["a", "conv_id"], ["turn_idx"]], ids=["dup", "conv_id", "turn_idx"]
+    "names",
+    [["a", "a"], ["a", "conv_id"], ["turn_idx"], ["Total", "total"], ["Conv_ID"]],
+    # Spark resolves column names case-insensitively: the last two
+    # could not be written out (COLUMN_ALREADY_EXISTS)
+    ids=["dup", "conv_id", "turn_idx", "dup_case", "conv_id_case"],
 )
 def test_clashing_field_names_rejected(names):
     with pytest.raises(ValueError):

@@ -86,7 +86,8 @@ class ExtractionSchema:
     fields: list[FieldSpec]
 
     def __post_init__(self):
-        check_field_names([f.name for f in self.fields], ("conv_id", "turn_idx"))
+        # lower-cased: Spark resolves column names case-insensitively
+        check_field_names([f.name.lower() for f in self.fields], ("conv_id", "turn_idx"))
 
     @classmethod
     def from_dict(cls, d: dict) -> "ExtractionSchema":

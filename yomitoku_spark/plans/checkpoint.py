@@ -7,9 +7,10 @@ metric rows. Design:
 * work is bucketed by ``pmod(xxhash64(conv_id, turn_idx), n_buckets)``
   — TURN-grain, so a single hot conversation spreads across all
   buckets (long-conversation skew defusal; SURVEY.md §4.1);
-* results land in a parquet table partitioned by ``bucket`` with
-  dynamic partition overwrite — re-processing a bucket is an
-  idempotent replace, never a double-count;
+* results land in a parquet table partitioned by ``wave`` (its first
+  bucket; the bucket is the unit of state) with dynamic partition
+  overwrite — each write task writes one file per wave, and re-running
+  a wave is an idempotent replace, never a double-count;
 * the state table gains one row per committed bucket with the bucket
   count, row count, metric sums (blocks kept/dropped, chars emitted —
   observed on the write's own pass, exactly-once per committed
@@ -52,18 +53,22 @@ def _result_dir(output_dir: str) -> str:
     return os.path.join(output_dir, "result")
 
 
-def _done_rows(spark: SparkSession, output_dir: str) -> list:
-    """Distinct ``(bucket, n_buckets)`` of the done rows. A missing state
-    directory means nothing is done; any other read error propagates,
-    since treating an unreadable state as empty would redo committed
-    buckets and append duplicate state rows."""
-    sd = _state_dir(output_dir)
-    path = spark._jvm.org.apache.hadoop.fs.Path(sd)  # the path's own FS, so any URI works
-    if not path.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()).exists(path):
-        return []
+def _fs_path(spark: SparkSession, path: str):  # the path's own FS, so any URI works
+    p = spark._jvm.org.apache.hadoop.fs.Path(path)
+    return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
+
+
+def _done_rows(spark: SparkSession, output_dir: str) -> set:
+    """Distinct ``(bucket, n_buckets)`` of the done rows, deduplicated on the
+    driver: one state row per bucket needs no shuffle. A missing state dir
+    means nothing is done; any other read error propagates, since treating an
+    unreadable state as empty would redo committed buckets and their state rows."""
+    fs, path = _fs_path(spark, _state_dir(output_dir))
+    if not fs.exists(path):
+        return set()
     # with the schema: a state dir holding no committed file reads as empty
-    state = spark.read.schema(STATE_SCHEMA).parquet(sd)
-    return state.filter(F.col("status") == "done").select("bucket", "n_buckets").distinct().collect()
+    state = spark.read.schema(STATE_SCHEMA).parquet(_state_dir(output_dir))
+    return set(state.filter(F.col("status") == "done").select("bucket", "n_buckets").collect())
 
 
 def done_buckets(spark: SparkSession, output_dir: str) -> set[int]:
@@ -83,7 +88,8 @@ def run_resumable(
     each wave. Returns the number of buckets processed this invocation.
     Raises ``ValueError`` if the output was started with another
     ``n_buckets``: its rows hash to other buckets, so resuming would
-    write them twice.
+    write them twice; also for a result still partitioned by ``bucket``,
+    which could not be read back beside ``wave=`` partitions.
 
     ``max_waves`` exists for fault-injection tests (stop early, then
     call again to resume)."""
@@ -93,12 +99,16 @@ def run_resumable(
     if started:
         raise ValueError(f"cannot resume {output_dir} with n_buckets={n_buckets}: its done "
                          f"rows have n_buckets={'/'.join(map(str, started))}")
+    fs, result = _fs_path(spark, _result_dir(output_dir))
+    if fs.globStatus(result.suffix("/bucket=*")):
+        raise ValueError(f"cannot resume {output_dir}: its result is partitioned by bucket; "
+                         "restart into a fresh output directory")
     todo = sorted(set(range(n_buckets)) - {r.bucket for r in done})
     lineage = lineage or f"yomitoku_spark-{__version__}"
 
     bucketed = transcripts.withColumn("bucket", _bucket_expr(n_buckets))
     # n_turns and the metric sums, in STATE_SCHEMA order
-    vals = [F.lit(1)] + [F.col(c) for c in ("blocks_kept", "blocks_dropped", "chars_emitted")]
+    vals = ["1", "blocks_kept", "blocks_dropped", "chars_emitted"]
 
     processed = 0
     waves = [todo[i : i + wave_size] for i in range(0, len(todo), wave_size)]
@@ -110,13 +120,18 @@ def run_resumable(
         # Exactly-once: Spark applies a result task's accumulator updates once per
         # partition and drops a failed attempt's. That needs no Exchange between observe
         # and the write: extract has none, and a caller's repartition sits below it.
+        # One SQL string per aggregate: half the build cost of a Column tree via py4j.
         obs = Observation()
-        res = res.observe(obs, *(F.sum(F.when(F.col("bucket") == b, v)).alias(f"{b}_{i}")
+        res = res.observe(obs, *(F.expr(f"sum(CASE WHEN bucket = {b} THEN {v} END) AS `{b}_{i}`")
                                  for b in wave for i, v in enumerate(vals)))
-        # idempotent per-bucket replace (dynamic partition overwrite)
-        res.write.mode("overwrite").option("partitionOverwriteMode", "dynamic").partitionBy(
-            "bucket"
-        ).parquet(_result_dir(output_dir))
+        # Per-wave idempotent replace. Waves run in sorted order and each appends its
+        # state in one file, so the done set is a prefix of range(n_buckets): the first
+        # wave not done starts at the same bucket on every resume, whatever its
+        # wave_size, and its dynamic overwrite of wave=<that bucket> replaces any rows
+        # a crash left between the result commit and the state append.
+        res.drop("bucket").withColumn("wave", F.lit(wave[0])).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("wave").parquet(_result_dir(output_dir))
         got, now = obs.get, time.time()
         # an empty bucket's sums are null; it still needs a done marker
         rows = [(b, n_buckets, "done", *(got[f"{b}_{i}"] or 0 for i in range(len(vals))),
@@ -132,9 +147,8 @@ def run_resumable(
 def _bucket_expr(n_buckets: int) -> F.Column:
     # xxhash64 is TYPE-sensitive (int vs bigint hash differently), and
     # extract() emits turn_idx as int — so the input-side filter and the
-    # output-side write MUST hash the same types, or rows written land
-    # in a bucket other than the one that selected them and a later
-    # wave's dynamic overwrite silently deletes them.
+    # output-side observe MUST hash the same types, or a row selected by
+    # one bucket has its metrics counted in another bucket's state row.
     return F.pmod(
         F.xxhash64(F.col("conv_id").cast("string"), F.col("turn_idx").cast("int")),
         F.lit(n_buckets),
@@ -145,9 +159,9 @@ def _bucket_expr(n_buckets: int) -> F.Column:
 # result file, and schema inference over an empty directory fails
 def read_result(spark: SparkSession, output_dir: str) -> DataFrame:
     return (
-        spark.read.schema(RESULT_SCHEMA + ", bucket int")
+        spark.read.schema(RESULT_SCHEMA + ", wave int")
         .parquet(_result_dir(output_dir))
-        .drop("bucket")
+        .drop("wave")
     )
 
 
