@@ -122,22 +122,50 @@ def test_crash_between_result_commit_and_state_append(spark, tdf, tmp_path):
     out = str(tmp_path / "out_crash")
     CP.run_resumable(tdf, out, n_buckets=16, wave_size=4, max_waves=2)
     assert _result_layout(out) == ["wave=0", "wave=4"]
-    state_dir = os.path.join(out, "_checkpoint")
-    second = [f for f in os.listdir(state_dir) if f.endswith(".parquet")
-              and pd.read_parquet(os.path.join(state_dir, f)).bucket.min() == 4]
-    assert len(second) == 1
-    for f in os.listdir(state_dir):
-        if second[0] in f:  # the file and its checksum
-            os.remove(os.path.join(state_dir, f))
+    _forget_wave(out, 4)
     assert CP.done_buckets(spark, out) == set(range(4))
 
     assert CP.run_resumable(tdf, out, n_buckets=16, wave_size=8) == 12
     assert _result_layout(out) == ["wave=0", "wave=12", "wave=4"]
+    _assert_exactly_once(spark, out, tdf, 16)
+
+
+def test_crash_redone_by_a_wave_with_no_rows(spark, tdf, tmp_path):
+    """The redo of a crashed wave replaces its orphaned rows even when
+    the redo's own buckets hold no rows (empty buckets are ordinary: a
+    small input over many buckets), so a smaller resume wave_size cannot
+    leave them to be written again by the next waves."""
+    out = str(tmp_path / "out_crash_empty")
+    b = CP._bucket_expr(16)
+    sparse = tdf.filter(b >= 4)  # buckets 0-3 empty, 4-7 not
+    CP.run_resumable(sparse, out, n_buckets=16, wave_size=8, max_waves=1)
+    _forget_wave(out, 0)
+    assert CP.done_buckets(spark, out) == set()
+
+    assert CP.run_resumable(sparse, out, n_buckets=16, wave_size=4) == 16
+    assert _result_layout(out) == ["wave=0", "wave=12", "wave=4", "wave=8"]
+    _assert_exactly_once(spark, out, sparse, 16)
+
+
+def _forget_wave(out, first_bucket):
+    """Delete the state file of the wave starting at ``first_bucket``, as
+    a crash after its result commit and before its state append would."""
+    state_dir = os.path.join(out, "_checkpoint")
+    files = [f for f in os.listdir(state_dir) if f.endswith(".parquet")
+             and pd.read_parquet(os.path.join(state_dir, f)).bucket.min() == first_bucket]
+    assert len(files) == 1
+    for f in os.listdir(state_dir):
+        if files[0] in f:  # the file and its checksum
+            os.remove(os.path.join(state_dir, f))
+
+
+def _assert_exactly_once(spark, out, transcripts, n_buckets):
     got = _sorted(CP.read_result(spark, out).toPandas())
     assert not got.duplicated(["conv_id", "turn_idx"]).any()
-    pd.testing.assert_frame_equal(got, _sorted(extract(tdf).toPandas()), check_dtype=False)
+    want = _sorted(extract(transcripts).toPandas())
+    pd.testing.assert_frame_equal(got, want, check_dtype=False)
     state = CP.read_state(spark, out).collect()
-    assert sorted(r.bucket for r in state) == list(range(16))
+    assert sorted(r.bucket for r in state) == list(range(n_buckets))
     assert sum(r.n_turns for r in state) == len(got)
 
 
@@ -201,7 +229,7 @@ def test_wave_is_one_pass(spark, tdf, tmp_path):
              if out in d]
     result = os.path.join(out, "result")
     assert not [d for d in plans if re.search(r"Location: \w+ \[[^\]]*" + re.escape(result), d)]
-    writes = [d for d in plans if f"Arguments: file:{result}, " in d]
+    writes = [d for d in plans if re.search(rf"Arguments: file:{re.escape(result)}/wave=\d+, ", d)]
     assert len(writes) == 2 and len(plans) == 4
     assert all("CollectMetrics" in d and "Exchange" not in d for d in writes)
 

@@ -2,6 +2,7 @@
 (reference parity: extractor/rule_pipeline.py cascade + normalizer.py)."""
 
 import datetime
+import re
 
 import pytest
 from pyspark.sql import functions as F
@@ -182,7 +183,8 @@ def test_extract_fields_kernel_count_is_schema_width_free(spark, turns, n_keyed,
     ids=["dup", "conv_id", "turn_idx", "dup_case", "conv_id_case"],
 )
 def test_clashing_field_names_rejected(names):
-    with pytest.raises(ValueError):
+    # the message names the clashing field as written
+    with pytest.raises(ValueError, match=re.escape(repr(names[-1]))):
         EX.ExtractionSchema.from_dict({"fields": [{"name": n, "keys": ["x"]} for n in names]})
 
 

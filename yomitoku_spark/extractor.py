@@ -71,14 +71,14 @@ def read_yaml(text_or_path: str):
     return yaml.safe_load(text_or_path)
 
 
-def check_field_names(names: list[str], reserved: tuple[str, ...] = ()) -> None:
-    """Reject a schema whose field names repeat or take a reserved
-    output column name."""
+def check_field_names(names: list[str], reserved: tuple[str, ...] = (), key=str) -> None:
+    """Reject a schema whose field names, compared by ``key``, repeat or
+    take a reserved output column name."""
     seen = set()
     for n in names:
-        if n in seen or n in reserved:
+        if key(n) in seen or key(n) in reserved:
             raise ValueError(f"field name {n!r} is duplicated or reserved")
-        seen.add(n)
+        seen.add(key(n))
 
 
 @dataclass
@@ -87,7 +87,7 @@ class ExtractionSchema:
 
     def __post_init__(self):
         # lower-cased: Spark resolves column names case-insensitively
-        check_field_names([f.name.lower() for f in self.fields], ("conv_id", "turn_idx"))
+        check_field_names([f.name for f in self.fields], ("conv_id", "turn_idx"), key=str.lower)
 
     @classmethod
     def from_dict(cls, d: dict) -> "ExtractionSchema":

@@ -8,9 +8,9 @@ metric rows. Design:
   — TURN-grain, so a single hot conversation spreads across all
   buckets (long-conversation skew defusal; SURVEY.md §4.1);
 * results land in a parquet table partitioned by ``wave`` (its first
-  bucket; the bucket is the unit of state) with dynamic partition
-  overwrite — each write task writes one file per wave, and re-running
-  a wave is an idempotent replace, never a double-count;
+  bucket; the bucket is the unit of state), each wave overwriting its
+  own ``wave=`` directory — each write task writes one file per wave,
+  and re-running a wave is an idempotent replace, never a double-count;
 * the state table gains one row per committed bucket with the bucket
   count, row count, metric sums (blocks kept/dropped, chars emitted —
   observed on the write's own pass, exactly-once per committed
@@ -127,11 +127,11 @@ def run_resumable(
         # Per-wave idempotent replace. Waves run in sorted order and each appends its
         # state in one file, so the done set is a prefix of range(n_buckets): the first
         # wave not done starts at the same bucket on every resume, whatever its
-        # wave_size, and its dynamic overwrite of wave=<that bucket> replaces any rows
-        # a crash left between the result commit and the state append.
-        res.drop("bucket").withColumn("wave", F.lit(wave[0])).write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("wave").parquet(_result_dir(output_dir))
+        # wave_size, and its overwrite of the whole wave=<that bucket> directory
+        # replaces any rows a crash left between the result commit and the state
+        # append, even when this wave's own buckets are empty.
+        res.drop("bucket").write.mode("overwrite").parquet(
+            f"{_result_dir(output_dir)}/wave={wave[0]}")
         got, now = obs.get, time.time()
         # an empty bucket's sums are null; it still needs a done marker
         rows = [(b, n_buckets, "done", *(got[f"{b}_{i}"] or 0 for i in range(len(vals))),
