@@ -10,6 +10,7 @@ import pandas as pd
 import pytest
 from pyspark.sql import functions as F
 
+import yomitoku_spark
 from yomitoku_spark import datagen
 from yomitoku_spark.plans import checkpoint as CP
 from yomitoku_spark.plans.pipeline import extract
@@ -62,6 +63,28 @@ def test_metrics_exactly_once(spark, tdf, tmp_path):
     ).collect()[0]
     assert totals.nt == res.nt and totals.ce == res.ce
     assert all(r.lineage for r in state.collect())
+
+
+def test_lineage_names_version_and_input_files(spark, tdf, tmp_path):
+    """Every state row's lineage is the code version plus a digest of
+    the sorted input file list: one value across a first call and its
+    resume, another value for another file set."""
+    src = str(tmp_path / "src")
+    tdf.repartition(4).write.parquet(src)
+    files = sorted(f for f in os.listdir(src) if f.endswith(".parquet"))
+    out = str(tmp_path / "out_lineage")
+    CP.run_resumable(spark.read.parquet(src), out, n_buckets=8, wave_size=4, max_waves=1)
+    CP.run_resumable(spark.read.parquet(src), out, n_buckets=8, wave_size=4)
+    lineages = {r.lineage for r in CP.read_state(spark, out).collect()}
+    assert len(lineages) == 1
+    (lineage,) = lineages
+    assert lineage.startswith(f"yomitoku_spark-{yomitoku_spark.__version__} ")
+
+    other = str(tmp_path / "out_other")
+    CP.run_resumable(spark.read.parquet(*(os.path.join(src, f) for f in files[:2])),
+                     other, n_buckets=8, wave_size=8)
+    others = {r.lineage for r in CP.read_state(spark, other).collect()}
+    assert len(others) == 1 and others != lineages
 
 
 def test_empty_buckets_get_zero_rows(spark, tdf, tmp_path):
@@ -237,6 +260,7 @@ def test_wave_is_one_pass(spark, tdf, tmp_path):
 _RETRY_JOB = """
 import sys
 from pyspark import TaskContext
+import yomitoku_spark
 from yomitoku_spark import datagen
 from yomitoku_spark.plans.checkpoint import run_resumable
 from yomitoku_spark.session import get_spark

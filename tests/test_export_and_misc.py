@@ -1,6 +1,7 @@
 """Export sinks, ruby/MAD size filter, connected components."""
 
 import datetime
+import re
 
 import numpy as np
 import pytest
@@ -90,28 +91,6 @@ def test_connected_components(spark):
     assert got[("t2", 5)] == 1
 
 
-def test_bucketed_join_is_shuffle_free(spark, tmp_path):
-    """Co-located bucketed join (SURVEY §4): both sides bucketed by the
-    join key → SortMergeJoin with ZERO Exchange in the plan."""
-    from yomitoku_spark.sources.tables import bucketed_join, write_bucketed
-
-    a = spark.range(0, 10_000).selectExpr("id AS k", "id * 2 AS va")
-    b = spark.range(0, 10_000).selectExpr("id AS k", "id * 3 AS vb")
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        write_bucketed(a, "bk_a", ["k"], n_buckets=8)
-        write_bucketed(b, "bk_b", ["k"], n_buckets=8)
-        j = bucketed_join(spark, "bk_a", "bk_b", ["k"])
-        plan = j._jdf.queryExecution().executedPlan().toString()
-        assert "Exchange" not in plan, plan
-        assert j.count() == 10_000
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        spark.sql("DROP TABLE IF EXISTS bk_a")
-        spark.sql("DROP TABLE IF EXISTS bk_b")
-
-
 def test_searchable_pdf_text_layer(spark, tmp_path):
     """Text-layer plumbing (reference searchable_pdf.py:140-200): word→
     container assignment at 0.7 containment, per-container direction
@@ -153,13 +132,55 @@ def test_searchable_pdf_text_layer(spark, tmp_path):
     assert spark.read.json(out).count() == 4
 
 
+# Readers of the written PDF, the referee of the writer.
+def parse_xref(data: bytes) -> dict[int, int]:
+    """Parse the xref table; verify every in-use offset lands on its
+    'N 0 obj' header. Returns {obj_no: offset}; raises on corruption."""
+    m = re.search(rb"startxref\s+(\d+)\s+%%EOF", data)
+    if not m:
+        raise ValueError("missing startxref")
+    pos = int(m.group(1))
+    if not data[pos:].startswith(b"xref"):
+        raise ValueError("startxref does not point at the xref table")
+    header = re.match(rb"xref\s+(\d+)\s+(\d+)\s*\n", data[pos:])
+    first, count = int(header.group(1)), int(header.group(2))
+    table_at = pos + header.end()
+    out = {}
+    for i in range(count):
+        entry = data[table_at + 20 * i: table_at + 20 * (i + 1)]
+        off, _gen, kind = entry.split()
+        if kind == b"n":
+            objno = first + i
+            off = int(off)
+            if not data[off:].startswith(f"{objno} 0 obj".encode()):
+                raise ValueError(f"xref offset of obj {objno} is wrong")
+            out[objno] = off
+    return out
+
+
+def extract_text(data: bytes) -> list[tuple[str, float]]:
+    """Pull (text, font_size) spans back out of the content streams —
+    decode the Identity-H hex operands as UTF-16BE. Consecutive
+    single-char rotated draws are NOT merged (callers join them)."""
+    spans = []
+    for stream in re.findall(rb"stream\n(.*?)\nendstream", data, re.DOTALL):
+        try:
+            txt = stream.decode("ascii")
+        except UnicodeDecodeError:
+            continue
+        for size, hexstr in re.findall(
+            r"/F1 ([0-9.]+) Tf.*?<([0-9A-F]*)> Tj", txt
+        ):
+            spans.append((bytes.fromhex(hexstr).decode("utf-16-be"), float(size)))
+    return spans
+
+
 def test_searchable_pdf_renders_real_pdf(spark, tmp_path):
     """The r6 hand-rolled canvas (plans/pdf_writer.py): render_pdf
     writes VALID PDF bytes — xref offsets land on their objects, the
     page tree counts match, and the invisible Identity-H text layer
     round-trips back out of the content streams (UTF-16BE hex
     operands), including the per-char rotated vertical draws."""
-    from yomitoku_spark.plans import pdf_writer as PW
     from yomitoku_spark.plans import searchable_pdf as SPDF
 
     containers = spark.createDataFrame(
@@ -185,11 +206,11 @@ def test_searchable_pdf_renders_real_pdf(spark, tmp_path):
     assert n == 2
     data = pdf_path.read_bytes()
     assert data.startswith(b"%PDF-1.4")
-    xref = PW.parse_xref(data)  # raises if any offset is wrong
+    xref = parse_xref(data)  # raises if any offset is wrong
     assert len(xref) >= 8  # fonts + 2 pages + 2 streams + tree + catalog
     assert b"/Count 2" in data
     assert b"3 Tr" in data  # invisible render mode
-    spans = PW.extract_text(data)
+    spans = extract_text(data)
     texts = [t for t, _ in spans]
     # horizontal words draw whole; vertical 'col1' -> full-width chars
     # drawn one at a time, in column order
@@ -199,6 +220,27 @@ def test_searchable_pdf_renders_real_pdf(spark, tmp_path):
     by_text = {t: s for t, s in spans}
     font_row = {r.text: r.font_centi for r in layer.collect()}
     assert by_text["alpha"] == font_row["alpha"] / 100.0
+
+
+def test_render_pdf_refuses_orphan_pages(spark, tmp_path):
+    """Text-layer rows on a page absent from page_sizes raise instead
+    of silently vanishing from the written PDF (r6 review finding)."""
+    import pytest as _pytest
+
+    from yomitoku_spark.plans import searchable_pdf as SPDF
+
+    containers = spark.createDataFrame(
+        [(7, 0, 0, False, 0, 0, 600, 100)],
+        "page int, order int, sub_order int, vertical boolean, "
+        "x1 int, y1 int, x2 int, y2 int",
+    )
+    words = spark.createDataFrame(
+        [(7, "w", "hello", 10, 10, 110, 30)],
+        "page int, word_id string, content string, x1 int, y1 int, x2 int, y2 int",
+    )
+    layer = SPDF.text_layer(containers, words)
+    with _pytest.raises(ValueError, match="absent from"):
+        SPDF.render_pdf(layer, {0: (800, 1000)}, str(tmp_path / "x.pdf"))
 
 
 def test_searchable_pdf_no_int32_overflow_and_boundary_containment(spark):

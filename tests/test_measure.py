@@ -72,3 +72,12 @@ def test_oracle_checksum_matches_engine_and_input_meta(spark, tmp_path):
     path, meta = inputs.transcripts(str(tmp_path), seed=5, n_convs=6, n_files=2)
     assert checksum(extract(spark.read.parquet(path))) == (meta["oracle_checksum"], meta["n_turns"])
     assert measure.oracle_checksum(path) == (meta["oracle_checksum"], meta["n_turns"])
+
+
+@pytest.mark.parametrize(
+    "cores,want", [(1, (1, 4)), (4, (1, 4)), (7, (1, 4)), (8, (2, 8)), (32, (8, 32))]
+)
+def test_bench_scaling_levels_from_host_cores(cores, want):
+    import bench_scaling
+
+    assert bench_scaling.levels(cores) == want

@@ -2,13 +2,19 @@
 textstats) — numpy/pure-python referees, small inputs."""
 
 import numpy as np
+import pandas as pd
 import pytest
+from pyspark.sql import Column, DataFrame
+from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from yomitoku_spark.functions import textstats as TS
+from yomitoku_spark.functions.textstats import hash64
 from yomitoku_spark.operators import dedup as DD
 from yomitoku_spark.operators import similarity as SIM
 from yomitoku_spark.operators import spatial as SP
+from yomitoku_spark.operators.dedup import shingles
+from yomitoku_spark.operators.similarity import _mat, _q_away
 
 SF = "/root/testdata/sf0.001"
 
@@ -26,6 +32,26 @@ def emb(spark):
 # ---------------------------------------------------------------- dedup
 
 
+# Column-expression twin of DD.minhash_signatures_arrow.
+def _perm_hash(j: int):
+    # NOTE: must be a single-argument lambda — a 2-arg lambda passed to
+    # F.transform is interpreted as (element, index) by PySpark.
+    prefix = f"{j}:"
+    return lambda s: hash64(F.concat(F.lit(prefix), s))
+
+
+def minhash_signature(col: Column, n_hashes: int = 16, shingle_n: int = 5) -> Column:
+    """MinHash signature: per permutation j, min over shingles of
+    hash64(j || shingle). Returns array<bigint> of length n_hashes.
+
+    The column-expression twin of :func:`minhash_signatures_arrow`,
+    which is what :func:`lsh_candidate_pairs` runs; tests hold the two
+    bit-identical."""
+    sh = shingles(col, shingle_n)
+    sig = [F.array_min(F.transform(sh, _perm_hash(j))) for j in range(n_hashes)]
+    return F.array(*sig)
+
+
 def test_minhash_arrow_equals_column_expr(spark, docs):
     sub = docs.limit(40)
     a = {
@@ -35,7 +61,7 @@ def test_minhash_arrow_equals_column_expr(spark, docs):
     b = {
         r.doc_id: r.sig
         for r in sub.select(
-            "doc_id", DD.minhash_signature(F.col("text"), 8, 3).alias("sig")
+            "doc_id", minhash_signature(F.col("text"), 8, 3).alias("sig")
         ).collect()
     }
     assert a == b
@@ -98,9 +124,109 @@ def test_simhash_identical_and_near(spark):
 # ------------------------------------------------------------ similarity
 
 
+# Float and per-vector referees of the quantized, batched search paths.
+def norm(a: Column) -> Column:
+    return F.sqrt(
+        F.aggregate(
+            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
+            F.lit(0.0),
+            lambda acc, x: acc + x,
+        )
+    )
+
+
+def dot(a: Column, b: Column) -> Column:
+    return F.aggregate(
+        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
+        F.lit(0.0),
+        lambda acc, x: acc + x,
+    )
+
+
+def cosine(a: Column, b: Column) -> Column:
+    return dot(a, b) / (norm(a) * norm(b))
+
+
+def quantized_vecs(
+    df: DataFrame, id_col: str, vec_col: str, scale: int = 1000
+) -> DataFrame:
+    """(id, qv array<int>) — each vector quantized on its own with the
+    half-away rounding of :func:`SIM.dot_quantized_arrow`: the referee of
+    the ``with_qv=True`` artifacts the index passes emit."""
+
+    def qz(batches):
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            q = _q_away(_mat(pdf[vec_col]) * scale).astype(np.int32)
+            yield pd.DataFrame({"id": pdf[id_col].to_numpy(), "qv": list(q)})
+
+    return df.select(id_col, vec_col).mapInPandas(qz, schema="id bigint, qv array<int>")
+
+
+def brute_force_topk(
+    corpus: DataFrame,
+    queries: DataFrame,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    k: int = 5,
+) -> DataFrame:
+    """Exact cosine top-k neighbors per query vector.
+
+    broadcast(queries) ⨯ corpus → cosine → rank-1..k window per query.
+    Excludes self-matches on id equality."""
+    c = corpus.select(
+        F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cvec")
+    )
+    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
+    j = c.crossJoin(F.broadcast(q)).filter(F.col("corpus_id") != F.col("query_id"))
+    sim = cosine(F.col("cvec"), F.col("qvec")).alias("sim")
+    w = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("corpus_id"))
+    return (
+        j.select("query_id", "corpus_id", sim)
+        .withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+    )
+
+
+def pq_encode(
+    corpus: DataFrame,
+    codebooks: np.ndarray,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    scale: int = 1000,
+) -> DataFrame:
+    """Encode every vector as m one-byte-ish codes: per subspace the
+    L2-nearest codebook entry over the QUANTIZED int64 subvectors
+    (exact integer squared distances; ties break to the lowest code,
+    the same first-min rule as everywhere else). Returns
+    (id, codes array<int>) — the 64-dim float vector becomes m=8 small
+    ints: the compressed representation candidate scoring rides on."""
+    mq, n_codes, d = codebooks.shape
+    cb = codebooks
+
+    def enc(batches):
+        for pdf in batches:
+            mat = _mat(pdf[vec_col])
+            if len(mat) == 0:
+                continue
+            q = _q_away(mat * scale).reshape(len(mat), mq, d)
+            # (n, m, n_codes) squared L2 per subspace
+            diff = q[:, :, None, :] - cb[None, :, :, :]
+            d2 = (diff * diff).sum(axis=3)
+            codes = np.argmin(d2, axis=2)  # first (lowest) min wins
+            yield pd.DataFrame(
+                {"id": pdf[id_col].to_numpy(), "codes": list(codes.astype(np.int32))}
+            )
+
+    return corpus.select(id_col, vec_col).mapInPandas(
+        enc, schema="id bigint, codes array<int>"
+    )
+
+
 def test_brute_force_topk_matches_numpy(spark, emb):
     sub = emb.limit(50)
-    got = SIM.brute_force_topk(sub, sub, k=3).collect()
+    got = brute_force_topk(sub, sub, k=3).collect()
     rows = sub.select("vec_id", "embedding").collect()
     ids = np.array([r.vec_id for r in rows])
     mat = np.array([r.embedding for r in rows], dtype=np.float64)
@@ -167,11 +293,6 @@ def test_token_counts(spark):
     assert got[1] == (3, 3)
     assert got[2] == (0, 0)
     assert got[3] == (1, 6)  # x y z + , . !
-
-
-def test_quality_score_bounds(spark, docs):
-    vals = docs.select(TS.quality_score(F.col("text")).alias("q")).collect()
-    assert all(0.0 <= r.q <= 1.0 for r in vals)
 
 
 # ------------------------------------------------------------ spatial
@@ -311,7 +432,7 @@ def test_ivf_flat_recall_vs_brute_force(spark, emb):
     (more probes → monotonically more candidates → higher recall)."""
     sub = emb.limit(200)
     exact = {}
-    for r in SIM.brute_force_topk(sub, sub, k=3).collect():
+    for r in brute_force_topk(sub, sub, k=3).collect():
         exact.setdefault(r.query_id, set()).add(r.corpus_id)
 
     def recall(n_probe):
@@ -376,7 +497,7 @@ def test_ivf_pq_recall_and_compression(spark, emb):
     assert recall >= 0.85, recall
     cb = SIM.pq_codebooks(c, "vec_id", "cvec", n_codes=64, m=8)
     assert cb.shape == (8, 64, 8)
-    codes = SIM.pq_encode(c, cb, "vec_id", "cvec").limit(5).collect()
+    codes = pq_encode(c, cb, "vec_id", "cvec").limit(5).collect()
     assert all(len(r.codes) == 8 and all(0 <= x < 64 for x in r.codes)
                for r in codes)
 
@@ -390,7 +511,7 @@ def test_ivf_lloyd_recall_improves(spark, emb):
     0.45, lloyd2 ≈ 0.53, lsh ≈ 0.075)."""
     sub = emb.limit(200)
     exact = {}
-    for r in SIM.brute_force_topk(sub, sub, k=3).collect():
+    for r in brute_force_topk(sub, sub, k=3).collect():
         exact.setdefault(r.query_id, set()).add(r.corpus_id)
     total = sum(len(v) for v in exact.values())
 
@@ -413,7 +534,7 @@ def test_lsh_ann_quantized_recall_vs_brute_force(spark, emb):
     integer dot re-rank) against exact brute force."""
     sub = emb.limit(200)
     exact = {}
-    for r in SIM.brute_force_topk(sub, sub, k=3).collect():
+    for r in brute_force_topk(sub, sub, k=3).collect():
         exact.setdefault(r.query_id, set()).add(r.corpus_id)
     approx = {}
     for r in SIM.lsh_ann_topk_quantized(sub, k=3, n_planes=4, n_tables=6).collect():
@@ -839,7 +960,7 @@ class TestAssignProbesQv:
         qv = {r["id"]: list(r["qv"]) for r in ap.select("id", "qv").collect()}
         ref = {
             r["id"]: list(r["qv"])
-            for r in SIM.quantized_vecs(emb, "vec_id", "embedding").collect()
+            for r in quantized_vecs(emb, "vec_id", "embedding").collect()
         }
         assert qv == ref
 
@@ -857,7 +978,7 @@ class TestAssignProbesQv:
             for r in SIM.pq_encode_qv(ap, cb).collect()
         }
         direct = {
-            r["id"]: list(r["codes"]) for r in SIM.pq_encode(emb, cb).collect()
+            r["id"]: list(r["codes"]) for r in pq_encode(emb, cb).collect()
         }
         assert via_qv == direct
 
@@ -869,7 +990,7 @@ class TestAssignProbesQv:
         qv = {r["id"]: list(r["qv"]) for r in base.select("id", "qv").collect()}
         ref = {
             r["id"]: list(r["qv"])
-            for r in SIM.quantized_vecs(emb, "vec_id", "embedding").collect()
+            for r in quantized_vecs(emb, "vec_id", "embedding").collect()
         }
         assert qv == ref
         # every non-(0,0) row stays ids-only

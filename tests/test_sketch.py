@@ -175,29 +175,6 @@ def test_cm_matches_scalar_and_overestimates(spark):
     assert got["absent"] >= 0
 
 
-def test_cm_merge_is_sum_over_shards(spark):
-    vals = [f"v{i % 50}" for i in range(400)]
-    whole = SK.cm_build(
-        spark.createDataFrame([(v,) for v in vals], "tok string"),
-        F.col("tok"),
-        [],
-        depth=CM_D,
-        width=CM_W,
-    )
-    s1 = SK.cm_build(
-        spark.createDataFrame([(v,) for v in vals[:150]], "tok string"),
-        F.col("tok"), [], depth=CM_D, width=CM_W,
-    )
-    s2 = SK.cm_build(
-        spark.createDataFrame([(v,) for v in vals[150:]], "tok string"),
-        F.col("tok"), [], depth=CM_D, width=CM_W,
-    )
-    merged = SK.cm_merge(s1.unionByName(s2), [])
-    assert sorted(tuple(r) for r in merged.collect()) == sorted(
-        tuple(r) for r in whole.collect()
-    )
-
-
 def test_cm_exact_when_collision_free(spark):
     """With a wide sketch and few values, every probe's 4 cells are
     collision-free and the estimate equals the true count."""
@@ -240,27 +217,6 @@ def test_bloom_matches_scalar_and_never_false_negative(spark):
     # with 60*3 hashes into 256 bits some x-probe should be a true
     # negative AND the scalar referee already pins any false positives
     assert any(got[f"x{i}"] == 0 for i in range(40))
-
-
-def test_bloom_merge_is_idempotent_union(spark):
-    members = [f"v{i}" for i in range(50)]
-    whole = SK.bloom_build(
-        spark.createDataFrame([(v,) for v in members], "tok string"),
-        F.col("tok"), [], m_bits=BL_M, k=BL_K,
-    )
-    # overlapping shards: idempotence means overlap is harmless
-    s1 = SK.bloom_build(
-        spark.createDataFrame([(v,) for v in members[:35]], "tok string"),
-        F.col("tok"), [], m_bits=BL_M, k=BL_K,
-    )
-    s2 = SK.bloom_build(
-        spark.createDataFrame([(v,) for v in members[20:]], "tok string"),
-        F.col("tok"), [], m_bits=BL_M, k=BL_K,
-    )
-    merged = SK.bloom_merge(s1.unionByName(s2), [])
-    assert sorted(tuple(r) for r in merged.collect()) == sorted(
-        tuple(r) for r in whole.collect()
-    )
 
 
 def test_bloom_table_is_bounded(spark):
@@ -388,17 +344,6 @@ def test_q_linear_region_is_exact(spark):
     assert got == {q: sv[q * (n - 1) // 1000] for q in QMS}
 
 
-def test_q_merge_by_sum(spark):
-    df = spark.createDataFrame([(v,) for v in QVALS], "v long")
-    whole = SK.q_build(df, F.col("v"), [], sub_bits=QS)
-    s1 = SK.q_build(df.filter(F.col("v") % 2 == 0), F.col("v"), [], sub_bits=QS)
-    s2 = SK.q_build(df.filter(F.col("v") % 2 == 1), F.col("v"), [], sub_bits=QS)
-    merged = SK.q_merge(s1.unionByName(s2), [])
-    assert sorted(tuple(r) for r in merged.collect()) == sorted(
-        tuple(r) for r in whole.collect()
-    )
-
-
 def test_q_grouped_and_bounded(spark):
     rows = [("a", v) for v in QVALS] + [("b", v * 7 + 1) for v in QVALS]
     df = spark.createDataFrame(rows, "g string, v long")
@@ -450,26 +395,6 @@ def test_kmv_exact_below_k(spark):
     assert (e.n_kept, e.est_milli) == (7, 7000)
 
 
-def test_kmv_merge_idempotent_union(spark):
-    vals = [f"w{i}" for i in range(300)]
-    whole = SK.kmv_build(
-        spark.createDataFrame([(v,) for v in vals], "tok string"),
-        F.col("tok"), [], k=KK,
-    )
-    s1 = SK.kmv_build(
-        spark.createDataFrame([(v,) for v in vals[:200]], "tok string"),
-        F.col("tok"), [], k=KK,
-    )
-    s2 = SK.kmv_build(
-        spark.createDataFrame([(v,) for v in vals[120:]], "tok string"),
-        F.col("tok"), [], k=KK,
-    )
-    merged = SK.kmv_merge(s1.unionByName(s2), [], k=KK)
-    assert sorted(map(tuple, merged.collect())) == sorted(
-        map(tuple, whole.collect())
-    )
-
-
 def test_kmv_grouped_sample_is_deterministic(spark):
     rows = [("a", f"x{i}") for i in range(100)] + [
         ("b", f"y{i}") for i in range(40)
@@ -484,12 +409,11 @@ def test_kmv_grouped_sample_is_deterministic(spark):
 
 
 def test_sketch_artifacts_persist_and_merge_across_days(spark, tmp_path):
-    """The portability claim, end to end: every sketch is a plain
-    DataFrame artifact, so day-1 sketches WRITTEN TO PARQUET and read
-    back merge with day-2 sketches to exactly the sketch of the union
-    — the operational property Spark's approx_count_distinct state
-    cannot offer. Covers all four table sketches under their own
-    merge law (HLL/MAX, Bloom/bit_or, quantile/SUM, KMV/min-k)."""
+    """The portability claim, end to end: the HLL register table is a
+    plain DataFrame artifact, so day-1 registers WRITTEN TO PARQUET and
+    read back MAX-merge with day-2 registers to exactly the estimate of
+    the union — the operational property Spark's approx_count_distinct
+    state cannot offer."""
     from pyspark.sql import functions as F
 
     from yomitoku_spark.functions import sketch as SK
@@ -522,46 +446,5 @@ def test_sketch_artifacts_persist_and_merge_across_days(spark, tmp_path):
         for r in SK.hll_estimate(
             SK.hll_registers(both, F.col("tok"), ["lang"]), ["lang"]
         ).collect()
-    }
-    assert got == want
-
-    # Bloom: bit_or-merge (idempotent — day splits may overlap)
-    b1 = roundtrip(SK.bloom_build(day1, F.col("tok"), ["lang"]), "bl1")
-    b2 = SK.bloom_build(day2, F.col("tok"), ["lang"])
-    got = {
-        tuple(r)
-        for r in SK.bloom_merge(b1.unionByName(b2), ["lang"]).collect()
-    }
-    want = {
-        tuple(r) for r in SK.bloom_build(both, F.col("tok"), ["lang"]).collect()
-    }
-    assert got == want
-
-    # quantile buckets: SUM-merge (counter semantics)
-    q1 = roundtrip(SK.q_build(day1.select(
-        "lang", F.length("tok").alias("v")), F.col("v"), ["lang"]), "q1")
-    q2 = SK.q_build(day2.select(
-        "lang", F.length("tok").alias("v")), F.col("v"), ["lang"])
-    got = {
-        tuple(r) for r in SK.q_merge(q1.unionByName(q2), ["lang"]).collect()
-    }
-    want = {
-        tuple(r)
-        for r in SK.q_build(
-            both.select("lang", F.length("tok").alias("v")),
-            F.col("v"), ["lang"],
-        ).collect()
-    }
-    assert got == want
-
-    # KMV: min-k union (idempotent)
-    k1 = roundtrip(SK.kmv_build(day1, F.col("tok"), ["lang"], k=16), "k1")
-    k2 = SK.kmv_build(day2, F.col("tok"), ["lang"], k=16)
-    got = {
-        tuple(r)
-        for r in SK.kmv_merge(k1.unionByName(k2), ["lang"], k=16).collect()
-    }
-    want = {
-        tuple(r) for r in SK.kmv_build(both, F.col("tok"), ["lang"], k=16).collect()
     }
     assert got == want

@@ -3,13 +3,13 @@ module order: HyperLogLog (distinct counts), count-min (frequencies),
 Bloom (membership), log-linear buckets (quantiles), and bottom-k/KMV
 (deterministic uniform sample + a second distinct estimator). Each is
 a small DataFrame artifact built with ONE map-side-combined exchange,
-merges across shards/days/streams with its own law (MAX / SUM /
+merges across shards and days with its own law (MAX / SUM /
 bit_or / SUM / min-k union), and is integer-exact so a DuckDB referee
 replays it bit for bit.
 
 Spark ships ``approx_count_distinct``, but its register state is
 engine-internal: you cannot persist it, merge sketches built by
-different jobs/streams, or referee it from another engine. At 100 TB
+different jobs, or referee it from another engine. At 100 TB
 the MERGEABLE artifact is the point — per-shard register tables union
 with a ``MAX`` and the estimate is computed once at the end, so
 distinct counts compose across partitions, days, and pipelines without
@@ -40,7 +40,7 @@ Scale shape: building registers is ONE exchange keyed
 combine) collapses each task's contribution to ≤ m rows before the
 shuffle, so the exchange moves O(groups·m) rows regardless of corpus
 size. ``hll_merge`` is the same groupBy-MAX over unioned register
-tables (shards, days, streams). The estimate is a per-group fold over
+tables (shards, days). The estimate is a per-group fold over
 ≤ m rows.
 """
 
@@ -57,15 +57,15 @@ ALPHA_MICRO = {8: 718273}
 LN2_MICRO = 693147  # ln(2) in micro units
 
 
-def hll_bucket_rho(
+def hll_registers(
     df: DataFrame,
     value: Column,
     group_cols: list[str],
     p: int = 8,
 ) -> DataFrame:
-    """Stateless per-element (group_cols..., bucket, rho) rows — the
-    shared front half of the batch register build and the streaming
-    register state (`streaming.stream.stream_hll_registers`)."""
+    """Register table (group_cols..., bucket, rho) for the distinct
+    values of ``value`` within each group. Mergeable: union register
+    tables from any shards and pass through :func:`hll_merge`."""
     m = 1 << p
     wbits = 60 - p
     # h DIV m must be integer division: h is up to 2^60 and a double
@@ -78,22 +78,8 @@ def hll_bucket_rho(
     rho = F.when(F.col("w") == 0, F.lit(wbits + 1)).otherwise(
         F.lit(wbits + 1) - F.length(F.bin(F.col("w")))
     )
-    return d.select(*group_cols, "bucket", rho.cast("bigint").alias("rho"))
-
-
-def hll_registers(
-    df: DataFrame,
-    value: Column,
-    group_cols: list[str],
-    p: int = 8,
-) -> DataFrame:
-    """Register table (group_cols..., bucket, rho) for the distinct
-    values of ``value`` within each group. Mergeable: union register
-    tables from any shards and pass through :func:`hll_merge`."""
-    return (
-        hll_bucket_rho(df, value, group_cols, p=p)
-        .groupBy(*group_cols, "bucket")
-        .agg(F.max("rho").alias("rho"))
+    return d.groupBy(*group_cols, "bucket").agg(
+        F.max(rho.cast("bigint")).alias("rho")
     )
 
 
@@ -195,34 +181,11 @@ hest AS (SELECT {group_col}, n_nonzero, sum_rho,
 # count-min sketch (Cormode & Muthukrishnan 2005): mergeable frequency
 # sketch — d salted hash rows × w buckets of BIGINT counters. Same
 # design goals as the HLL above: the table is the artifact (d·w rows
-# per group, merges by SUM across shards/streams), every number is a
+# per group, merges by SUM across shards), every number is a
 # BIGINT, and the DuckDB referee replays build→query bit for bit.
 # Point estimates are upper bounds: est >= true count always, with
 # overestimate ~ 2·N/w at confidence 1 - (1/2)^d.
 # ------------------------------------------------------------------
-
-
-def cm_cells(
-    df: DataFrame,
-    value: Column,
-    group_cols: list[str],
-    depth: int = 4,
-    width: int = 1024,
-) -> DataFrame:
-    """Stateless per-occurrence (group_cols..., row, bucket) cell rows
-    — the shared front half of the batch build and the streaming
-    counter state (`streaming.stream.stream_cm_counters`)."""
-    d = df.select(*group_cols, value.alias("v")).withColumn(
-        "row", F.explode(F.array(*[F.lit(j) for j in range(depth)]))
-    )
-    bucket = (
-        hash64(F.concat_ws(":", F.col("row").cast("string"), F.col("v"))) % width
-    )
-    return d.select(
-        *group_cols,
-        F.col("row").cast("bigint").alias("row"),
-        bucket.cast("bigint").alias("bucket"),
-    )
 
 
 def cm_build(
@@ -237,19 +200,20 @@ def cm_build(
     with map-side partial SUM; the depth-fold explode happens before
     the combine, so the shuffle still moves ≤ depth·width rows per
     group per task."""
+    d = df.select(*group_cols, value.alias("v")).withColumn(
+        "row", F.explode(F.array(*[F.lit(j) for j in range(depth)]))
+    )
+    bucket = (
+        hash64(F.concat_ws(":", F.col("row").cast("string"), F.col("v"))) % width
+    )
     return (
-        cm_cells(df, value, group_cols, depth, width)
+        d.select(
+            *group_cols,
+            F.col("row").cast("bigint").alias("row"),
+            bucket.cast("bigint").alias("bucket"),
+        )
         .groupBy(*group_cols, "row", "bucket")
         .agg(F.count(F.lit(1)).cast("bigint").alias("cnt"))
-    )
-
-
-def cm_merge(sketch: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Merge count-min tables from shards/streams: per-cell SUM —
-    associative and commutative (NOT idempotent: shards must
-    partition the data, unlike the HLL MAX)."""
-    return sketch.groupBy(*group_cols, "row", "bucket").agg(
-        F.sum("cnt").alias("cnt")
     )
 
 
@@ -354,15 +318,6 @@ def bloom_build(
     return (
         cells.groupBy(*group_cols, "word")
         .agg(F.bit_or("mask").cast("bigint").alias("bits"))
-    )
-
-
-def bloom_merge(sketch: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Merge Bloom tables from shards/streams: per-word bit_or —
-    associative, commutative AND idempotent (set union, like the HLL
-    MAX; shards may overlap freely, unlike the count-min SUM)."""
-    return sketch.groupBy(*group_cols, "word").agg(
-        F.bit_or("bits").cast("bigint").alias("bits")
     )
 
 
@@ -482,24 +437,24 @@ def bloom_test(
 # id is monotone in v and the relative error of the bucket midpoint
 # is <= 2^-(s+1). The sketch is (group, bucket, cnt) rows — at most
 # (64 - s) * 2^s rows per group (~1.9k at the default s = 5) — built
-# with ONE map-side-combined exchange and merged across shards/days/
-# streams by SUM (counter semantics, like count-min; NOT idempotent).
+# with ONE map-side-combined exchange and merged across shards/days
+# by SUM (counter semantics, like count-min; NOT idempotent).
 # Quantile extraction is a per-group cumulative walk over the
 # bounded bucket rows with the rank rule r = (q_milli*(n-1)) DIV
 # 1000 + 1 (1-based r-th smallest), bit-replayable in DuckDB.
 # ------------------------------------------------------------------
 
 
-def q_bucket_rows(
+def q_build(
     df: DataFrame,
     value: Column,
     group_cols: list[str],
     sub_bits: int = 5,
 ) -> DataFrame:
-    """Stateless per-element (group_cols..., bucket) rows — the shared
-    front half of the batch bucket build and the streaming bucket
-    state (`streaming.stream.stream_q_buckets`). Values < 1 clamp to 1
-    so the bucket math is total."""
+    """Quantile-sketch bucket table (group_cols..., bucket, cnt) over
+    positive BIGINT ``value``. ONE exchange keyed (group, bucket) with
+    a map-side partial SUM. Values < 1 clamp to 1 so the bucket math
+    is total."""
     s = sub_bits
     src = df.select(
         *group_cols, F.greatest(value.cast("bigint"), F.lit(1)).alias("v")
@@ -515,28 +470,8 @@ def q_bucket_rows(
              + F.expr("shiftright(v, sh)")).cast("bigint"),
         )
     )
-    return d.select(*group_cols, "bucket")
-
-
-def q_build(
-    df: DataFrame,
-    value: Column,
-    group_cols: list[str],
-    sub_bits: int = 5,
-) -> DataFrame:
-    """Quantile-sketch bucket table (group_cols..., bucket, cnt) over
-    positive BIGINT ``value``. ONE exchange keyed (group, bucket) with
-    a map-side partial SUM."""
-    return q_bucket_rows(df, value, group_cols, sub_bits).groupBy(
-        *group_cols, "bucket"
-    ).agg(F.count("*").cast("bigint").alias("cnt"))
-
-
-def q_merge(sketch: DataFrame, group_cols: list[str]) -> DataFrame:
-    """Merge quantile sketches from shards/streams: per-bucket SUM
-    (counter semantics — shards must partition the data)."""
-    return sketch.groupBy(*group_cols, "bucket").agg(
-        F.sum("cnt").cast("bigint").alias("cnt")
+    return d.groupBy(*group_cols, "bucket").agg(
+        F.count("*").cast("bigint").alias("cnt")
     )
 
 
@@ -670,22 +605,6 @@ def kmv_build(
     gw = (W.partitionBy(*group_cols) if group_cols else W.partitionBy(F.lit(1)))
     return (
         d.withColumn("rank", F.row_number().over(gw.orderBy("h", "v")))
-        .filter(F.col("rank") <= k)
-        .select(*group_cols, F.col("rank").cast("bigint").alias("rank"), "h", "v")
-    )
-
-
-def kmv_merge(sketch: DataFrame, group_cols: list[str], k: int = 64) -> DataFrame:
-    """Merge bottom-k sketches from shards/streams: union, dedupe by
-    hash, keep the k smallest again — associative, commutative AND
-    idempotent (overlapping shards are harmless)."""
-    from pyspark.sql import Window as W
-
-    gw = (W.partitionBy(*group_cols) if group_cols else W.partitionBy(F.lit(1)))
-    return (
-        sketch.select(*group_cols, "h", "v")
-        .distinct()
-        .withColumn("rank", F.row_number().over(gw.orderBy("h", "v")))
         .filter(F.col("rank") <= k)
         .select(*group_cols, F.col("rank").cast("bigint").alias("rank"), "h", "v")
     )

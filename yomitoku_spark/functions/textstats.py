@@ -26,7 +26,6 @@ STOPWORDS = {
 }
 
 CJK_RE = "[\\u3040-\\u30ff\\u3400-\\u9fff]"
-PUNCT_RE = r"[^\w\s]"
 
 
 def tokens(col: Column) -> Column:
@@ -72,42 +71,6 @@ def stopword_count(col: Column, lang: str = "en") -> Column:
     regexp scan — equivalent to filtering the whitespace token array on
     membership, without re-tokenizing per language."""
     return F.regexp_count(F.lower(col), F.lit(_stopword_re(lang))).cast("bigint")
-
-
-def stopword_ratio(col: Column, lang: str = "en") -> Column:
-    return stopword_count(col, lang) / F.greatest(token_count(col), F.lit(1))
-
-
-def punct_ratio(col: Column) -> Column:
-    return F.length(F.regexp_replace(col, r"[\w\s]", "")) / F.greatest(
-        F.length(col), F.lit(1)
-    )
-
-
-def mean_word_len(col: Column) -> Column:
-    # summed token length == count of non-whitespace chars, so the mean
-    # needs no token array (pure codegen'd expressions)
-    total = F.length(F.regexp_replace(col, r"\s", ""))
-    return total / F.greatest(token_count(col), F.lit(1))
-
-
-def quality_score(col: Column) -> Column:
-    """Composite [0,1] quality heuristic (jusText-flavored): rewarded for
-    stopword presence and sane word lengths, penalized for punctuation
-    soup and trivial length."""
-    s = stopword_ratio(col)
-    p = punct_ratio(col)
-    wl = mean_word_len(col)
-    n = token_count(col)
-    return F.round(
-        F.least(F.lit(1.0), F.greatest(F.lit(0.0),
-            F.lit(0.4) * F.least(s * 4, F.lit(1.0))
-            + F.lit(0.3) * (F.lit(1.0) - F.least(p * 4, F.lit(1.0)))
-            + F.lit(0.2) * F.when((wl >= 3) & (wl <= 10), 1.0).otherwise(0.0)
-            + F.lit(0.1) * F.when(n >= 20, 1.0).otherwise(0.0)
-        )),
-        4,
-    )
 
 
 def lang_id(col: Column) -> Column:

@@ -11,9 +11,8 @@ columns processed in Arrow batches. Two codec tiers:
   payloads whose decoded stats are closed-form in the media id, so the
   encode→decode round trip is checkable by an independent SQL oracle.
 * Stubbed heavyweight codecs — JPEG/PNG/MP3/video (PIL / soundfile
-  class libraries absent from this container): ``use_stub=False``
-  raises ``NotImplementedError`` with the integration note;
-  ``use_stub=True`` substitutes a deterministic blake2b fake while the
+  class libraries absent from this container): the pixel resample in
+  :func:`resize_media` is a deterministic blake2b fake while the
   Spark-side plumbing (schema, batch shape, metadata validation,
   partitioning) stays real and tested.
 """
@@ -35,7 +34,6 @@ MEDIA_SCHEMA = (
     "meta struct<width:int, height:int, sample_rate:int, n_frames:int>"
 )
 
-FEATURE_DIM = 8
 MIN_SIDE = 32  # reference: constants.py:6-7 MIN_IMAGE_SIZE
 WARNING_SIDE = 720  # reference: constants.py:7 WARNING_IMAGE_SIZE
 
@@ -249,49 +247,10 @@ def validate_media(df: DataFrame) -> DataFrame:
     )
 
 
-def extract_features(df: DataFrame, use_stub: bool = True) -> DataFrame:
-    """Decode + featurize media payloads in Arrow batches.
-
-    Real decode is NOT available in this environment — with
-    ``use_stub=False`` this raises NotImplementedError (integration
-    point: PIL/torchvision for images, soundfile/torchaudio for audio).
-    The stub derives a deterministic FEATURE_DIM-float vector from the
-    payload bytes so downstream plumbing (schema, similarity joins,
-    partitioning) is exercised end-to-end."""
-    if not use_stub:
-        raise NotImplementedError(
-            "real media decode requires image/audio codecs (PIL / soundfile) "
-            "not present in this container; pass use_stub=True for the "
-            "deterministic fake-feature path"
-        )
-
-    def feats(batches):
-        for pdf in batches:
-            out_feats = []
-            for payload in pdf["payload"].tolist():
-                h = hashlib.blake2b(bytes(payload or b""), digest_size=FEATURE_DIM * 4).digest()
-                v = np.frombuffer(h, dtype=np.uint32).astype(np.float64)
-                v = (v / np.uint32(0xFFFFFFFF) * 2.0 - 1.0).astype(np.float32)
-                out_feats.append(v.tolist())
-            yield pd.DataFrame(
-                {
-                    "media_id": pdf["media_id"],
-                    "kind": pdf["kind"],
-                    "n_bytes": pdf["payload"].map(lambda b: len(b or b"")).astype("int64"),
-                    "features": out_feats,
-                }
-            )
-
-    return df.mapInPandas(
-        feats,
-        schema="media_id bigint, kind string, n_bytes bigint, features array<float>",
-    )
-
-
 def sample_frames(df: DataFrame, every_n: int = 30) -> DataFrame:
     """Video frame sampling plan: explode frame indices 0..n_frames-1
     step every_n (pure column expressions; the per-frame decode is the
-    same stubbed boundary as extract_features)."""
+    same stubbed codec boundary as resize_media)."""
     vids = df.filter(F.col("kind") == "video")
     return vids.select(
         "media_id",
@@ -301,21 +260,15 @@ def sample_frames(df: DataFrame, every_n: int = 30) -> DataFrame:
     )
 
 
-def resize_media(df: DataFrame, max_side: int = 720, use_stub: bool = True) -> DataFrame:
+def resize_media(df: DataFrame, max_side: int = 720) -> DataFrame:
     """Resize plan for image media: target dims fit within ``max_side``
     preserving aspect (the reference's load_image size policy —
     data/functions.py:33-78 validates ≥32 px and warns <720). The
     TARGET-DIMENSION math is integer column expressions (JVM-side);
     only the pixel resample crosses into the Arrow stub, which emits a
     deterministic blake2b digest of (payload, target dims) in place of
-    real pixels — the same documented codec boundary as
-    extract_features (no image libraries in this container;
-    ``use_stub=False`` raises)."""
-    if not use_stub:
-        raise NotImplementedError(
-            "real pixel resampling needs an image codec; this container "
-            "has none (documented stub boundary)"
-        )
+    real pixels — the documented codec boundary (no image libraries
+    in this container)."""
     imgs = df.filter(F.col("kind") == "image")
     w, h = F.col("meta.width"), F.col("meta.height")
     long_side = F.greatest(w, h)

@@ -62,32 +62,14 @@ def shingles(col: Column, n: int = 5) -> Column:
     return F.array_distinct(F.when(F.size(t) >= n, grams).otherwise(F.array(full)))
 
 
-def _perm_hash(j: int):
-    # NOTE: must be a single-argument lambda — a 2-arg lambda passed to
-    # F.transform is interpreted as (element, index) by PySpark.
-    prefix = f"{j}:"
-    return lambda s: hash64(F.concat(F.lit(prefix), s))
-
-
-def minhash_signature(col: Column, n_hashes: int = 16, shingle_n: int = 5) -> Column:
-    """MinHash signature: per permutation j, min over shingles of
-    hash64(j || shingle). Returns array<bigint> of length n_hashes.
-
-    The column-expression twin of :func:`minhash_signatures_arrow`,
-    which is what :func:`lsh_candidate_pairs` runs; tests hold the two
-    bit-identical."""
-    sh = shingles(col, shingle_n)
-    sig = [F.array_min(F.transform(sh, _perm_hash(j))) for j in range(n_hashes)]
-    return F.array(*sig)
-
-
 def minhash_signatures_arrow(
     df: DataFrame, id_col: str, text_col: str, n_hashes: int = 16, shingle_n: int = 5
 ) -> DataFrame:
-    """Arrow-batched MinHash signatures, bit-identical to
-    :func:`minhash_signature` (same md5('j:'||shingle) hex→int60
-    construction, evaluated with hashlib instead of interpreted
-    Catalyst higher-order expressions — ~5-10× faster per doc, and the
+    """Arrow-batched MinHash signatures: per permutation j, the min
+    over shingles of md5('j:'||shingle) hex→int60, evaluated with
+    hashlib instead of interpreted Catalyst higher-order expressions
+    (the column-expression twin in ``tests/test_operators.py`` holds
+    it bit-identical) — ~5-10× faster per doc, and the
     path you want at 10^9 documents)."""
     import hashlib
     import re

@@ -2,10 +2,10 @@
 
 Two tiers, per the scale plan:
 
-* ``brute_force_topk`` — exact top-k by cosine; the query side is
-  broadcast, the corpus side streams: one pass, no shuffle of the big
-  side. Right up to ~10^4 queries × any corpus size. The tests use it
-  as the float recall referee for the approximate paths.
+* ``brute_force_topk_quantized`` — exact top-k by quantized integer
+  dot, one matmul per Arrow batch against a broadcast corpus matrix.
+  The tests keep a float cosine top-k as the recall referee for the
+  approximate paths.
 * ``lsh_ann_topk_quantized`` — md5-sign LSH bucketing (Arrow-batched
   numpy matmul for signatures), candidates only within a bucket, then
   exact re-rank. The scale path: bucket join keeps candidate counts
@@ -21,31 +21,9 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
-
-
-def dot(a: Column, b: Column) -> Column:
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def norm(a: Column) -> Column:
-    return F.sqrt(
-        F.aggregate(
-            F.transform(a, lambda x: x.cast("double") * x.cast("double")),
-            F.lit(0.0),
-            lambda acc, x: acc + x,
-        )
-    )
-
-
-def cosine(a: Column, b: Column) -> Column:
-    return dot(a, b) / (norm(a) * norm(b))
 
 
 def _mat(s, dtype=np.float64) -> np.ndarray:
@@ -68,37 +46,9 @@ def _q_away(v: np.ndarray) -> np.ndarray:
     return (np.sign(v) * np.floor(np.abs(v) + 0.5)).astype(np.int64)
 
 
-def quantized_vecs(
-    df: DataFrame, id_col: str, vec_col: str, scale: int = 1000
-) -> DataFrame:
-    """(id, qv array<int>) — vectors pre-quantized ONCE at corpus grain
-    with the same half-away rounding as :func:`dot_quantized_arrow`. The
-    re-rank joins then ship 4-byte ints instead of 8-byte doubles per
-    component (half the exchange + Arrow bytes of the heaviest ANN
-    stage — guide §2.3 "narrower types"), and the pair-dot skips the
-    per-pair re-quantization. int32 is exact for |x|*scale < 2^31 —
-    far past any unit-ish embedding at the default scale."""
-
-    def qz(batches):
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            q = _q_away(_mat(pdf[vec_col]) * scale).astype(np.int32)
-            yield pd.DataFrame({"id": pdf[id_col].to_numpy(), "qv": list(q)})
-
-    # materialized ONCE: every consumer joins it on both pair sides
-    # (which prune differently — no exchange reuse), and the
-    # quantized table IS an index artifact like the sigs/assignment
-    # checkpoints (tests pin that no corpus-grain Python stage stays
-    # in the re-rank plan)
-    return df.select(id_col, vec_col).mapInPandas(
-        qz, schema="id bigint, qv array<int>"
-    ).localCheckpoint(eager=True)
-
-
 def dot_int_arrow():
-    """Integer dot over PRE-QUANTIZED int vectors (see
-    :func:`quantized_vecs`) — same int64 result as
+    """Integer dot over PRE-QUANTIZED int vectors (``_q_away(x*scale)``
+    as int32) — same int64 result as
     :func:`dot_quantized_arrow` on the raw vectors."""
 
     @F.pandas_udf("bigint")
@@ -125,31 +75,6 @@ def dot_quantized_arrow(scale: int = 1000):
         return pd.Series((qm * cm).sum(axis=1))
 
     return _dq
-
-
-def brute_force_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    k: int = 5,
-) -> DataFrame:
-    """Exact cosine top-k neighbors per query vector.
-
-    broadcast(queries) ⨯ corpus → cosine → rank-1..k window per query.
-    Excludes self-matches on id equality."""
-    c = corpus.select(
-        F.col(id_col).alias("corpus_id"), F.col(vec_col).alias("cvec")
-    )
-    q = queries.select(F.col(id_col).alias("query_id"), F.col(vec_col).alias("qvec"))
-    j = c.crossJoin(F.broadcast(q)).filter(F.col("corpus_id") != F.col("query_id"))
-    sim = cosine(F.col("cvec"), F.col("qvec")).alias("sim")
-    w = W.partitionBy("query_id").orderBy(F.desc("sim"), F.asc("corpus_id"))
-    return (
-        j.select("query_id", "corpus_id", sim)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
 
 
 def brute_force_topk_quantized(
@@ -309,7 +234,7 @@ def lsh_buckets_quantized(
     index side); probe=1..n_flip are query-side probes.
 
     ``with_qv=True`` additionally carries the pre-quantized int32
-    vector (bit-identical to :func:`quantized_vecs`) on each id's
+    vector (``_q_away(x*scale)`` as int32) on each id's
     (table 0, probe 0) row — the bucketing matmul already holds the
     quantized matrix, so the topk path gets its re-rank vector
     artifact from this single corpus pass instead of scanning and
@@ -614,8 +539,7 @@ def ivf_assign_probes(
     index-build registry row exposes exactly this artifact).
 
     ``with_qv=True`` additionally emits the pre-quantized int32 vector
-    (``qv`` — bit-identical to :func:`quantized_vecs`, which computes
-    the same ``_q_away(x*scale)``): the assignment matmul already HAS
+    (``qv`` — ``_q_away(x*scale)`` as int32): the assignment matmul already HAS
     the quantized matrix in hand, so the topk paths get their re-rank
     vector artifact from this single corpus pass instead of scanning
     and quantizing the corpus a second time (guide §2.4 — one pass,
@@ -689,47 +613,13 @@ def pq_codebooks(
     return mat.reshape(n, m, dim // m).transpose(1, 0, 2).copy()
 
 
-def pq_encode(
-    corpus: DataFrame,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    scale: int = 1000,
-) -> DataFrame:
-    """Encode every vector as m one-byte-ish codes: per subspace the
-    L2-nearest codebook entry over the QUANTIZED int64 subvectors
-    (exact integer squared distances; ties break to the lowest code,
-    the same first-min rule as everywhere else). Returns
-    (id, codes array<int>) — the 64-dim float vector becomes m=8 small
-    ints: the compressed representation candidate scoring rides on."""
-    mq, n_codes, d = codebooks.shape
-    cb = codebooks
-
-    def enc(batches):
-        for pdf in batches:
-            mat = _mat(pdf[vec_col])
-            if len(mat) == 0:
-                continue
-            q = _q_away(mat * scale).reshape(len(mat), mq, d)
-            # (n, m, n_codes) squared L2 per subspace
-            diff = q[:, :, None, :] - cb[None, :, :, :]
-            d2 = (diff * diff).sum(axis=3)
-            codes = np.argmin(d2, axis=2)  # first (lowest) min wins
-            yield pd.DataFrame(
-                {"id": pdf[id_col].to_numpy(), "codes": list(codes.astype(np.int32))}
-            )
-
-    return corpus.select(id_col, vec_col).mapInPandas(
-        enc, schema="id bigint, codes array<int>"
-    )
-
-
 def pq_encode_qv(ap: DataFrame, codebooks: np.ndarray) -> DataFrame:
-    """:func:`pq_encode` over an already-quantized (id, qv) artifact
-    (the :func:`ivf_assign_probes` ``with_qv=True`` checkpoint): same
-    integer L2 argmin per subspace, but reading the int32 vectors the
-    assignment pass already produced instead of re-scanning and
-    re-quantizing the corpus (guide §2.4 — the float corpus is read
+    """PQ codes over an already-quantized (id, qv) artifact (the
+    :func:`ivf_assign_probes` ``with_qv=True`` checkpoint): per subspace
+    the integer-L2-nearest codebook entry (ties break to the lowest
+    code, the same first-min rule as everywhere else), reading the
+    int32 vectors the assignment pass already produced instead of
+    re-scanning and re-quantizing the corpus (guide §2.4 — the float corpus is read
     once per query, by the assignment matmul)."""
     mq, _ncodes, d = codebooks.shape
     cb = codebooks

@@ -2,12 +2,11 @@
 
 Re-expressions of the reference's rectangle-geometry kernel
 (/root/reference/src/yomitoku/utils/misc.py:35-125 — overlap ratio,
-intersection, IoU, interval overlap) and its join/dedup patterns:
+intersection, interval overlap) and its join/dedup patterns:
 
-* containment join        — utils/misc.py:53-72 ``is_contained`` used as a
-  nested-loop predicate (document_analyzer.py:191-237 and friends)
-* argmax join             — word→best-cell assignment,
-  table_semantic_parser.py:471-499 (rank-1 window pattern)
+* containment predicate   — utils/misc.py:53-72 ``is_contained``, which
+  the reference uses as a nested-loop predicate
+  (document_analyzer.py:191-237 and friends)
 * contained-rect dedup    — layout_parser.py:28-58 (keep larger) /
   table_cell_detector.py:31-65 (keep smaller)
 * cross-category anti-join — layout_parser.py:61-74
@@ -20,7 +19,6 @@ broadcast the small side and survive a 100× scale-up.
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 
@@ -59,47 +57,6 @@ def vertical_aspect(a: str, ratio: int = 2) -> Column:
     return (F.col(f"{a}.y2") - F.col(f"{a}.y1")) > ratio * (
         F.col(f"{a}.x2") - F.col(f"{a}.x1")
     )
-
-
-def iou(a: str, b: str) -> Column:
-    """reference: utils/misc.py:182-201 ``calc_iou``."""
-    inter = overlap_area(a, b)
-    return inter / (box_area(a) + box_area(b) - inter)
-
-
-def containment_join(
-    outer: DataFrame, inner: DataFrame, threshold: float = 0.8, how: str = "inner"
-) -> DataFrame:
-    """Join inner boxes to the outer boxes that contain them.
-
-    Both sides must carry a ``box`` struct<x1,y1,x2,y2>. The smaller
-    side should be broadcast by the caller (Catalyst does it
-    automatically under the broadcast threshold)."""
-    o = outer.select(F.struct(*[F.col(c) for c in outer.columns]).alias("o"))
-    i = inner.select(F.struct(*[F.col(c) for c in inner.columns]).alias("i"))
-    pred = contains("o.box", "i.box", threshold)
-    return o.join(i, pred, how)
-
-
-def argmax_join(
-    left: DataFrame,
-    right: DataFrame,
-    on: Column,
-    score: Column,
-    left_key: list[str],
-    tiebreak: list[Column] | None = None,
-) -> DataFrame:
-    """Assign each left row its single best-scoring right match.
-
-    The canonical argmax-join (reference: word→best cell,
-    table_semantic_parser.py:471-499): theta join → rank-1 window.
-    ``tiebreak`` columns make the pick total/deterministic (the
-    reference relies on stable Python sort order; Spark must order
-    explicitly — SURVEY.md §7.3)."""
-    j = left.join(right, on, "inner")
-    order = [score.desc()] + [t.asc() for t in (tiebreak or [])]
-    w = W.partitionBy(*left_key).orderBy(*order)
-    return j.withColumn("__rk", F.row_number().over(w)).filter(F.col("__rk") == 1).drop("__rk")
 
 
 def cover_cells(box: str, cell: int) -> Column:

@@ -27,8 +27,8 @@ unit-span cells' extents (row line r = the bounding box of cells with
 ``row == r, row_span == 1``) — the same lines grid recovery clustered.
 
 Everything is an equi-join on (doc_id[, table_id]) plus integer
-column arithmetic — no Python in the plan; the scalar twin below backs
-the hypothesis parity test, and the registry query
+column arithmetic — no Python in the plan; the scalar twin in
+``tests/test_grid.py`` backs the hypothesis parity test, and the registry query
 ``split_words_across_cells`` carries a DuckDB referee.
 
 A word ≥0.5-contained in TWO overlapping tables is split independently
@@ -166,57 +166,3 @@ def split_words_across_cells(words: DataFrame, cells: DataFrame) -> DataFrame:
 
 # ---------------------------------------------------------------- scalar
 # Independent stdlib twin (hypothesis parity in tests/test_grid.py).
-
-
-def split_words_scalar(word_box, cells) -> list[tuple[str, tuple]]:
-    """cells: list of dicts {cell_id, row, col, row_span, col_span,
-    box}. Returns [(part_cell_id_or_'', piece_box), ...] for ONE word
-    against ONE table's cells."""
-    wx1, wy1, wx2, wy2 = word_box
-    tx1 = min(c["box"][0] for c in cells)
-    ty1 = min(c["box"][1] for c in cells)
-    tx2 = max(c["box"][2] for c in cells)
-    ty2 = max(c["box"][3] for c in cells)
-    ow = max(min(tx2, wx2) - max(tx1, wx1), 0)
-    oh = max(min(ty2, wy2) - max(ty1, wy1), 0)
-    if ow * oh * CONTAIN_NUM <= (wx2 - wx1) * (wy2 - wy1):
-        return [("", word_box)]
-    vertical = (wy2 - wy1) > 2 * (wx2 - wx1)
-    axis, span_key = ("col", "col_span") if vertical else ("row", "row_span")
-
-    lines: dict[int, list[int]] = {}
-    for c in cells:
-        if c[span_key] != 1:
-            continue
-        b = c["box"]
-        cur = lines.get(c[axis])
-        if cur is None:
-            lines[c[axis]] = list(b)
-        else:
-            cur[0] = min(cur[0], b[0])
-            cur[1] = min(cur[1], b[1])
-            cur[2] = max(cur[2], b[2])
-            cur[3] = max(cur[3], b[3])
-    if not lines:
-        return []
-    best, best_ov = None, -1
-    for idx in sorted(lines):
-        lx1, ly1, lx2, ly2 = lines[idx]
-        ov = max(min(lx2, wx2) - max(lx1, wx1), 0) * max(
-            min(ly2, wy2) - max(ly1, wy1), 0
-        )
-        if ov > best_ov:
-            best, best_ov = idx, ov
-    out = []
-    for c in sorted(cells, key=lambda c: c["cell_id"]):
-        if not (c[axis] <= best < c[axis] + c[span_key]):
-            continue
-        cx1, cy1, cx2, cy2 = c["box"]
-        ix1, iy1 = max(wx1, cx1), max(wy1, cy1)
-        ix2, iy2 = min(wx2, cx2), min(wy2, cy2)
-        if ix1 >= ix2 or iy1 >= iy2:
-            continue
-        piece = (wx1, iy1, wx2, iy2) if vertical else (ix1, wy1, ix2, wy2)
-        if piece[2] - piece[0] >= NOISE_TH and piece[3] - piece[1] >= NOISE_TH:
-            out.append((c["cell_id"], piece))
-    return out

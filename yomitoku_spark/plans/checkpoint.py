@@ -15,7 +15,7 @@ metric rows. Design:
   count, row count, metric sums (blocks kept/dropped, chars emitted —
   observed on the write's own pass, exactly-once per committed
   partition), an attempt timestamp, and a lineage string (code
-  version + input id);
+  version + a digest of the sorted input file list);
 * on restart, done buckets are skipped and only the remainder runs; a
   restart with another bucket count is refused.
 
@@ -29,6 +29,7 @@ cli/main.py:538-549; resumability is what 10^12 turns forces.)
 
 from __future__ import annotations
 
+import hashlib
 import os
 import time
 
@@ -82,7 +83,6 @@ def run_resumable(
     n_buckets: int = 32,
     wave_size: int = 8,
     max_waves: int | None = None,
-    lineage: str = "",
 ) -> int:
     """Run extraction bucket-wave by bucket-wave, checkpointing after
     each wave. Returns the number of buckets processed this invocation.
@@ -104,7 +104,8 @@ def run_resumable(
         raise ValueError(f"cannot resume {output_dir}: its result is partitioned by bucket; "
                          "restart into a fresh output directory")
     todo = sorted(set(range(n_buckets)) - {r.bucket for r in done})
-    lineage = lineage or f"yomitoku_spark-{__version__}"
+    files = "\n".join(sorted(transcripts.inputFiles())).encode()
+    lineage = f"yomitoku_spark-{__version__} input:{hashlib.sha256(files).hexdigest()[:16]}"
 
     bucketed = transcripts.withColumn("bucket", _bucket_expr(n_buckets))
     # n_turns and the metric sums, in STATE_SCHEMA order

@@ -25,8 +25,6 @@ the image XObject is the single piece that would need a codec).
 
 from __future__ import annotations
 
-import re
-
 
 def _num(v: float) -> str:
     """PDF number: trim trailing zeros, keep 2 decimals max."""
@@ -195,47 +193,3 @@ def render_searchable_pdf(layer, page_sizes: dict[int, tuple[float, float]],
     with open(output_path, "wb") as f:
         f.write(data)
     return len(pages)
-
-
-# ------------------------------------------------- round-trip helpers
-
-def parse_xref(data: bytes) -> dict[int, int]:
-    """Parse the xref table; verify every in-use offset lands on its
-    'N 0 obj' header. Returns {obj_no: offset}; raises on corruption."""
-    m = re.search(rb"startxref\s+(\d+)\s+%%EOF", data)
-    if not m:
-        raise ValueError("missing startxref")
-    pos = int(m.group(1))
-    if not data[pos:].startswith(b"xref"):
-        raise ValueError("startxref does not point at the xref table")
-    header = re.match(rb"xref\s+(\d+)\s+(\d+)\s*\n", data[pos:])
-    first, count = int(header.group(1)), int(header.group(2))
-    table_at = pos + header.end()
-    out = {}
-    for i in range(count):
-        entry = data[table_at + 20 * i: table_at + 20 * (i + 1)]
-        off, _gen, kind = entry.split()
-        if kind == b"n":
-            objno = first + i
-            off = int(off)
-            if not data[off:].startswith(f"{objno} 0 obj".encode()):
-                raise ValueError(f"xref offset of obj {objno} is wrong")
-            out[objno] = off
-    return out
-
-
-def extract_text(data: bytes) -> list[tuple[str, float]]:
-    """Pull (text, font_size) spans back out of the content streams —
-    decode the Identity-H hex operands as UTF-16BE. Consecutive
-    single-char rotated draws are NOT merged (callers join them)."""
-    spans = []
-    for stream in re.findall(rb"stream\n(.*?)\nendstream", data, re.DOTALL):
-        try:
-            txt = stream.decode("ascii")
-        except UnicodeDecodeError:
-            continue
-        for size, hexstr in re.findall(
-            r"/F1 ([0-9.]+) Tf.*?<([0-9A-F]*)> Tj", txt
-        ):
-            spans.append((bytes.fromhex(hexstr).decode("utf-16-be"), float(size)))
-    return spans

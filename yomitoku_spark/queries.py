@@ -1195,8 +1195,8 @@ def kmv_overlap_langs(spark, sf_dir):
     synopses for distinct-value estimation"): the token-set overlap
     of every language PAIR — Jaccard, intersection size, union size —
     estimated from the two k=64 bottom-k sketches ALONE. Per pair:
-    union the two sketches, re-rank, keep the k smallest (exactly
-    `sketch.kmv_merge` — the union sketch), then m = how many of
+    union the two sketches, re-rank, keep the k smallest (the union
+    sketch), then m = how many of
     those k appear in BOTH sides gives jaccard ~= m/k and
     |A ∩ B| ~= (m/k) * union_est. The corpus is touched ONCE (the
     distinct (lang, tok) exchange inside kmv_build); all pair math
@@ -2231,8 +2231,8 @@ FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
 
 def embedding_topk(spark, sf_dir):
     """Brute-force top-3 neighbors per vector by quantized dot product
-    (integer-exact across engines; the float cosine twin,
-    ``similarity.brute_force_topk``, is the tests' recall referee)."""
+    (integer-exact across engines; the float cosine twin in
+    ``tests/test_operators.py`` is the tests' recall referee)."""
     e = t(spark, sf_dir, "embeddings")
     return SIM.brute_force_topk_quantized(e, e, "vec_id", "embedding", k=3, scale=1000)
 

@@ -46,29 +46,3 @@ def write_result(result: DataFrame, path: str) -> None:
     result.repartitionByRange("conv_id", "turn_idx").sortWithinPartitions(
         "conv_id", "turn_idx"
     ).write.mode("overwrite").parquet(path)
-
-
-def write_bucketed(
-    df: DataFrame, table: str, keys: list[str], n_buckets: int = 16
-) -> None:
-    """Persist a table bucketed (and sorted) by ``keys`` so later
-    equi-joins and aggregations on those keys are CO-LOCATED — the scan
-    reports the bucketing to Catalyst and the join plans with no
-    Exchange on either bucketed side (SURVEY §4: pre-shuffled layout is
-    the 100 TB lever for repeated joins; the cluster analog is an
-    Iceberg/Hive bucketed table). Spark bucketing requires the table
-    catalog (saveAsTable), not a bare path."""
-    (
-        df.write.mode("overwrite")
-        .format("parquet")
-        .bucketBy(n_buckets, *keys)
-        .sortBy(*keys)
-        .saveAsTable(table)
-    )
-
-
-def bucketed_join(spark: SparkSession, left: str, right: str, keys: list[str]) -> DataFrame:
-    """Join two same-bucketed catalog tables on their bucket keys —
-    shuffle-free by construction (tests assert the plan has zero
-    Exchange nodes)."""
-    return spark.table(left).join(spark.table(right), keys)
