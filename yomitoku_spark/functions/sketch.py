@@ -78,8 +78,10 @@ def hll_registers(
     rho = F.when(F.col("w") == 0, F.lit(wbits + 1)).otherwise(
         F.lit(wbits + 1) - F.length(F.bin(F.col("w")))
     )
-    return d.groupBy(*group_cols, "bucket").agg(
-        F.max(rho.cast("bigint")).alias("rho")
+    return (
+        d.select(*group_cols, "bucket", rho.cast("bigint").alias("rho"))
+        .groupBy(*group_cols, "bucket")
+        .agg(F.max("rho").alias("rho"))
     )
 
 

@@ -539,7 +539,7 @@ def ivf_assign_probes(
     index-build registry row exposes exactly this artifact).
 
     ``with_qv=True`` additionally emits the pre-quantized int32 vector
-    (``qv`` — ``_q_away(x*scale)`` as int32): the assignment matmul already HAS
+    (``qv`` — ``_q_away(x*scale)``): the assignment matmul already HAS
     the quantized matrix in hand, so the topk paths get their re-rank
     vector artifact from this single corpus pass instead of scanning
     and quantizing the corpus a second time (guide §2.4 — one pass,
@@ -619,8 +619,8 @@ def pq_encode_qv(ap: DataFrame, codebooks: np.ndarray) -> DataFrame:
     the integer-L2-nearest codebook entry (ties break to the lowest
     code, the same first-min rule as everywhere else), reading the
     int32 vectors the assignment pass already produced instead of
-    re-scanning and re-quantizing the corpus (guide §2.4 — the float corpus is read
-    once per query, by the assignment matmul)."""
+    re-scanning and re-quantizing the corpus (guide §2.4 — the float
+    corpus is read once per query, by the assignment matmul)."""
     mq, _ncodes, d = codebooks.shape
     cb = codebooks
 

@@ -28,8 +28,8 @@ unit-span cells' extents (row line r = the bounding box of cells with
 
 Everything is an equi-join on (doc_id[, table_id]) plus integer
 column arithmetic — no Python in the plan; the scalar twin in
-``tests/test_grid.py`` backs the hypothesis parity test, and the registry query
-``split_words_across_cells`` carries a DuckDB referee.
+``tests/test_grid.py`` backs the hypothesis parity test, and the
+registry query ``split_words_across_cells`` carries a DuckDB referee.
 
 A word ≥0.5-contained in TWO overlapping tables is split independently
 in each — the same behavior as the reference, whose per-table loop
@@ -162,7 +162,3 @@ def split_words_across_cells(words: DataFrame, cells: DataFrame) -> DataFrame:
         F.col("wx2").alias("x2"), F.col("wy2").alias("y2"),
     )
     return pieces.unionByName(passthrough)
-
-
-# ---------------------------------------------------------------- scalar
-# Independent stdlib twin (hypothesis parity in tests/test_grid.py).
