@@ -6,10 +6,12 @@ the IDENTICAL materialized input at local[N] and local[4N], with
 N = max(1, cores // 4) from the host's usable cores (the count Spark's
 ``local[*]`` sizes from), so 4N never oversubscribes the host
 (BASELINE.md's sanctioned plan). Each level runs in its own process
-(fresh JVM). Reports wall time, turns/sec, scaling efficiency
-E = (T_N / T_4N) / 4, and a content checksum that must match across
-levels AND match the pure-Python oracle (per-turn equality evidence at
-bench scale).
+(fresh JVM) pinned to the first N (resp. 4N) usable cores, so a level
+is N cores of work and not N task slots with idle cores helping the
+driver JVM's GC/JIT threads and the Python worker. Reports wall time,
+turns/sec, scaling efficiency E = (T_N / T_4N) / 4, and a content
+checksum that must match across levels AND match the pure-Python
+oracle (per-turn equality evidence at bench scale).
 
 Usage:  python bench_scaling.py [--n-convs 12000] [--out BENCH/BASELINE.md]
 Child:  python bench_scaling.py --child CPUS INPUT_DIR
@@ -52,6 +54,9 @@ def child(cpus: int, input_dir: str) -> None:
     from yomitoku_spark.plans.pipeline import extract
     from yomitoku_spark.session import engine_conf, get_spark
 
+    # a level is `cpus` cores: pin before the JVM starts, so the JVM and
+    # its Python workers inherit the mask
+    os.sched_setaffinity(0, sorted(os.sched_getaffinity(0))[:cpus])
     # Pin the collector: G1 with a bounded pause target and a fixed heap
     # (Xms == Xmx == the engine's heap), after the engine's own flags — the
     # local[32] wall-time outliers (30 s max in earlier runs) are full-heap
@@ -107,6 +112,7 @@ def child(cpus: int, input_dir: str) -> None:
         json.dumps(
             {
                 "cpus": cpus,
+                "affinity": sorted(os.sched_getaffinity(0)),
                 "heap": conf["spark.driver.memory"],
                 "n_turns": int(n_turns),
                 "wall_sec": round(wall, 3),
@@ -185,7 +191,8 @@ Job: fused extraction (`yomitoku_spark.extract`) over the deterministic
 synthetic transcripts table (seed=42, {n_convs} conversations,
 {r_lo['n_turns']} turns, one 12× skewed conversation), materialized once
 to parquet and read identically by both runs. Each parallelism level is
-a fresh JVM; timing is best-of-N full passes after one or two untimed
+a fresh JVM pinned (`os.sched_setaffinity`) to one usable core per
+task slot ({r_lo['affinity']} and {r_hi['affinity']}); timing is best-of-N full passes after one or two untimed
 warm-up passes (`tools/measure.py`). Host: {n_cores} usable cores, so
 N = {lo} and 4N = {hi} (N = max(1, cores // 4)).
 
@@ -224,6 +231,8 @@ the tables below let a reader match every slow rep to its cause.
 - {m_hi} per-rep steal%: {r_hi.get('steal_pcts')}
 - {m_lo} per-rep driver-JVM GC ms: {r_lo.get('gc_ms_per_rep')}
 - {m_hi} per-rep driver-JVM GC ms: {r_hi.get('gc_ms_per_rep')}
+- {m_lo} per-rep 1-min loadavg: {r_lo['loadavgs']}
+- {m_hi} per-rep 1-min loadavg: {r_hi['loadavgs']}
 - {m_lo} walls: {r_lo['all_walls']}
 - {m_hi} walls: {r_hi['all_walls']}
 - {m_lo} outlier reps: {json.dumps(r_lo.get('outlier_evidence') or 'none')}

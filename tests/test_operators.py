@@ -147,9 +147,7 @@ def cosine(a: Column, b: Column) -> Column:
     return dot(a, b) / (norm(a) * norm(b))
 
 
-def quantized_vecs(
-    df: DataFrame, id_col: str, vec_col: str, scale: int = 1000
-) -> DataFrame:
+def quantized_vecs(df: DataFrame, id_col: str, vec_col: str) -> DataFrame:
     """(id, qv array<int>) — each vector quantized on its own with the
     half-away rounding of :func:`SIM.dot_quantized_arrow`: the referee of
     the ``with_qv=True`` artifacts the index passes emit."""
@@ -158,7 +156,7 @@ def quantized_vecs(
         for pdf in batches:
             if len(pdf) == 0:
                 continue
-            q = _q_away(_mat(pdf[vec_col]) * scale).astype(np.int32)
+            q = _q_away(_mat(pdf[vec_col]) * SIM.Q_SCALE).astype(np.int32)
             yield pd.DataFrame({"id": pdf[id_col].to_numpy(), "qv": list(q)})
 
     return df.select(id_col, vec_col).mapInPandas(qz, schema="id bigint, qv array<int>")
@@ -194,7 +192,6 @@ def pq_encode(
     codebooks: np.ndarray,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    scale: int = 1000,
 ) -> DataFrame:
     """Encode every vector as m one-byte-ish codes: per subspace the
     L2-nearest codebook entry over the QUANTIZED int64 subvectors
@@ -210,7 +207,7 @@ def pq_encode(
             mat = _mat(pdf[vec_col])
             if len(mat) == 0:
                 continue
-            q = _q_away(mat * scale).reshape(len(mat), mq, d)
+            q = _q_away(mat * SIM.Q_SCALE).reshape(len(mat), mq, d)
             # (n, m, n_codes) squared L2 per subspace
             diff = q[:, :, None, :] - cb[None, :, :, :]
             d2 = (diff * diff).sum(axis=3)
@@ -249,7 +246,7 @@ def test_brute_force_topk_matches_numpy(spark, emb):
 
 def test_quantized_topk_matches_sql_semantics(spark, emb):
     sub = emb.limit(30)
-    got = SIM.brute_force_topk_quantized(sub, sub, k=2, scale=1000).collect()
+    got = SIM.brute_force_topk_quantized(sub, sub, k=2).collect()
     rows = sub.select("vec_id", "embedding").collect()
     ids = np.array([r.vec_id for r in rows])
     q = np.rint(np.array([r.embedding for r in rows], dtype=np.float64) * 1000).astype(
@@ -600,6 +597,33 @@ def test_label_propagation_equals_union_find(spark, monkeypatch):
     assert {r.node: r.label for r in CC.label_propagation(edf).collect()} == uf
 
 
+# a 5,000-node chain whose edges arrive in descending id order: each
+# union links the old root below the new smaller one, so the parent path
+# from 5000 is 4,999 links deep, past Python's recursion limit
+_DESCENDING_CHAIN = [(i, i + 1) for i in range(4999, 0, -1)]
+
+
+def test_union_find_descending_chain():
+    from yomitoku_spark.operators.components import UnionFind
+
+    uf = UnionFind()
+    for a, b in _DESCENDING_CHAIN:
+        uf.union(a, b)
+    assert uf.find(5000) == 1
+    assert {uf.find(n) for n in range(1, 5001)} == {1}
+
+
+def test_label_propagation_descending_chain(spark):
+    """The same chain through label_propagation's small-graph path: one
+    partition keeps the descending arrival order into the union-find
+    that runs inside the Python worker."""
+    from yomitoku_spark.operators import components as CC
+
+    edf = spark.createDataFrame(_DESCENDING_CHAIN, "src bigint, dst bigint").coalesce(1)
+    got = {r.node: r.label for r in CC.label_propagation(edf).collect()}
+    assert got == {n: 1 for n in range(1, 5001)}
+
+
 def test_label_propagation_small_graph_shortcut(spark, monkeypatch):
     """The size-based strategy pick (r7 optimization: one union-find
     task instead of the sweep loop when the materialized edge list is
@@ -760,7 +784,7 @@ def test_semdedup_keepers_invariants(spark, emb):
     assert set(out) == {r.vec_id for r in rows}
 
     q = {
-        r.vec_id: SIM._q_away(np.asarray(r.cvec, dtype=np.float64) * 1000)
+        r.vec_id: SIM._q_away(np.asarray(r.cvec, dtype=np.float64) * SIM.Q_SCALE)
         for r in rows
     }
     by_cell: dict = {}

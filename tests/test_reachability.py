@@ -13,8 +13,10 @@ tests call is a referee and lives in the test beside its twin test.
 * Edges: names, attributes and import aliases, resolved through
   re-exports; an attribute on anything but an imported module matches
   every definition of that name. Identifier tokens inside string
-  literals that are not docstrings count as uses too, so string
-  dispatch (registry keys, ``getattr``) is followed.
+  literals that are not docstrings count as uses of the definitions of
+  the module holding the string, so in-module string dispatch
+  (``getattr``, SQL text naming a helper) is followed, while a registry
+  key or SQL column elsewhere that shares a name keeps nothing alive.
 """
 
 from __future__ import annotations
@@ -176,9 +178,8 @@ def scan() -> tuple[set[str], set[str]]:
                     continue
                 out |= by_name.get(n.attr, set())
             elif isinstance(n, ast.Constant) and isinstance(n.value, str) \
-                    and id(n) not in m.docs:
-                for tok in IDENT.findall(n.value):
-                    out |= by_name.get(tok, set())
+                    and id(n) not in m.docs and m.name in lib:
+                out |= {(m.name, tok) for tok in IDENT.findall(n.value) if tok in m.defs}
         return out
 
     edges, roots = {}, set()

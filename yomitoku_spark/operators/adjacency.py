@@ -6,14 +6,14 @@ Re-expression of the reference's adjacency kernel
 point-to-segment distances of utils/misc.py:208-268). Semantics:
 
 * direction gate   — B starts right of (below) A's leading edge
-* overlap gate     — ≥ ``overlap_ratio`` of the smaller extent overlaps
-  on the perpendicular axis
+* overlap gate     — ≥ ``OVERLAP_PERMILLE``/1000 of the smaller extent
+  overlaps on the perpendicular axis
 * corner-veto gate — the two *crossing* corner pairs must not be closer
-  than ``ignore_dist`` (a box diagonally touching at a corner is not a
-  neighbor)
+  than ``IGNORE_DIST_TH`` (a box diagonally touching at a corner is not
+  a neighbor)
 * rule             — ``soft``: any of the four edge-to-edge distances
-  (max of a corner-to-segment pair each) under ``dist``; ``hard``: both
-  aligned corner pairs under ``dist`` (1:1 joins only); ``nest``: the
+  (max of a corner-to-segment pair each) under ``DIST_TH``; ``hard``:
+  both aligned corner pairs under ``DIST_TH`` (1:1 joins only); ``nest``: the
   d3 distance only (child-of-nest); ``child``: nest-but-not-hard.
 
 Everything is computed on SQUARED integer distances (d < t ⟺ d² < t²
@@ -39,6 +39,8 @@ from pyspark.sql import functions as F
 DIST_TH = 15
 OVERLAP_PERMILLE = 100  # 0.1
 IGNORE_DIST_TH = 10
+# the rules compare SQUARED distances against these
+_T2, _IG2 = DIST_TH * DIST_TH, IGNORE_DIST_TH * IGNORE_DIST_TH
 
 # ---------------------------------------------------------------- column
 
@@ -87,27 +89,23 @@ def right_adjacent(
     a: str,
     b: str,
     rule: str = "soft",
-    dist: int = DIST_TH,
-    overlap_permille: int = OVERLAP_PERMILLE,
-    ignore_dist: int = IGNORE_DIST_TH,
 ) -> Column:
     """True when box ``b`` sits immediately right of box ``a``
     (reference utils/misc.py:299-352). ``a``/``b`` are struct-column
     prefixes with integer x1,y1,x2,y2 fields."""
     ax1, ay1, ax2, ay2 = _box(a)
     bx1, by1, bx2, by2 = _box(b)
-    t2, ig2 = dist * dist, ignore_dist * ignore_dist
 
     direction = bx1 >= ax1
     # clamped at 0 like the reference's overlap_interval (misc.py:270-274):
     # a zero-extent smaller box passes the gate (0 >= th*0) even when the
     # intervals are disjoint
     overlap_y = F.greatest(F.least(ay2, by2) - F.greatest(ay1, by1), F.lit(0))
-    overlap_ok = overlap_y.cast("bigint") * 1000 >= overlap_permille * F.least(
+    overlap_ok = overlap_y.cast("bigint") * 1000 >= OVERLAP_PERMILLE * F.least(
         ay2 - ay1, by2 - by1
     ).cast("bigint")
-    corner_ok = (_d2_pp(ax2, ay2, bx1, by1) >= ig2) & (
-        _d2_pp(ax2, ay1, bx1, by2) >= ig2
+    corner_ok = (_d2_pp(ax2, ay2, bx1, by1) >= _IG2) & (
+        _d2_pp(ax2, ay1, bx1, by2) >= _IG2
     )
 
     e1 = _d2_p_vseg(ax2, ay1, bx1, by1, by2)
@@ -120,13 +118,13 @@ def right_adjacent(
         F.greatest(e3, e4),
         F.greatest(e1, e2),
     )
-    hard = (_d2_pp(ax2, ay1, bx1, by1) < t2) & (_d2_pp(ax2, ay2, bx1, by2) < t2)
+    hard = (_d2_pp(ax2, ay1, bx1, by1) < _T2) & (_d2_pp(ax2, ay2, bx1, by2) < _T2)
     if rule == "hard":
         ok = hard
     elif rule == "soft":
-        ok = (d1 < t2) | (d2 < t2) | (d3 < t2) | (d4 < t2)
+        ok = (d1 < _T2) | (d2 < _T2) | (d3 < _T2) | (d4 < _T2)
     elif rule == "nest":
-        ok = d3 < t2
+        ok = d3 < _T2
     else:
         raise ValueError(f"unknown right-adjacency rule {rule!r}")
     return direction & overlap_ok & corner_ok & ok
@@ -136,24 +134,20 @@ def bottom_adjacent(
     a: str,
     b: str,
     rule: str = "soft",
-    dist: int = DIST_TH,
-    overlap_permille: int = OVERLAP_PERMILLE,
-    ignore_dist: int = IGNORE_DIST_TH,
 ) -> Column:
     """True when box ``b`` sits immediately below box ``a``
     (reference utils/misc.py:355-427; includes the ``child`` rule =
     nest-but-not-1:1)."""
     ax1, ay1, ax2, ay2 = _box(a)
     bx1, by1, bx2, by2 = _box(b)
-    t2, ig2 = dist * dist, ignore_dist * ignore_dist
 
     direction = by1 >= ay1
     overlap_x = F.greatest(F.least(ax2, bx2) - F.greatest(ax1, bx1), F.lit(0))
-    overlap_ok = overlap_x.cast("bigint") * 1000 >= overlap_permille * F.least(
+    overlap_ok = overlap_x.cast("bigint") * 1000 >= OVERLAP_PERMILLE * F.least(
         ax2 - ax1, bx2 - bx1
     ).cast("bigint")
-    corner_ok = (_d2_pp(ax2, ay2, bx1, by1) >= ig2) & (
-        _d2_pp(ax1, ay2, bx2, by1) >= ig2
+    corner_ok = (_d2_pp(ax2, ay2, bx1, by1) >= _IG2) & (
+        _d2_pp(ax1, ay2, bx2, by1) >= _IG2
     )
 
     e1 = _d2_p_hseg(ax1, ay2, by1, bx1, bx2)
@@ -166,15 +160,15 @@ def bottom_adjacent(
         F.greatest(e3, e4),
         F.greatest(e1, e2),
     )
-    hard = (_d2_pp(ax1, ay2, bx1, by1) < t2) & (_d2_pp(ax2, ay2, bx2, by1) < t2)
+    hard = (_d2_pp(ax1, ay2, bx1, by1) < _T2) & (_d2_pp(ax2, ay2, bx2, by1) < _T2)
     if rule == "hard":
         ok = hard
     elif rule == "soft":
-        ok = (d1 < t2) | (d2 < t2) | (d3 < t2) | (d4 < t2)
+        ok = (d1 < _T2) | (d2 < _T2) | (d3 < _T2) | (d4 < _T2)
     elif rule == "nest":
-        ok = d3 < t2
+        ok = d3 < _T2
     elif rule == "child":
-        ok = ~hard & (d3 < t2)
+        ok = ~hard & (d3 < _T2)
     else:
         raise ValueError(f"unknown bottom-adjacency rule {rule!r}")
     return direction & overlap_ok & corner_ok & ok
@@ -204,19 +198,15 @@ def right_adjacent_scalar(
     box_a,
     box_b,
     rule: str = "soft",
-    dist: int = DIST_TH,
-    overlap_permille: int = OVERLAP_PERMILLE,
-    ignore_dist: int = IGNORE_DIST_TH,
 ) -> bool:
     ax1, ay1, ax2, ay2 = box_a
     bx1, by1, bx2, by2 = box_b
-    t2, ig2 = dist * dist, ignore_dist * ignore_dist
     if bx1 < ax1:
         return False
     overlap_y = max(min(ay2, by2) - max(ay1, by1), 0)
-    if overlap_y * 1000 < overlap_permille * min(ay2 - ay1, by2 - by1):
+    if overlap_y * 1000 < OVERLAP_PERMILLE * min(ay2 - ay1, by2 - by1):
         return False
-    if _s_d2_pp(ax2, ay2, bx1, by1) < ig2 or _s_d2_pp(ax2, ay1, bx1, by2) < ig2:
+    if _s_d2_pp(ax2, ay2, bx1, by1) < _IG2 or _s_d2_pp(ax2, ay1, bx1, by2) < _IG2:
         return False
     e1 = _s_d2_p_vseg(ax2, ay1, bx1, by1, by2)
     e2 = _s_d2_p_vseg(ax2, ay2, bx1, by1, by2)
@@ -224,11 +214,11 @@ def right_adjacent_scalar(
     e4 = _s_d2_p_vseg(bx1, by2, ax2, ay1, ay2)
     d1, d2, d3, d4 = max(e1, e4), max(e2, e3), max(e3, e4), max(e1, e2)
     if rule == "hard":
-        return _s_d2_pp(ax2, ay1, bx1, by1) < t2 and _s_d2_pp(ax2, ay2, bx1, by2) < t2
+        return _s_d2_pp(ax2, ay1, bx1, by1) < _T2 and _s_d2_pp(ax2, ay2, bx1, by2) < _T2
     if rule == "soft":
-        return d1 < t2 or d2 < t2 or d3 < t2 or d4 < t2
+        return d1 < _T2 or d2 < _T2 or d3 < _T2 or d4 < _T2
     if rule == "nest":
-        return d3 < t2
+        return d3 < _T2
     raise ValueError(f"unknown right-adjacency rule {rule!r}")
 
 
@@ -236,15 +226,11 @@ def sql_right_adjacent(
     a: str,
     b: str,
     rule: str = "soft",
-    dist: int = DIST_TH,
-    overlap_permille: int = OVERLAP_PERMILLE,
-    ignore_dist: int = IGNORE_DIST_TH,
 ) -> str:
     """ANSI-SQL boolean expression equivalent to :func:`right_adjacent`
     for the DuckDB oracle; ``a``/``b`` are table aliases carrying
     integer x1,y1,x2,y2 columns. Same squared-integer math, so the
     predicate is bit-exact across engines."""
-    t2, ig2 = dist * dist, ignore_dist * ignore_dist
 
     # same bigint-before-squaring discipline as the Column twins: raw
     # INT32 squaring overflows (DuckDB raises) for deltas >= ~46341
@@ -268,24 +254,24 @@ def sql_right_adjacent(
     d3 = f"GREATEST({e3}, {e4})"
     d4 = f"GREATEST({e1}, {e2})"
     hard = (
-        f"({pp(f'{a}.x2', f'{a}.y1', f'{b}.x1', f'{b}.y1')} < {t2}"
-        f" AND {pp(f'{a}.x2', f'{a}.y2', f'{b}.x1', f'{b}.y2')} < {t2})"
+        f"({pp(f'{a}.x2', f'{a}.y1', f'{b}.x1', f'{b}.y1')} < {_T2}"
+        f" AND {pp(f'{a}.x2', f'{a}.y2', f'{b}.x1', f'{b}.y2')} < {_T2})"
     )
     if rule == "hard":
         ok = hard
     elif rule == "soft":
-        ok = f"({d1} < {t2} OR {d2} < {t2} OR {d3} < {t2} OR {d4} < {t2})"
+        ok = f"({d1} < {_T2} OR {d2} < {_T2} OR {d3} < {_T2} OR {d4} < {_T2})"
     elif rule == "nest":
-        ok = f"({d3} < {t2})"
+        ok = f"({d3} < {_T2})"
     else:
         raise ValueError(f"unknown right-adjacency rule {rule!r}")
     return (
         f"({b}.x1 >= {a}.x1"
         f" AND CAST(GREATEST(LEAST({a}.y2,{b}.y2) - GREATEST({a}.y1,{b}.y1), 0)"
         f"     AS BIGINT) * 1000"
-        f"     >= {overlap_permille} * CAST(LEAST({a}.y2-{a}.y1, {b}.y2-{b}.y1) AS BIGINT)"
-        f" AND {pp(f'{a}.x2', f'{a}.y2', f'{b}.x1', f'{b}.y1')} >= {ig2}"
-        f" AND {pp(f'{a}.x2', f'{a}.y1', f'{b}.x1', f'{b}.y2')} >= {ig2}"
+        f"     >= {OVERLAP_PERMILLE} * CAST(LEAST({a}.y2-{a}.y1, {b}.y2-{b}.y1) AS BIGINT)"
+        f" AND {pp(f'{a}.x2', f'{a}.y2', f'{b}.x1', f'{b}.y1')} >= {_IG2}"
+        f" AND {pp(f'{a}.x2', f'{a}.y1', f'{b}.x1', f'{b}.y2')} >= {_IG2}"
         f" AND {ok})"
     )
 
@@ -294,12 +280,8 @@ def sql_bottom_adjacent(
     a: str,
     b: str,
     rule: str = "soft",
-    dist: int = DIST_TH,
-    overlap_permille: int = OVERLAP_PERMILLE,
-    ignore_dist: int = IGNORE_DIST_TH,
 ) -> str:
     """SQL twin of :func:`bottom_adjacent` (incl. the ``child`` rule)."""
-    t2, ig2 = dist * dist, ignore_dist * ignore_dist
 
     def pp(px, py, qx, qy):
         dx = f"CAST(({px})-({qx}) AS BIGINT)"
@@ -321,26 +303,26 @@ def sql_bottom_adjacent(
     d3 = f"GREATEST({e3}, {e4})"
     d4 = f"GREATEST({e1}, {e2})"
     hard = (
-        f"({pp(f'{a}.x1', f'{a}.y2', f'{b}.x1', f'{b}.y1')} < {t2}"
-        f" AND {pp(f'{a}.x2', f'{a}.y2', f'{b}.x2', f'{b}.y1')} < {t2})"
+        f"({pp(f'{a}.x1', f'{a}.y2', f'{b}.x1', f'{b}.y1')} < {_T2}"
+        f" AND {pp(f'{a}.x2', f'{a}.y2', f'{b}.x2', f'{b}.y1')} < {_T2})"
     )
     if rule == "hard":
         ok = hard
     elif rule == "soft":
-        ok = f"({d1} < {t2} OR {d2} < {t2} OR {d3} < {t2} OR {d4} < {t2})"
+        ok = f"({d1} < {_T2} OR {d2} < {_T2} OR {d3} < {_T2} OR {d4} < {_T2})"
     elif rule == "nest":
-        ok = f"({d3} < {t2})"
+        ok = f"({d3} < {_T2})"
     elif rule == "child":
-        ok = f"(NOT {hard} AND {d3} < {t2})"
+        ok = f"(NOT {hard} AND {d3} < {_T2})"
     else:
         raise ValueError(f"unknown bottom-adjacency rule {rule!r}")
     return (
         f"({b}.y1 >= {a}.y1"
         f" AND CAST(GREATEST(LEAST({a}.x2,{b}.x2) - GREATEST({a}.x1,{b}.x1), 0)"
         f"     AS BIGINT) * 1000"
-        f"     >= {overlap_permille} * CAST(LEAST({a}.x2-{a}.x1, {b}.x2-{b}.x1) AS BIGINT)"
-        f" AND {pp(f'{a}.x2', f'{a}.y2', f'{b}.x1', f'{b}.y1')} >= {ig2}"
-        f" AND {pp(f'{a}.x1', f'{a}.y2', f'{b}.x2', f'{b}.y1')} >= {ig2}"
+        f"     >= {OVERLAP_PERMILLE} * CAST(LEAST({a}.x2-{a}.x1, {b}.x2-{b}.x1) AS BIGINT)"
+        f" AND {pp(f'{a}.x2', f'{a}.y2', f'{b}.x1', f'{b}.y1')} >= {_IG2}"
+        f" AND {pp(f'{a}.x1', f'{a}.y2', f'{b}.x2', f'{b}.y1')} >= {_IG2}"
         f" AND {ok})"
     )
 
@@ -349,32 +331,28 @@ def bottom_adjacent_scalar(
     box_a,
     box_b,
     rule: str = "soft",
-    dist: int = DIST_TH,
-    overlap_permille: int = OVERLAP_PERMILLE,
-    ignore_dist: int = IGNORE_DIST_TH,
 ) -> bool:
     ax1, ay1, ax2, ay2 = box_a
     bx1, by1, bx2, by2 = box_b
-    t2, ig2 = dist * dist, ignore_dist * ignore_dist
     if by1 < ay1:
         return False
     overlap_x = max(min(ax2, bx2) - max(ax1, bx1), 0)
-    if overlap_x * 1000 < overlap_permille * min(ax2 - ax1, bx2 - bx1):
+    if overlap_x * 1000 < OVERLAP_PERMILLE * min(ax2 - ax1, bx2 - bx1):
         return False
-    if _s_d2_pp(ax2, ay2, bx1, by1) < ig2 or _s_d2_pp(ax1, ay2, bx2, by1) < ig2:
+    if _s_d2_pp(ax2, ay2, bx1, by1) < _IG2 or _s_d2_pp(ax1, ay2, bx2, by1) < _IG2:
         return False
     e1 = _s_d2_p_hseg(ax1, ay2, by1, bx1, bx2)
     e2 = _s_d2_p_hseg(ax2, ay2, by1, bx1, bx2)
     e3 = _s_d2_p_hseg(bx1, by1, ay2, ax1, ax2)
     e4 = _s_d2_p_hseg(bx2, by1, ay2, ax1, ax2)
     d1, d2, d3, d4 = max(e1, e4), max(e2, e3), max(e3, e4), max(e1, e2)
-    hard = _s_d2_pp(ax1, ay2, bx1, by1) < t2 and _s_d2_pp(ax2, ay2, bx2, by1) < t2
+    hard = _s_d2_pp(ax1, ay2, bx1, by1) < _T2 and _s_d2_pp(ax2, ay2, bx2, by1) < _T2
     if rule == "hard":
         return hard
     if rule == "soft":
-        return d1 < t2 or d2 < t2 or d3 < t2 or d4 < t2
+        return d1 < _T2 or d2 < _T2 or d3 < _T2 or d4 < _T2
     if rule == "nest":
-        return d3 < t2
+        return d3 < _T2
     if rule == "child":
-        return (not hard) and d3 < t2
+        return (not hard) and d3 < _T2
     raise ValueError(f"unknown bottom-adjacency rule {rule!r}")

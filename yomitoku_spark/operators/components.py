@@ -22,16 +22,21 @@ from pyspark.sql import functions as F
 
 
 class UnionFind:
-    """Path-compressed union-find over arbitrary hashable ids."""
+    """Union-find over arbitrary hashable, mutually comparable ids; the
+    root of a set is its smallest id."""
 
     def __init__(self):
         self.parent: dict = {}
 
     def find(self, x):
-        p = self.parent.setdefault(x, x)
-        if p != x:
-            p = self.parent[x] = self.find(p)
-        return p
+        # iterative with path halving: a long chain (edges arriving in
+        # descending id order) must not hit Python's recursion limit
+        parent = self.parent
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
 
     def union(self, a, b):
         ra, rb = self.find(a), self.find(b)

@@ -22,6 +22,8 @@ import numpy as np
 import pandas as pd
 from pyspark.sql import DataFrame
 
+from yomitoku_spark.operators.components import UnionFind
+
 GRID_SCHEMA = (
     "conv_id string, turn_idx int, table_id int, cell_id int, "
     "row int, col int, row_span int, col_span int"
@@ -104,22 +106,15 @@ def _cluster_lines_from_units(starts: np.ndarray, ends: np.ndarray) -> np.ndarra
     #    group correctly, which min/median/percentile thresholds on the
     #    extent distribution cannot do (each fails on some real corpus
     #    or fuzz case).
-    parent = np.arange(n)
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
+    uf = UnionFind()
     for i in range(n):
         for j in range(i + 1, n):
             ov = min(ends[i], ends[j]) - max(starts[i], starts[j])
             if ov * 5 >= 4 * max(ends[i] - starts[i], ends[j] - starts[j]):
-                parent[find(i)] = find(j)
+                uf.union(i, j)
     members: dict[int, list[int]] = {}
     for i in range(n):
-        members.setdefault(find(i), []).append(i)
+        members.setdefault(uf.find(i), []).append(i)
     groups = [
         (int(starts[m].min()), int(ends[m].max()))
         for m in (np.asarray(v) for v in members.values())

@@ -37,6 +37,7 @@ from yomitoku_spark.operators.adjacency import (
     bottom_adjacent_scalar,
     right_adjacent_scalar,
 )
+from yomitoku_spark.operators.components import UnionFind
 
 
 class _Dag:
@@ -241,21 +242,14 @@ def _normalize_from_head(g: _Dag, head: str, out_dir: str) -> None:
 def _components_with_isolates(g: _Dag, d: str) -> list[set]:
     """grid_parser.py:457-468 — undirected components of the
     ``d``-subgraph, isolates included."""
-    parent = {n: n for n in g.attrs}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
+    uf = UnionFind()
     for u in g.attrs:
         for v, dd in g.succ[u].items():
             if dd == d:
-                parent[find(u)] = find(v)
+                uf.union(u, v)
     comps: dict = {}
     for n in g.attrs:
-        comps.setdefault(find(n), set()).add(n)
+        comps.setdefault(uf.find(n), set()).add(n)
     return list(comps.values())
 
 

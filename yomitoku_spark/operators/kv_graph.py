@@ -38,6 +38,7 @@ from yomitoku_spark.operators.adjacency import (
     bottom_adjacent_scalar,
     right_adjacent_scalar,
 )
+from yomitoku_spark.operators.components import UnionFind
 
 PSEUDO_GROUP = "__unmatched__"
 
@@ -142,20 +143,13 @@ def parse_kv_doc(cells: list[dict]) -> list[dict]:
         succ[k].sort(key=lambda vd: (*order(by_id[vd[0]]), vd[1]))
 
     # weakly connected components (union-find over the edge set)
-    parent = {n["id"]: n["id"] for n in nodes}
-
-    def find(x):
-        while parent[x] != x:
-            parent[x] = parent[parent[x]]
-            x = parent[x]
-        return x
-
+    uf = UnionFind()
     for u, vs in succ.items():
         for v, _ in vs:
-            parent[find(u)] = find(v)
+            uf.union(u, v)
     comps: dict[str, list[str]] = {}
     for n in nodes:
-        comps.setdefault(find(n["id"]), []).append(n["id"])
+        comps.setdefault(uf.find(n["id"]), []).append(n["id"])
     comp_list = sorted(comps.values(), key=min)
 
     def roots(comp: set[str], direction: str) -> list[str]:

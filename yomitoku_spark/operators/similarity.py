@@ -12,7 +12,7 @@ Two tiers, per the scale plan:
   ~corpus/2^bits per query.
 
 Every approximate path ranks by a quantized integer dot product
-(round(x*scale) int64 products), so the DuckDB-checked oracle queries
+(round(x*Q_SCALE) int64 products), so the DuckDB-checked oracle queries
 reproduce it bit for bit (float summation order is engine-specific;
 quantized integer dot products are bit-reproducible everywhere).
 """
@@ -24,6 +24,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+
+# the one quantization scale: every vector is ranked on round(x*Q_SCALE)
+# int64 components, and the DuckDB referees in queries.py read the same
+# constant, so Spark and its referee cannot be scaled apart
+Q_SCALE = 1000
 
 
 def _mat(s, dtype=np.float64) -> np.ndarray:
@@ -47,7 +52,7 @@ def _q_away(v: np.ndarray) -> np.ndarray:
 
 
 def dot_int_arrow():
-    """Integer dot over PRE-QUANTIZED int vectors (``_q_away(x*scale)``
+    """Integer dot over PRE-QUANTIZED int vectors (``_q_away(x*Q_SCALE)``
     as int32) — same int64 result as
     :func:`dot_quantized_arrow` on the raw vectors."""
 
@@ -60,9 +65,9 @@ def dot_int_arrow():
     return _dq
 
 
-def dot_quantized_arrow(scale: int = 1000):
+def dot_quantized_arrow():
     """Arrow-batched pandas UDF computing the quantized integer dot
-    ``sum(round(q*scale) * round(c*scale))`` (int64 products, rounding
+    ``sum(round(q*Q_SCALE) * round(c*Q_SCALE))`` (int64 products, rounding
     half away from zero like SQL ROUND — bit-exact), vectorized with
     numpy instead of interpreted Catalyst higher-order expressions
     (~50× faster on wide candidate sets; HOFs are not codegen'd)."""
@@ -70,8 +75,8 @@ def dot_quantized_arrow(scale: int = 1000):
 
     @F.pandas_udf("bigint")
     def _dq(q: pd.Series, c: pd.Series) -> pd.Series:
-        qm = _q_away(_mat(q) * scale)
-        cm = _q_away(_mat(c) * scale)
+        qm = _q_away(_mat(q) * Q_SCALE)
+        cm = _q_away(_mat(c) * Q_SCALE)
         return pd.Series((qm * cm).sum(axis=1))
 
     return _dq
@@ -83,12 +88,11 @@ def brute_force_topk_quantized(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     k: int = 3,
-    scale: int = 1000,
 ) -> DataFrame:
     """Exact top-k by quantized integer dot product, computed as one
     numpy int64 matmul per Arrow batch against a broadcast corpus matrix.
 
-    Bit-identical to the pure-SQL formulation (round(x*scale) int64
+    Bit-identical to the pure-SQL formulation (round(x*Q_SCALE) int64
     products — no float summation-order sensitivity), but ~100× faster
     than evaluating higher-order expressions per pair: HOFs like
     F.aggregate are interpreted, a matmul is BLAS. The corpus side is a
@@ -97,7 +101,7 @@ def brute_force_topk_quantized(
     spark = corpus.sparkSession
     rows = corpus.select(id_col, vec_col).collect()
     c_ids = np.asarray([r[0] for r in rows], dtype=np.int64)
-    c_mat = _q_away(np.asarray([r[1] for r in rows], dtype=np.float64) * scale)
+    c_mat = _q_away(np.asarray([r[1] for r in rows], dtype=np.float64) * Q_SCALE)
     order = np.argsort(c_ids)
     c_ids, c_mat = c_ids[order], c_mat[order]
     bc = spark.sparkContext.broadcast((c_ids, c_mat))
@@ -106,7 +110,7 @@ def brute_force_topk_quantized(
         ids, mat = bc.value
         for pdf in batches:
             q_ids = pdf[id_col].to_numpy()
-            q = _q_away(_mat(pdf[vec_col]) * scale)
+            q = _q_away(_mat(pdf[vec_col]) * Q_SCALE)
             if len(q) == 0:
                 continue
             dots = q @ mat.T  # (b, n) int64 — exact
@@ -213,11 +217,10 @@ def lsh_buckets_quantized(
     dim: int = 64,
     n_planes: int = 6,
     n_tables: int = 2,
-    scale: int = 1000,
     n_flip: int = 0,
     with_qv: bool = False,
 ) -> DataFrame:
-    """Integer-exact LSH buckets: vectors quantized to round(x·scale)
+    """Integer-exact LSH buckets: vectors quantized to round(x·Q_SCALE)
     int64, bucket bit p of table t = [q · plane(t,p) > 0]. One numpy
     matmul per Arrow batch against the closure-captured plane tensor.
 
@@ -234,7 +237,7 @@ def lsh_buckets_quantized(
     index side); probe=1..n_flip are query-side probes.
 
     ``with_qv=True`` additionally carries the pre-quantized int32
-    vector (``_q_away(x*scale)`` as int32) on each id's
+    vector (``_q_away(x*Q_SCALE)`` as int32) on each id's
     (table 0, probe 0) row — the bucketing matmul already holds the
     quantized matrix, so the topk path gets its re-rank vector
     artifact from this single corpus pass instead of scanning and
@@ -248,7 +251,7 @@ def lsh_buckets_quantized(
             mat = _mat(pdf[vec_col])
             if len(mat) == 0:
                 continue
-            q = _q_away(mat * scale)
+            q = _q_away(mat * Q_SCALE)
             ids = pdf[id_col].to_numpy()
             frames = []
             for t in range(n_tables):
@@ -284,7 +287,6 @@ def lsh_ann_topk_quantized(
     n_planes: int = 6,
     k: int = 3,
     n_tables: int = 2,
-    scale: int = 1000,
     n_flip: int = 0,
 ) -> DataFrame:
     """Oracle-checkable ANN: md5-sign LSH buckets (integer-exact) →
@@ -306,8 +308,7 @@ def lsh_ann_topk_quantized(
     # vector on each id's (table 0, probe 0) row, so the re-rank
     # vector sides read the same checkpointed signature artifact
     sigs = lsh_buckets_quantized(
-        corpus, id_col, vec_col, dim, n_planes, n_tables, scale, n_flip,
-        with_qv=True,
+        corpus, id_col, vec_col, dim, n_planes, n_tables, n_flip, with_qv=True
     )
     # materialize the signature table ONCE (3 ints/row/table + one qv
     # per id — this IS the LSH index). A repartition barrier does NOT
@@ -325,12 +326,17 @@ def lsh_ann_topk_quantized(
         .select("query_id", "corpus_id")
         .distinct()
     )
-    # ship PRE-QUANTIZED int vectors through the pair joins: half the
-    # exchange/Arrow bytes of the re-rank, identical int64 dots
-    vecs = (
-        sigs.filter((F.col("table") == 0) & (F.col("probe") == 0))
-        .select("id", F.col("qv").alias("vec"))
-    )
+    vecs = sigs.filter((F.col("table") == 0) & (F.col("probe") == 0))
+    return _rerank_topk(pairs, vecs, k)
+
+
+def _rerank_topk(pairs: DataFrame, vecs: DataFrame, k: int) -> DataFrame:
+    """The exact re-rank every ANN path ends with: the (id, qv)
+    pre-quantized int vectors of ``vecs`` join once onto each side of
+    the ids-only (query_id, corpus_id) ``pairs`` (half the exchange and
+    Arrow bytes of float vectors, identical int64 dots), then top-``k``
+    per query by (dot_q DESC, corpus_id)."""
+    vecs = vecs.select("id", F.col("qv").alias("vec"))
     j = pairs.join(
         vecs.withColumnRenamed("id", "query_id").withColumnRenamed("vec", "qvec"),
         "query_id",
@@ -363,7 +369,6 @@ def lloyd_refine_quantized(
     c_mat: np.ndarray,
     id_col: str,
     vec_col: str,
-    scale: int,
     iters: int,
 ) -> np.ndarray:
     """Deterministic integer-exact Lloyd refinement of quantized
@@ -393,7 +398,7 @@ def lloyd_refine_quantized(
                 mat = _mat(pdf[vec_col])
                 if len(mat) == 0:
                     continue
-                q = _q_away(mat * scale)
+                q = _q_away(mat * Q_SCALE)
                 own = np.argmax(q @ bc.value.T, axis=1)  # first max wins
                 cells, inv = np.unique(own, return_inverse=True)
                 sums = np.zeros((len(cells), q.shape[1]), dtype=np.int64)
@@ -433,7 +438,6 @@ def ivf_flat_topk(
     n_cells: int = 8,
     n_probe: int = 2,
     k: int = 3,
-    scale: int = 1000,
     lloyd_iters: int = 0,
 ) -> DataFrame:
     """IVF-flat approximate top-k: a coarse quantizer partitions the
@@ -460,29 +464,12 @@ def ivf_flat_topk(
     # pre-quantized int vector together (guide §2.4) — candidates and
     # both re-rank vector sides all read the same checkpointed artifact
     ap = ivf_assign_probes(
-        corpus, id_col, vec_col, n_cells, n_probe, scale, lloyd_iters,
-        with_qv=True,
+        corpus, id_col, vec_col, n_cells, n_probe, lloyd_iters, with_qv=True
     )
     pairs = ivf_candidate_pairs(
-        corpus, id_col, vec_col, n_cells, n_probe, scale, lloyd_iters, ap=ap
+        corpus, id_col, vec_col, n_cells, n_probe, lloyd_iters, ap=ap
     )
-    # ship PRE-QUANTIZED int vectors through the pair joins: half the
-    # exchange/Arrow bytes of the re-rank, identical int64 dots
-    vecs = ap.select("id", F.col("qv").alias("vec"))
-    j = pairs.join(
-        vecs.withColumnRenamed("id", "query_id").withColumnRenamed("vec", "qvec"),
-        "query_id",
-    ).join(
-        vecs.withColumnRenamed("id", "corpus_id").withColumnRenamed("vec", "cvec"),
-        "corpus_id",
-    )
-    dq = dot_int_arrow()(F.col("qvec"), F.col("cvec")).alias("dot_q")
-    w = W.partitionBy("query_id").orderBy(F.desc("dot_q"), F.asc("corpus_id"))
-    return (
-        j.select("query_id", "corpus_id", dq)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rerank_topk(pairs, ap, k)
 
 
 def ivf_candidate_pairs(
@@ -491,7 +478,6 @@ def ivf_candidate_pairs(
     vec_col: str = "embedding",
     n_cells: int = 8,
     n_probe: int = 2,
-    scale: int = 1000,
     lloyd_iters: int = 0,
     ap: DataFrame | None = None,
 ) -> DataFrame:
@@ -507,7 +493,7 @@ def ivf_candidate_pairs(
     corpus is scanned once, not once per derived table."""
     if ap is None:
         ap = ivf_assign_probes(
-            corpus, id_col, vec_col, n_cells, n_probe, scale, lloyd_iters
+            corpus, id_col, vec_col, n_cells, n_probe, lloyd_iters
         )
     n_probe = sum(1 for c in ap.columns if c.startswith("p") and c[1:].isdigit())
     lists = ap.select(F.col("id").alias("corpus_id"), "cell")
@@ -529,7 +515,6 @@ def ivf_assign_probes(
     vec_col: str = "embedding",
     n_cells: int = 8,
     n_probe: int = 2,
-    scale: int = 1000,
     lloyd_iters: int = 0,
     with_qv: bool = False,
 ) -> DataFrame:
@@ -539,18 +524,18 @@ def ivf_assign_probes(
     index-build registry row exposes exactly this artifact).
 
     ``with_qv=True`` additionally emits the pre-quantized int32 vector
-    (``qv`` — ``_q_away(x*scale)``): the assignment matmul already HAS
+    (``qv`` — ``_q_away(x*Q_SCALE)``): the assignment matmul already HAS
     the quantized matrix in hand, so the topk paths get their re-rank
     vector artifact from this single corpus pass instead of scanning
     and quantizing the corpus a second time (guide §2.4 — one pass,
     one materialization; this combined (cell, probes, qv) row IS a
     real IVF index record layout)."""
     cent_rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(n_cells).collect()
-    c_mat = _q_away(np.asarray([r[1] for r in cent_rows], dtype=np.float64) * scale)
+    c_mat = _q_away(
+        np.asarray([r[1] for r in cent_rows], dtype=np.float64) * Q_SCALE
+    )
     if lloyd_iters > 0:
-        c_mat = lloyd_refine_quantized(
-            corpus, c_mat, id_col, vec_col, scale, lloyd_iters
-        )
+        c_mat = lloyd_refine_quantized(corpus, c_mat, id_col, vec_col, lloyd_iters)
         # cells are centroid INDICES after refinement (a refined centroid
         # is no longer any corpus vector)
         c_ids = np.arange(len(c_mat), dtype=np.int64)
@@ -565,7 +550,7 @@ def ivf_assign_probes(
             mat = _mat(pdf[vec_col])
             if len(mat) == 0:
                 continue
-            q = _q_away(mat * scale)
+            q = _q_away(mat * Q_SCALE)
             dots = q @ c_mat.T  # (n, n_cells) int64, exact
             ids = pdf[id_col].to_numpy()
             # argmax with lowest-centroid-id tiebreak (ids are sorted)
@@ -598,7 +583,6 @@ def pq_codebooks(
     vec_col: str = "embedding",
     n_codes: int = 16,
     m: int = 8,
-    scale: int = 1000,
 ) -> np.ndarray:
     """Deterministic PQ codebooks: the quantized SUBVECTORS of the
     ``n_codes`` lowest-id corpus vectors, one codebook per subspace —
@@ -606,7 +590,7 @@ def pq_codebooks(
     seeds) and reproducible in the DuckDB oracle; the Lloyd analog for
     PQ would refine per-subspace, omitted to keep the oracle one CTE."""
     rows = corpus.select(id_col, vec_col).orderBy(id_col).limit(n_codes).collect()
-    mat = _q_away(np.asarray([r[1] for r in rows], dtype=np.float64) * scale)
+    mat = _q_away(np.asarray([r[1] for r in rows], dtype=np.float64) * Q_SCALE)
     n, dim = mat.shape
     if dim % m != 0:
         raise ValueError(f"dim {dim} not divisible by m={m} subspaces")
@@ -651,7 +635,6 @@ def ivf_pq_topk(
     n_codes: int = 16,
     m: int = 8,
     rerank: int = 16,
-    scale: int = 1000,
     lloyd_iters: int = 0,
 ) -> DataFrame:
     """IVF-PQ: the 100 TB ANN shape — candidates from the inverted
@@ -667,29 +650,27 @@ def ivf_pq_topk(
     lookup sums, first-min/lowest-id tiebreaks) so the ENTIRE pipeline
     — codebook construction, encoding, coarse cells, probing, ADC
     scoring, re-rank — reproduces bit-for-bit in the DuckDB oracle."""
-    cb = pq_codebooks(corpus, id_col, vec_col, n_codes, m, scale)
+    cb = pq_codebooks(corpus, id_col, vec_col, n_codes, m)
     mq, _ncodes, d = cb.shape
     # ONE corpus pass (guide §2.4): the assignment matmul emits cell +
     # probes + the pre-quantized int vector together; candidates, the
     # PQ encode, and both re-rank vector sides all derive from that
     # single checkpointed artifact
     ap = ivf_assign_probes(
-        corpus, id_col, vec_col, n_cells, n_probe, scale, lloyd_iters,
-        with_qv=True,
+        corpus, id_col, vec_col, n_cells, n_probe, lloyd_iters, with_qv=True
     )
     pairs = ivf_candidate_pairs(
-        corpus, id_col, vec_col, n_cells, n_probe, scale, lloyd_iters, ap=ap
+        corpus, id_col, vec_col, n_cells, n_probe, lloyd_iters, ap=ap
     )
     # lazy encode over the checkpoint: codes feed exactly one consumer
     # (the ADC join), so the pass runs once without its own checkpoint
     codes = pq_encode_qv(ap, cb)
     # PRE-QUANTIZED int vectors through every join (guide §2.3 narrower
     # types): same int64 ADC sums and re-rank dots, half the bytes
-    vecs = ap.select("id", F.col("qv").alias("vec"))
     j = pairs.join(
         codes.select(F.col("id").alias("corpus_id"), "codes"), "corpus_id"
     ).join(
-        vecs.withColumnRenamed("id", "query_id").withColumnRenamed("vec", "qvec"),
+        ap.select(F.col("id").alias("query_id"), F.col("qv").alias("qvec")),
         "query_id",
     )
 
@@ -709,20 +690,7 @@ def ivf_pq_topk(
         .filter(F.col("__r") <= rerank)
         .select("query_id", "corpus_id")
     )
-    jj = shortlist.join(
-        vecs.withColumnRenamed("id", "query_id").withColumnRenamed("vec", "qvec"),
-        "query_id",
-    ).join(
-        vecs.withColumnRenamed("id", "corpus_id").withColumnRenamed("vec", "cvec"),
-        "corpus_id",
-    )
-    dq = dot_int_arrow()(F.col("qvec"), F.col("cvec")).alias("dot_q")
-    w = W.partitionBy("query_id").orderBy(F.desc("dot_q"), F.asc("corpus_id"))
-    return (
-        jj.select("query_id", "corpus_id", dq)
-        .withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-    )
+    return _rerank_topk(shortlist, ap, k)
 
 
 def semdedup_keepers(
@@ -731,7 +699,6 @@ def semdedup_keepers(
     vec_col: str = "embedding",
     n_cells: int = 8,
     lloyd_iters: int = 2,
-    scale: int = 1000,
     tau_q: int = 4_200_000,
 ) -> DataFrame:
     """SemDeDup (Abbas et al. 2023, "SemDeDup: Data-efficient learning
@@ -759,8 +726,7 @@ def semdedup_keepers(
     # checkpointed artifact (guide §2.4) — the intra-cell pair sides
     # read (id, cell, vec) directly, no assignment⋈vector join at all
     ap = ivf_assign_probes(
-        corpus, id_col, vec_col, n_cells, 1, scale, lloyd_iters,
-        with_qv=True,
+        corpus, id_col, vec_col, n_cells, 1, lloyd_iters, with_qv=True
     )
     assign = ap.select("id", "cell")
     # PRE-QUANTIZED int vectors through the intra-cell pair join

@@ -2229,27 +2229,145 @@ FROM documents d LEFT JOIN comp c ON c.node = d.doc_id
 """
 
 
+# -- quantized-embedding referee builders ----------------------------------
+# Every embedding/ANN referee below is assembled from these CTE builders,
+# one SQL text per pipeline step, each the twin of one step of
+# operators/similarity.py: quantize (``_q_away``), IVF train + assign
+# (``ivf_assign_probes``), list/probe candidates
+# (``ivf_candidate_pairs``), exact re-rank (``_rerank_topk``).
+
+
+def _sql_qv(src: str = "embeddings", xs: str | None = None) -> str:
+    """``qv`` (vec_id, i, q): round-half-away(x * Q_SCALE) as BIGINT, the
+    twin of ``_q_away(x * Q_SCALE)`` (numpy multiplies in float64), over
+    the (vec_id, i, x DOUBLE) rows of the query ``xs`` — by default the
+    components of the raw 64-dim embeddings of ``src``."""
+    xs = xs or f"""SELECT vec_id, CAST(i AS INT) AS i,
+               CAST(embedding[CAST(i AS INT) + 1] AS DOUBLE) AS x
+        FROM {src}, range(64) r(i)"""
+    return f"""qv AS (
+  SELECT vec_id, i,
+         CAST(CASE WHEN x >= 0 THEN FLOOR(ABS(x * {SIM.Q_SCALE}) + 0.5)
+              ELSE -FLOOR(ABS(x * {SIM.Q_SCALE}) + 0.5) END AS BIGINT) AS q
+  FROM ({xs})
+)"""
+
+
+def _sql_ranked(name: str, cents: str) -> str:
+    """``name`` (vec_id, cell, rk): every vector's cells ranked by its
+    quantized dot with the (cell, i, c) centroids ``cents``, ties to
+    the lowest cell — rk = 1 is the argmax assignment."""
+    return f"""{name} AS (
+  SELECT v.vec_id, c.cell, ROW_NUMBER() OVER (
+           PARTITION BY v.vec_id ORDER BY SUM(v.q * c.c) DESC, c.cell) AS rk
+  FROM qv v JOIN {cents} c ON c.i = v.i
+  GROUP BY v.vec_id, c.cell
+)"""
+
+
+def _sql_lloyd_iter(prev: str, cur: str) -> str:
+    """One Lloyd sweep as CTE text: assign to argmax-dot centroid
+    (ties → lowest cell), then per-(cell, dim) round-half-away mean;
+    empty cells keep the previous centroid."""
+    return f"""{_sql_ranked(f"r{cur}", prev)},
+s{cur} AS (
+  SELECT a.cell, q.i, CAST(SUM(q.q) AS BIGINT) AS s, CAST(COUNT(*) AS BIGINT) AS n
+  FROM r{cur} a JOIN qv q ON q.vec_id = a.vec_id
+  WHERE a.rk = 1
+  GROUP BY a.cell, q.i
+),
+c{cur} AS (
+  SELECT cell, i,
+         CASE WHEN s >= 0 THEN (2*s + n) // (2*n)
+              ELSE -((2*(-s) + n) // (2*n)) END AS c
+  FROM s{cur}
+  UNION ALL
+  SELECT p.cell, p.i, p.c FROM {prev} p
+  WHERE p.cell NOT IN (SELECT cell FROM s{cur})
+)"""
+
+
+def _sql_ivf_cells(n_cells: int, lloyd_iters: int = 0, src: str = "embeddings") -> str:
+    """IVF training + assignment, the twin of ``ivf_assign_probes``:
+    the ``n_cells`` lowest-id vectors of ``src`` seed the centroids
+    (cell = seed vec_id, or seed rank once Lloyd moves them off corpus
+    vectors), ``lloyd_iters`` unrolled sweeps, then ``ranked``."""
+    cell = "ROW_NUMBER() OVER (ORDER BY vec_id) - 1" if lloyd_iters else "vec_id"
+    sweeps = "".join(
+        f",\n{_sql_lloyd_iter(f'c{n}', str(n + 1))}" for n in range(lloyd_iters)
+    )
+    return f"""seeds AS (
+  SELECT CAST({cell} AS BIGINT) AS cell, vec_id
+  FROM (SELECT vec_id FROM {src} ORDER BY vec_id LIMIT {n_cells})
+),
+c0 AS (SELECT s.cell, q.i, q.q AS c FROM seeds s JOIN qv q ON q.vec_id = s.vec_id){sweeps},
+{_sql_ranked("ranked", f"c{lloyd_iters}")}"""
+
+
+def _sql_ivf_cand(n_probe: int) -> str:
+    """``cand`` (query_id, corpus_id), the twin of
+    ``ivf_candidate_pairs``: a vector's list is its rk = 1 cell, its
+    probes its top-``n_probe`` cells."""
+    return f"""lists AS (SELECT vec_id AS corpus_id, cell FROM ranked WHERE rk = 1),
+probes AS (SELECT vec_id AS query_id, cell FROM ranked WHERE rk <= {n_probe}),
+cand AS (
+  SELECT DISTINCT p.query_id, l.corpus_id
+  FROM probes p JOIN lists l ON l.cell = p.cell
+  WHERE p.query_id <> l.corpus_id
+)"""
+
+
+def _sql_pairdot(pairs: str | None = None) -> str:
+    """``pairdot`` (query_id, corpus_id, dot_q): the exact quantized dot
+    of every (query_id, corpus_id) row of the CTE ``pairs``, or of every
+    pair of distinct vectors when ``pairs`` is None (one dimension-keyed
+    self-join, ~2x cheaper in DuckDB than joining an all-pairs CTE)."""
+    src = "qv qa JOIN qv qb ON qb.i = qa.i AND qb.vec_id <> qa.vec_id"
+    if pairs:
+        src = f"""{pairs} c
+  JOIN qv qa ON qa.vec_id = c.query_id
+  JOIN qv qb ON qb.vec_id = c.corpus_id AND qb.i = qa.i"""
+    return f"""pairdot AS (
+  SELECT qa.vec_id AS query_id, qb.vec_id AS corpus_id,
+         CAST(SUM(qa.q * qb.q) AS BIGINT) AS dot_q
+  FROM {src}
+  GROUP BY qa.vec_id, qb.vec_id
+)"""
+
+
+def _sql_rerank(pairs: str | None, k: int) -> str:
+    """The re-rank every top-k referee ends with, the twin of
+    ``_rerank_topk``: ``pairdot`` over ``pairs`` (all pairs if None),
+    then top-``k`` per query by (dot_q DESC, corpus_id)."""
+    return f"""{_sql_pairdot(pairs)}
+SELECT query_id, corpus_id, dot_q, CAST(rk AS INT) AS rank FROM (
+  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
+            ORDER BY dot_q DESC, corpus_id) rk
+  FROM pairdot
+) WHERE rk <= {k}
+"""
+
+
+def _sql_ivf_topk(n_cells: int, n_probe: int, lloyd_iters: int = 0, qv: str = _sql_qv()):
+    """DuckDB twin of ``ivf_flat_topk`` (k = 3) over the ``qv`` CTE text."""
+    return f"""
+WITH {qv},
+{_sql_ivf_cells(n_cells, lloyd_iters)},
+{_sql_ivf_cand(n_probe)},
+{_sql_rerank("cand", 3)}"""
+
+
 def embedding_topk(spark, sf_dir):
     """Brute-force top-3 neighbors per vector by quantized dot product
     (integer-exact across engines; the float cosine twin in
     ``tests/test_operators.py`` is the tests' recall referee)."""
     e = t(spark, sf_dir, "embeddings")
-    return SIM.brute_force_topk_quantized(e, e, "vec_id", "embedding", k=3, scale=1000)
+    return SIM.brute_force_topk_quantized(e, e, "vec_id", "embedding", k=3)
 
 
-SQL_EMB_TOPK = """
-WITH pairs AS (
-  SELECT a.vec_id AS query_id, b.vec_id AS corpus_id,
-    list_sum([CAST(ROUND(CAST(a.embedding[i] AS DOUBLE)*1000) AS BIGINT)
-              * CAST(ROUND(CAST(b.embedding[i] AS DOUBLE)*1000) AS BIGINT)
-              for i in range(1, len(a.embedding)+1)])::BIGINT AS dot_q
-  FROM embeddings a, embeddings b WHERE a.vec_id != b.vec_id)
-SELECT query_id, corpus_id, dot_q, CAST(rank AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY dot_q DESC, corpus_id ASC) AS rank
-  FROM pairs
-) WHERE rank <= 3
-"""
+SQL_EMB_TOPK = f"""
+WITH {_sql_qv()},
+{_sql_rerank(None, 3)}"""
 
 
 def normalize_dates(spark, sf_dir):
@@ -2640,26 +2758,18 @@ def embedding_near_dup_pairs(spark, sf_dir):
     a = e.select(F.col("vec_id").alias("id_a"), F.col("embedding").alias("va"))
     b = e.select(F.col("vec_id").alias("id_b"), F.col("embedding").alias("vb"))
     pairs = a.join(F.broadcast(b), F.col("id_a") < F.col("id_b"))
-    dq = SIM.dot_quantized_arrow(1000)(F.col("va"), F.col("vb")).alias("dot_q")
+    dq = SIM.dot_quantized_arrow()(F.col("va"), F.col("vb")).alias("dot_q")
     return (
         pairs.select("id_a", "id_b", dq)
         .filter(F.col("dot_q") >= 400000)
     )
 
 
-SQL_EMB_NEAR_DUP = """
-WITH qv AS (
-  SELECT vec_id, CAST(i AS INT) AS i,
-         CAST(CASE WHEN embedding[CAST(i AS INT) + 1] >= 0
-              THEN FLOOR(ABS(embedding[CAST(i AS INT) + 1] * 1000) + 0.5)
-              ELSE -FLOOR(ABS(embedding[CAST(i AS INT) + 1] * 1000) + 0.5)
-              END AS BIGINT) AS q
-  FROM embeddings, range(64) r(i)
-)
-SELECT qa.vec_id AS id_a, qb.vec_id AS id_b, CAST(SUM(qa.q * qb.q) AS BIGINT) AS dot_q
-FROM qv qa JOIN qv qb ON qa.i = qb.i AND qa.vec_id < qb.vec_id
-GROUP BY qa.vec_id, qb.vec_id
-HAVING SUM(qa.q * qb.q) >= 400000
+SQL_EMB_NEAR_DUP = f"""
+WITH {_sql_qv()},
+{_sql_pairdot()}
+SELECT query_id AS id_a, corpus_id AS id_b, dot_q FROM pairdot
+WHERE query_id < corpus_id AND dot_q >= 400000
 """
 
 
@@ -2819,11 +2929,7 @@ WITH planes AS (
               THEN 1 ELSE -1 END AS s
   FROM range({n_tables}) tt(t), range({n_planes}) pp(p), range(64) ii(i)
 ),
-qv AS (
-  SELECT vec_id, CAST(i AS INT) AS i,
-         CAST(ROUND(embedding[CAST(i AS INT) + 1] * 1000) AS BIGINT) AS q
-  FROM embeddings, range(64) r(i)
-),
+{_sql_qv()},
 dots AS (
   SELECT qv.vec_id, pl.t, pl.p, SUM(qv.q * pl.s) AS d
   FROM qv JOIN planes pl ON pl.i = qv.i
@@ -2842,19 +2948,7 @@ cand AS (
   FROM probes a JOIN buckets b
     ON a.t = b.t AND a.bucket = b.bucket AND a.vec_id <> b.vec_id
 ),
-pairdot AS (
-  SELECT c.query_id, c.corpus_id, CAST(SUM(qa.q * qb.q) AS BIGINT) AS dot_q
-  FROM cand c
-  JOIN qv qa ON qa.vec_id = c.query_id
-  JOIN qv qb ON qb.vec_id = c.corpus_id AND qb.i = qa.i
-  GROUP BY c.query_id, c.corpus_id
-)
-SELECT query_id, corpus_id, dot_q, CAST(rk AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY dot_q DESC, corpus_id) rk
-  FROM pairdot
-) WHERE rk <= {k}
-"""
+{_sql_rerank("cand", k)}"""
 
 
 SQL_ANN_LSH = _sql_ann_lsh(_ANN_PLANES, _ANN_TABLES, 0, 3)
@@ -3874,53 +3968,7 @@ def ivf_flat_topk(spark, sf_dir):
     return SIM.ivf_flat_topk(e, n_cells=8, n_probe=2, k=3)
 
 
-def _sql_ivf(n_cells: int, n_probe: int, k: int) -> str:
-    return f"""
-WITH qv AS (
-  SELECT vec_id, CAST(i AS INT) AS i,
-         CAST(CASE WHEN embedding[CAST(i AS INT) + 1] >= 0
-              THEN FLOOR(ABS(embedding[CAST(i AS INT) + 1] * 1000) + 0.5)
-              ELSE -FLOOR(ABS(embedding[CAST(i AS INT) + 1] * 1000) + 0.5)
-              END AS BIGINT) AS q
-  FROM embeddings, range(64) r(i)
-),
-cent AS (
-  SELECT vec_id AS cent_id, i, q FROM qv
-  WHERE vec_id IN (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT {n_cells})
-),
-cdots AS (
-  SELECT v.vec_id, c.cent_id, SUM(v.q * c.q) AS d
-  FROM qv v JOIN cent c ON c.i = v.i
-  GROUP BY v.vec_id, c.cent_id
-),
-ranked AS (
-  SELECT vec_id, cent_id,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d DESC, cent_id) AS rk
-  FROM cdots
-),
-lists AS (SELECT vec_id AS corpus_id, cent_id AS cell FROM ranked WHERE rk = 1),
-probes AS (SELECT vec_id AS query_id, cent_id AS cell FROM ranked WHERE rk <= {n_probe}),
-cand AS (
-  SELECT DISTINCT p.query_id, l.corpus_id
-  FROM probes p JOIN lists l ON l.cell = p.cell
-  WHERE p.query_id <> l.corpus_id
-),
-pairdot AS (
-  SELECT c.query_id, c.corpus_id, CAST(SUM(qa.q * qb.q) AS BIGINT) AS dot_q
-  FROM cand c
-  JOIN qv qa ON qa.vec_id = c.query_id
-  JOIN qv qb ON qb.vec_id = c.corpus_id AND qb.i = qa.i
-  GROUP BY c.query_id, c.corpus_id
-)
-SELECT query_id, corpus_id, dot_q, CAST(rk AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY dot_q DESC, corpus_id) rk
-  FROM pairdot
-) WHERE rk <= {k}
-"""
-
-
-SQL_IVF = _sql_ivf(8, 2, 3)
+SQL_IVF = _sql_ivf_topk(8, 2)
 
 
 def ivf_scaled_topk(spark, sf_dir):
@@ -3935,7 +3983,7 @@ def ivf_scaled_topk(spark, sf_dir):
     return SIM.ivf_flat_topk(e, n_cells=64, n_probe=12, k=3)
 
 
-SQL_IVF_SCALED = _sql_ivf(64, 12, 3)
+SQL_IVF_SCALED = _sql_ivf_topk(64, 12)
 
 
 def ivf_lloyd_topk(spark, sf_dir):
@@ -3949,82 +3997,7 @@ def ivf_lloyd_topk(spark, sf_dir):
     return SIM.ivf_flat_topk(e, n_cells=8, n_probe=2, k=3, lloyd_iters=2)
 
 
-def _sql_lloyd_iter(prev: str, cur: str) -> str:
-    """One Lloyd sweep as CTE text: assign to argmax-dot centroid
-    (ties → lowest cell), then per-(cell, dim) round-half-away mean;
-    empty cells keep the previous centroid."""
-    return f"""
-d{cur} AS (
-  SELECT v.vec_id, c.cell, SUM(v.q * c.c) AS d
-  FROM qv v JOIN {prev} c ON c.i = v.i
-  GROUP BY v.vec_id, c.cell
-),
-a{cur} AS (
-  SELECT vec_id, cell FROM d{cur}
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d DESC, cell) = 1
-),
-s{cur} AS (
-  SELECT a.cell, q.i, CAST(SUM(q.q) AS BIGINT) AS s, CAST(COUNT(*) AS BIGINT) AS n
-  FROM a{cur} a JOIN qv q ON q.vec_id = a.vec_id
-  GROUP BY a.cell, q.i
-),
-c{cur} AS (
-  SELECT cell, i,
-         CASE WHEN s >= 0 THEN (2*s + n) // (2*n)
-              ELSE -((2*(-s) + n) // (2*n)) END AS c
-  FROM s{cur}
-  UNION ALL
-  SELECT p.cell, p.i, p.c FROM {prev} p
-  WHERE p.cell NOT IN (SELECT cell FROM s{cur})
-)"""
-
-
-SQL_IVF_LLOYD = f"""
-WITH qv AS (
-  SELECT vec_id, CAST(i AS INT) AS i,
-         CAST(CASE WHEN embedding[CAST(i AS INT) + 1] >= 0
-              THEN FLOOR(ABS(embedding[CAST(i AS INT) + 1] * 1000) + 0.5)
-              ELSE -FLOOR(ABS(embedding[CAST(i AS INT) + 1] * 1000) + 0.5)
-              END AS BIGINT) AS q
-  FROM embeddings, range(64) r(i)
-),
-seeds AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cell, vec_id
-  FROM (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 8)
-),
-c0 AS (SELECT s.cell, q.i, q.q AS c FROM seeds s JOIN qv q ON q.vec_id = s.vec_id),
-{_sql_lloyd_iter('c0', '1')},
-{_sql_lloyd_iter('c1', '2')},
-sd AS (
-  SELECT v.vec_id, c.cell, SUM(v.q * c.c) AS d
-  FROM qv v JOIN c2 c ON c.i = v.i
-  GROUP BY v.vec_id, c.cell
-),
-ranked AS (
-  SELECT vec_id, cell,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d DESC, cell) AS rk
-  FROM sd
-),
-lists AS (SELECT vec_id AS corpus_id, cell FROM ranked WHERE rk = 1),
-probes AS (SELECT vec_id AS query_id, cell FROM ranked WHERE rk <= 2),
-cand AS (
-  SELECT DISTINCT p.query_id, l.corpus_id
-  FROM probes p JOIN lists l ON l.cell = p.cell
-  WHERE p.query_id <> l.corpus_id
-),
-pairdot AS (
-  SELECT c.query_id, c.corpus_id, CAST(SUM(qa.q * qb.q) AS BIGINT) AS dot_q
-  FROM cand c
-  JOIN qv qa ON qa.vec_id = c.query_id
-  JOIN qv qb ON qb.vec_id = c.corpus_id AND qb.i = qa.i
-  GROUP BY c.query_id, c.corpus_id
-)
-SELECT query_id, corpus_id, dot_q, CAST(rk AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY dot_q DESC, corpus_id) rk
-  FROM pairdot
-) WHERE rk <= 3
-"""
+SQL_IVF_LLOYD = _sql_ivf_topk(8, 2, lloyd_iters=2)
 
 
 # -- clustered-embedding ANN (the production retrieval regime) ------------
@@ -4080,7 +4053,7 @@ def ann_ivf_clustered_topk(spark, sf_dir):
 
 # DuckDB twin of clustered_embeddings + quantization: md5-parity
 # Rademacher signs (table 0 of signed_planes_md5 → key '0:{c}:{i}'),
-# cvec = embedding + 0.25*sign, q = round-half-away(cvec * 1000)
+# cvec = embedding + 0.25*sign, q = round-half-away(cvec * Q_SCALE)
 _SQL_CL_QV = f"""signs AS (
   SELECT CAST(c AS BIGINT) AS c, CAST(i AS INT) AS i,
          CASE WHEN ('0x' || substr(md5('0:' || CAST(c AS VARCHAR) || ':' ||
@@ -4088,69 +4061,14 @@ _SQL_CL_QV = f"""signs AS (
               THEN 1 ELSE -1 END AS s
   FROM range({_CL_N}) cc(c), range(64) ii(i)
 ),
-qv AS (
-  SELECT e.vec_id, sg.i,
-         CAST(CASE WHEN CAST(e.embedding[sg.i + 1] AS DOUBLE) + {_CL_W} * sg.s >= 0
-              THEN FLOOR(ABS((CAST(e.embedding[sg.i + 1] AS DOUBLE) + {_CL_W} * sg.s) * 1000) + 0.5)
-              ELSE -FLOOR(ABS((CAST(e.embedding[sg.i + 1] AS DOUBLE) + {_CL_W} * sg.s) * 1000) + 0.5)
-              END AS BIGINT) AS q
-  FROM embeddings e JOIN signs sg ON sg.c = e.vec_id % {_CL_N}
-)"""
+{_sql_qv(xs=f"SELECT e.vec_id, sg.i, CAST(e.embedding[sg.i + 1] AS DOUBLE) + {_CL_W} * sg.s AS x"
+             f" FROM embeddings e JOIN signs sg ON sg.c = e.vec_id % {_CL_N}")}"""
 
 SQL_EMB_CLUSTERED_TOPK = f"""
 WITH {_SQL_CL_QV},
-pairdot AS (
-  SELECT qa.vec_id AS query_id, qb.vec_id AS corpus_id,
-         CAST(SUM(qa.q * qb.q) AS BIGINT) AS dot_q
-  FROM qv qa JOIN qv qb ON qb.i = qa.i AND qb.vec_id <> qa.vec_id
-  GROUP BY qa.vec_id, qb.vec_id
-)
-SELECT query_id, corpus_id, dot_q, CAST(rk AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY dot_q DESC, corpus_id) rk
-  FROM pairdot
-) WHERE rk <= 3
-"""
+{_sql_rerank(None, 3)}"""
 
-SQL_ANN_IVF_CLUSTERED = f"""
-WITH {_SQL_CL_QV},
-seeds AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cell, vec_id
-  FROM (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT {_CL_CELLS})
-),
-c0 AS (SELECT s.cell, q.i, q.q AS c FROM seeds s JOIN qv q ON q.vec_id = s.vec_id),
-{_sql_lloyd_iter('c0', '1')},
-{_sql_lloyd_iter('c1', '2')},
-sd AS (
-  SELECT v.vec_id, c.cell, SUM(v.q * c.c) AS d
-  FROM qv v JOIN c2 c ON c.i = v.i
-  GROUP BY v.vec_id, c.cell
-),
-ranked AS (
-  SELECT vec_id, cell,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d DESC, cell) AS rk
-  FROM sd
-),
-lists AS (SELECT vec_id AS corpus_id, cell FROM ranked WHERE rk = 1),
-probes AS (SELECT vec_id AS query_id, cell FROM ranked WHERE rk <= {_CL_PROBE}),
-cand AS (
-  SELECT DISTINCT p.query_id, l.corpus_id
-  FROM probes p JOIN lists l ON l.cell = p.cell
-  WHERE p.query_id <> l.corpus_id
-),
-pairdot AS (
-  SELECT c.query_id, c.corpus_id, CAST(SUM(qa.q * qb.q) AS BIGINT) AS dot_q
-  FROM cand c
-  JOIN qv qa ON qa.vec_id = c.query_id
-  JOIN qv qb ON qb.vec_id = c.corpus_id AND qb.i = qa.i
-  GROUP BY c.query_id, c.corpus_id
-)
-SELECT query_id, corpus_id, dot_q, CAST(rk AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY dot_q DESC, corpus_id) rk
-  FROM pairdot
-) WHERE rk <= 3
-"""
+SQL_ANN_IVF_CLUSTERED = _sql_ivf_topk(_CL_CELLS, _CL_PROBE, _CL_LLOYD, qv=_SQL_CL_QV)
 
 
 def semdedup_embeddings(spark, sf_dir):
@@ -4171,31 +4089,14 @@ def semdedup_embeddings(spark, sf_dir):
 
 SQL_SEMDEDUP = f"""
 WITH {_SQL_CL_QV},
-seeds AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cell, vec_id
-  FROM (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT 8)
+{_sql_ivf_cells(8, 2)},
+assign AS (SELECT vec_id, cell FROM ranked WHERE rk = 1),
+samecell AS (
+  SELECT a1.vec_id AS query_id, a2.vec_id AS corpus_id
+  FROM assign a1 JOIN assign a2 ON a2.cell = a1.cell AND a2.vec_id > a1.vec_id
 ),
-c0 AS (SELECT s.cell, q.i, q.q AS c FROM seeds s JOIN qv q ON q.vec_id = s.vec_id),
-{_sql_lloyd_iter('c0', '1')},
-{_sql_lloyd_iter('c1', '2')},
-sd AS (
-  SELECT v.vec_id, c.cell, SUM(v.q * c.c) AS d
-  FROM qv v JOIN c2 c ON c.i = v.i
-  GROUP BY v.vec_id, c.cell
-),
-assign AS (
-  SELECT vec_id, cell FROM sd
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d DESC, cell) = 1
-),
-pairdot AS (
-  SELECT qb.vec_id AS id_b, CAST(SUM(qa.q * qb.q) AS BIGINT) AS dot_q
-  FROM assign a1
-  JOIN assign a2 ON a2.cell = a1.cell AND a2.vec_id > a1.vec_id
-  JOIN qv qa ON qa.vec_id = a1.vec_id
-  JOIN qv qb ON qb.vec_id = a2.vec_id AND qb.i = qa.i
-  GROUP BY a1.vec_id, qb.vec_id
-),
-dup AS (SELECT DISTINCT id_b AS vec_id FROM pairdot WHERE dot_q >= 4200000)
+{_sql_pairdot("samecell")},
+dup AS (SELECT DISTINCT corpus_id AS vec_id FROM pairdot WHERE dot_q >= 4200000)
 SELECT a.vec_id, CAST(a.cell AS BIGINT) AS cell,
   CAST(CASE WHEN d.vec_id IS NULL THEN 1 ELSE 0 END AS INT) AS keep
 FROM assign a LEFT JOIN dup d USING (vec_id)
@@ -4244,30 +4145,11 @@ kept AS (
   SELECT e.vec_id, e.embedding
   FROM embeddings e JOIN sel ON sel.doc_id = e.vec_id AND sel.selected = 1
 ),
-kqv AS (
-  SELECT vec_id, CAST(i AS INT) AS i,
-         CAST(CASE WHEN embedding[CAST(i AS INT) + 1] >= 0
-              THEN FLOOR(ABS(embedding[CAST(i AS INT) + 1] * 1000) + 0.5)
-              ELSE -FLOOR(ABS(embedding[CAST(i AS INT) + 1] * 1000) + 0.5)
-              END AS BIGINT) AS q
-  FROM kept, range(64) r(i)
-),
-kseeds AS (
-  SELECT vec_id AS cent_id FROM kept ORDER BY vec_id LIMIT {_CL_CELLS}
-),
-kcent AS (SELECT s.cent_id, q.i, q.q AS c FROM kseeds s JOIN kqv q ON q.vec_id = s.cent_id),
-kd AS (
-  SELECT v.vec_id, c.cent_id, SUM(v.q * c.c) AS d
-  FROM kqv v JOIN kcent c ON c.i = v.i
-  GROUP BY v.vec_id, c.cent_id
-),
-own AS (
-  SELECT vec_id AS doc_id, cent_id AS cell FROM kd
-  QUALIFY ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d DESC, cent_id) = 1
-)
-SELECT doc_id, cell,
+{_sql_qv("kept")},
+{_sql_ivf_cells(_CL_CELLS, src="kept")}
+SELECT vec_id AS doc_id, cell,
        CAST(COUNT(*) OVER (PARTITION BY cell) AS BIGINT) AS cell_size
-FROM own
+FROM ranked WHERE rk = 1
 """
 
 
@@ -4297,28 +4179,8 @@ def ann_ivf_pq_topk(spark, sf_dir):
 
 SQL_ANN_IVF_PQ = f"""
 WITH {_SQL_CL_QV},
-seeds AS (
-  SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS cell, vec_id
-  FROM (SELECT vec_id FROM embeddings ORDER BY vec_id LIMIT {_CL_CELLS})
-),
-c0 AS (SELECT s.cell, q.i, q.q AS c FROM seeds s JOIN qv q ON q.vec_id = s.vec_id),
-sd AS (
-  SELECT v.vec_id, c.cell, SUM(v.q * c.c) AS d
-  FROM qv v JOIN c0 c ON c.i = v.i
-  GROUP BY v.vec_id, c.cell
-),
-ranked AS (
-  SELECT vec_id, cell,
-         ROW_NUMBER() OVER (PARTITION BY vec_id ORDER BY d DESC, cell) AS rk
-  FROM sd
-),
-lists AS (SELECT vec_id AS corpus_id, cell FROM ranked WHERE rk = 1),
-probes AS (SELECT vec_id AS query_id, cell FROM ranked WHERE rk <= {_CL_PROBE}),
-cand AS (
-  SELECT DISTINCT p.query_id, l.corpus_id
-  FROM probes p JOIN lists l ON l.cell = p.cell
-  WHERE p.query_id <> l.corpus_id
-),
+{_sql_ivf_cells(_CL_CELLS)},
+{_sql_ivf_cand(_CL_PROBE)},
 cb AS (
   SELECT s.j, CAST(q.i // {64 // _PQ_M} AS INT) AS m, q.i, q.q AS c
   FROM (SELECT CAST(ROW_NUMBER() OVER (ORDER BY vec_id) - 1 AS BIGINT) AS j, vec_id
@@ -4347,19 +4209,7 @@ shortlist AS (
   QUALIFY ROW_NUMBER() OVER (PARTITION BY query_id
           ORDER BY adc_q DESC, corpus_id) <= {_PQ_RERANK}
 ),
-pairdot AS (
-  SELECT s.query_id, s.corpus_id, CAST(SUM(qa.q * qb.q) AS BIGINT) AS dot_q
-  FROM shortlist s
-  JOIN qv qa ON qa.vec_id = s.query_id
-  JOIN qv qb ON qb.vec_id = s.corpus_id AND qb.i = qa.i
-  GROUP BY s.query_id, s.corpus_id
-)
-SELECT query_id, corpus_id, dot_q, CAST(rk AS INT) AS rank FROM (
-  SELECT *, ROW_NUMBER() OVER (PARTITION BY query_id
-            ORDER BY dot_q DESC, corpus_id) rk
-  FROM pairdot
-) WHERE rk <= 3
-"""
+{_sql_rerank("shortlist", 3)}"""
 
 
 # -- scalar-field cascade -------------------------------------------------
