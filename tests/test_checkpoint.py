@@ -7,8 +7,11 @@ import subprocess
 import sys
 
 import pandas as pd
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 import yomitoku_spark
 from yomitoku_spark import datagen
@@ -243,7 +246,8 @@ def test_wave_is_one_pass(spark, tdf, tmp_path):
     """Each wave's metrics come from its own write: the write plan
     carries them (CollectMetrics, with no Exchange that could replay a
     map stage's accumulator updates), and no plan reads the result
-    directory back. A wave runs two SQL executions: write, state append."""
+    directory back. A wave runs one SQL execution, its write: the driver
+    commits the state row, and the write leaves no ``_SUCCESS``."""
     out = str(tmp_path / "out_pass")
     CP.run_resumable(tdf, out, n_buckets=8, wave_size=4)
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
@@ -253,8 +257,74 @@ def test_wave_is_one_pass(spark, tdf, tmp_path):
     result = os.path.join(out, "result")
     assert not [d for d in plans if re.search(r"Location: \w+ \[[^\]]*" + re.escape(result), d)]
     writes = [d for d in plans if re.search(rf"Arguments: file:{re.escape(result)}/wave=\d+, ", d)]
-    assert len(writes) == 2 and len(plans) == 4
+    assert len(writes) == 2 and len(plans) == 2
     assert all("CollectMetrics" in d and "Exchange" not in d for d in writes)
+    assert _result_layout(out) == ["wave=0", "wave=4"]
+    assert not [w for w in _result_layout(out) if "_SUCCESS" in os.listdir(os.path.join(result, w))]
+
+
+class _Crash(Exception):
+    pass
+
+
+def test_crash_before_state_rename(spark, tdf, tmp_path, monkeypatch):
+    """A crash after a wave's result commit, with its state file written
+    but not yet renamed into place, leaves a ``_``-prefixed temp file
+    beside the committed result: the done set and the state table ignore
+    it, and the resume redoes that wave exactly once."""
+    renames = []
+
+    class CrashOnSecondRename:  # the state path's FileSystem, up to the crash
+        def __init__(self, fs):
+            self.fs = fs
+
+        def __getattr__(self, name):
+            return getattr(self.fs, name)
+
+        def rename(self, src, dst):
+            renames.append(src.getName())
+            if len(renames) == 2:
+                raise _Crash
+            return self.fs.rename(src, dst)
+
+    fs_path = CP._fs_path
+
+    def crashing_fs_path(spark, path):
+        fs, p = fs_path(spark, path)
+        return CrashOnSecondRename(fs), p
+
+    monkeypatch.setattr(CP, "_fs_path", crashing_fs_path)
+    out = str(tmp_path / "out_tmp")
+    with pytest.raises(_Crash):
+        CP.run_resumable(tdf, out, n_buckets=16, wave_size=4)
+    monkeypatch.undo()
+    assert _result_layout(out) == ["wave=0", "wave=4"]
+    state_dir = os.path.join(out, "_checkpoint")
+    assert renames[1].startswith("_") and renames[1] in os.listdir(state_dir)
+    assert CP.done_buckets(spark, out) == set(range(4))
+    assert sorted(r.bucket for r in CP.read_state(spark, out).collect()) == list(range(4))
+
+    assert CP.run_resumable(tdf, out, n_buckets=16, wave_size=4) == 12
+    assert _result_layout(out) == ["wave=0", "wave=12", "wave=4", "wave=8"]
+    _assert_exactly_once(spark, out, tdf, 16)
+
+
+def test_state_file_round_trips(spark, tdf, tmp_path):
+    """The driver-written state file holds the types of ``STATE_SCHEMA``:
+    Spark infers them from the file, reads it back under the declared
+    schema, and pyarrow reads the same types and rows."""
+    out = str(tmp_path / "out_schema")
+    CP.run_resumable(tdf.limit(20), out, n_buckets=4, wave_size=4)
+    state_dir = os.path.join(out, "_checkpoint")
+    (name,) = [f for f in os.listdir(state_dir) if not f.startswith((".", "_"))]
+    assert re.fullmatch(r"part-00000-[0-9a-f]{32}\.parquet", name)
+    declared = StructType.fromDDL(CP.STATE_SCHEMA)
+    assert spark.read.parquet(state_dir).schema == declared
+    table = pq.read_table(os.path.join(state_dir, name))
+    assert table.schema.equals(to_arrow_schema(declared))
+    got = sorted(tuple(r) for r in CP.read_state(spark, out).collect())
+    assert got == sorted(tuple(r.values()) for r in table.to_pylist())
+    assert [r[0] for r in got] == [0, 1, 2, 3] and sum(r[3] for r in got) == 20
 
 
 _RETRY_JOB = """

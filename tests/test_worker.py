@@ -1,9 +1,11 @@
 """The worker's stat-keyed zipimport shim, in-process: an archive on
 ``sys.path`` keeps its directory across ``importlib.invalidate_caches()``
-while unchanged, and is re-read (new content importable) once rewritten."""
+while unchanged, and is re-read (new content importable) once rewritten.
+The worker's heap freeze, in a subprocess: it freezes once per process."""
 
 import importlib
 import os
+import subprocess
 import sys
 import zipfile
 import zipimport
@@ -76,3 +78,28 @@ def test_rewritten_archive_is_reread(archive):
     assert importlib.import_module("shimmod").VALUE == "rewritten"
     importlib.invalidate_caches()
     assert len(reads) == n + 1
+
+
+_FREEZE_JOB = """
+import gc
+from yomitoku_spark.plans.worker import freeze_worker_heap
+
+assert gc.get_freeze_count() == 0
+freeze_worker_heap()
+frozen = gc.get_freeze_count()
+assert frozen > 1000, frozen  # the imports' objects
+later = [[i] for i in range(1000)]  # would be frozen by a second freeze
+freeze_worker_heap()
+assert gc.get_freeze_count() == frozen, (gc.get_freeze_count(), frozen)
+"""
+
+
+def test_heap_freeze_once_per_process():
+    """The first call freezes what the imports left; a second call in the
+    same process freezes nothing more. In a subprocess, so that this
+    process is never frozen."""
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = dict(os.environ, PYTHONPATH=root)
+    p = subprocess.run([sys.executable, "-c", _FREEZE_JOB], capture_output=True, text=True,
+                       env=env, timeout=120)
+    assert p.returncode == 0, p.stderr[-3000:]

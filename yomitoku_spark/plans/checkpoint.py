@@ -19,9 +19,16 @@ metric rows. Design:
 * on restart, done buckets are skipped and only the remainder runs; a
   restart with another bucket count is refused.
 
-On a real cluster the state table would be Iceberg (atomic appends);
-the parquet append used here has the same layout and the same
-resume semantics for a single writer.
+Each wave is one Spark job: the result write, with the metrics observed
+on it and no ``_SUCCESS`` marker (the state row is the commit marker,
+and no reader looks for one). The driver then commits the wave's state
+rows itself: it writes them as one parquet file, through the state
+path's own FileSystem, under a ``_``-prefixed name that Spark's reader
+skips, and renames it to ``part-<first bucket>-<uuid>.parquet``. A crash
+before the rename leaves only an ignored temp file, so the resume
+redoes the wave. On a real cluster the state table would be Iceberg
+(atomic appends); the rename used here has the same layout and the
+same resume semantics for a single writer.
 
 (The reference has no analog — it reprocesses files from scratch,
 cli/main.py:538-549; resumability is what 10^12 turns forces.)
@@ -32,10 +39,14 @@ from __future__ import annotations
 import hashlib
 import os
 import time
+import uuid
 
-import pandas as pd
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 from yomitoku_spark import __version__
 from yomitoku_spark.plans.pipeline import RESULT_SCHEMA, extract
@@ -107,53 +118,73 @@ def run_resumable(
     files = "\n".join(sorted(transcripts.inputFiles())).encode()
     lineage = f"yomitoku_spark-{__version__} input:{hashlib.sha256(files).hexdigest()[:16]}"
 
-    bucketed = transcripts.withColumn("bucket", _bucket_expr(n_buckets))
+    bucket = _bucket_sql(n_buckets)
     # n_turns and the metric sums, in STATE_SCHEMA order
     vals = ["1", "blocks_kept", "blocks_dropped", "chars_emitted"]
+    state_schema = to_arrow_schema(StructType.fromDDL(STATE_SCHEMA))
+    state_fs, state_dir = _fs_path(spark, _state_dir(output_dir))
 
     processed = 0
     waves = [todo[i : i + wave_size] for i in range(0, len(todo), wave_size)]
     for wi, wave in enumerate(waves):
         if max_waves is not None and wi >= max_waves:
             break
-        part = bucketed.filter(F.col("bucket").isin(wave))
-        res = extract(part.drop("bucket")).withColumn("bucket", _bucket_expr(n_buckets))
+        res = extract(transcripts.filter(_bucket_expr(n_buckets).isin(wave)))
         # Exactly-once: Spark applies a result task's accumulator updates once per
         # partition and drops a failed attempt's. That needs no Exchange between observe
         # and the write: extract has none, and a caller's repartition sits below it.
         # One SQL string per aggregate: half the build cost of a Column tree via py4j.
+        # Each hashes the output's keys with the filter's bucket text.
         obs = Observation()
-        res = res.observe(obs, *(F.expr(f"sum(CASE WHEN bucket = {b} THEN {v} END) AS `{b}_{i}`")
+        res = res.observe(obs, *(F.expr(f"sum(CASE WHEN {bucket} = {b} THEN {v} END) AS `{b}_{i}`")
                                  for b in wave for i, v in enumerate(vals)))
-        # Per-wave idempotent replace. Waves run in sorted order and each appends its
+        # Per-wave idempotent replace. Waves run in sorted order and each commits its
         # state in one file, so the done set is a prefix of range(n_buckets): the first
         # wave not done starts at the same bucket on every resume, whatever its
         # wave_size, and its overwrite of the whole wave=<that bucket> directory
         # replaces any rows a crash left between the result commit and the state
-        # append, even when this wave's own buckets are empty.
-        res.drop("bucket").write.mode("overwrite").parquet(
-            f"{_result_dir(output_dir)}/wave={wave[0]}")
+        # commit, even when this wave's own buckets are empty. The state row, not a
+        # _SUCCESS file, marks the wave committed.
+        res.write.mode("overwrite").option(
+            "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
+        ).parquet(f"{_result_dir(output_dir)}/wave={wave[0]}")
         got, now = obs.get, time.time()
         # an empty bucket's sums are null; it still needs a done marker
         rows = [(b, n_buckets, "done", *(got[f"{b}_{i}"] or 0 for i in range(len(vals))),
                  now, lineage) for b in wave]
-        # via pandas: Arrow needs no Python worker (a list of tuples does);
-        # one state file per wave
-        state = spark.createDataFrame(pd.DataFrame(rows), STATE_SCHEMA).coalesce(1)
-        state.write.mode("append").parquet(_state_dir(output_dir))
+        _commit_state(state_fs, state_dir, rows, state_schema, wave[0])
         processed += len(wave)
     return processed
 
 
-def _bucket_expr(n_buckets: int) -> F.Column:
+def _commit_state(fs, state_dir, rows: list[tuple], schema: pa.Schema, first: int) -> None:
+    """Write one wave's state rows as one parquet file: to a ``_``-prefixed
+    temp name, which Spark's reader skips, then renamed into place."""
+    buf = pa.BufferOutputStream()
+    pq.write_table(pa.table(list(zip(*rows)), schema=schema), buf)
+    name = f"{first:05d}-{uuid.uuid4().hex}.parquet"
+    tmp, final = state_dir.suffix(f"/_tmp-{name}"), state_dir.suffix(f"/part-{name}")
+    out = fs.create(tmp)
+    try:
+        out.write(buf.getvalue().to_pybytes())
+    finally:
+        out.close()
+    if not fs.rename(tmp, final):
+        raise OSError(f"could not rename {tmp} to {final}")
+
+
+def _bucket_sql(n_buckets: int) -> str:
     # xxhash64 is TYPE-sensitive (int vs bigint hash differently), and
     # extract() emits turn_idx as int — so the input-side filter and the
     # output-side observe MUST hash the same types, or a row selected by
     # one bucket has its metrics counted in another bucket's state row.
-    return F.pmod(
-        F.xxhash64(F.col("conv_id").cast("string"), F.col("turn_idx").cast("int")),
-        F.lit(n_buckets),
-    ).cast("int")
+    # Both sides use this one text, whose casts fix the types.
+    return (f"CAST(pmod(xxhash64(CAST(conv_id AS STRING), CAST(turn_idx AS INT)), "
+            f"{n_buckets}) AS INT)")
+
+
+def _bucket_expr(n_buckets: int) -> F.Column:
+    return F.expr(_bucket_sql(n_buckets))
 
 
 # with the declared schemas: a run whose input has no rows commits no

@@ -45,7 +45,7 @@ from pyspark.sql import functions as F
 from yomitoku_spark import spec
 from yomitoku_spark.operators.reading_order import layout_order
 from yomitoku_spark.plans.segment import BLOCK_FIELDS, BLOCKS_SCHEMA, segment_turn
-from yomitoku_spark.plans.worker import install_zip_stat_shim
+from yomitoku_spark.plans.worker import freeze_worker_heap, install_zip_stat_shim
 
 RESULT_SCHEMA = (
     "conv_id string, turn_idx int, ts timestamp, extracted_text string, "
@@ -141,7 +141,9 @@ def _arrow_stage(kernel):
     """The ``mapInArrow`` function that applies ``kernel`` to every batch."""
 
     def run(batches):
-        install_zip_stat_shim()  # runs on the Python worker, once per process
+        # on the Python worker; each acts once per process
+        install_zip_stat_shim()
+        freeze_worker_heap()
         for rb in batches:
             yield kernel(rb)
 

@@ -10,10 +10,17 @@ first on the worker path, so each task pays ~0.2 CPU-s before the kernel
 runs. :func:`install_zip_stat_shim` keys the re-read on the archive's
 (inode, size, mtime_ns): a changed archive is still re-read — the reason
 pyspark invalidates — while an unchanged one keeps its directory.
+
+The daemon that forks the workers also runs a full ``gc.collect()`` in a
+reused worker after every task, which walks every object the worker's
+imports left: ~73.5k objects, 43–84 ms a pass in a worker on a 4-core
+host. :func:`freeze_worker_heap` moves them, once per process, to the
+permanent generation that no collection walks (under 1 ms a pass).
 """
 
 from __future__ import annotations
 
+import gc
 import os
 import zipimport
 
@@ -47,3 +54,12 @@ def install_zip_stat_shim() -> None:
 
     invalidate_caches.stat_keyed = True
     zipimport.zipimporter.invalidate_caches = invalidate_caches
+
+
+def freeze_worker_heap() -> None:
+    """Collect once, then freeze what survives (the imported modules and
+    their objects) out of every later collection. Only the first call in
+    a process freezes; call it from code that runs on the Python worker."""
+    if gc.get_freeze_count() == 0:
+        gc.collect()
+        gc.freeze()
