@@ -9,7 +9,8 @@ N = max(1, cores // 4) from the host's usable cores (the count Spark's
 (fresh JVM) pinned to the first N (resp. 4N) usable cores, so a level
 is N cores of work and not N task slots with idle cores helping the
 driver JVM's GC/JIT threads and the Python worker. Reports wall time,
-turns/sec, scaling efficiency E = (T_N / T_4N) / 4, and a content
+turns/sec, scaling efficiency E = (T_N / T_4N) / 4 from each level's
+median wall (the best-rep E beside it), and a content
 checksum that must match across levels AND match the pure-Python
 oracle (per-turn equality evidence at bench scale).
 
@@ -97,10 +98,8 @@ def child(cpus: int, input_dir: str) -> None:
                 }
             )
     walls = [r["wall"] for r in records]
-    # min across reps = steady-state throughput: the C2 JIT needs ~4 full
-    # passes over the codegen'd scan+Arrow stages before a 32-core level
-    # stops being compilation-bound (observed 11.4→5.3s across 7 reps),
-    # while per-rep noise on this shared box is ±20%
+    # the best rep, reported beside the median: one lucky rep moves the
+    # best by ~10% on a shared host, so E's headline is the median
     wall = min(walls)
     sw = sorted(walls)
 
@@ -176,8 +175,8 @@ def main() -> None:
         print(line)
 
     r_lo, r_hi = results[lo], results[hi]
-    eff = (r_lo["wall_sec"] / r_hi["wall_sec"]) / 4
-    eff_p50 = (r_lo["wall_p50"] / r_hi["wall_p50"]) / 4
+    eff_best = (r_lo["wall_sec"] / r_hi["wall_sec"]) / 4
+    eff = (r_lo["wall_p50"] / r_hi["wall_p50"]) / 4
     checks_match = r_lo["checksum"] == r_hi["checksum"]
     o_sum, o_n = measure.oracle_checksum(input_dir)
     oracle_match = o_sum == r_lo["checksum"] and o_n == r_lo["n_results"]
@@ -192,24 +191,23 @@ synthetic transcripts table (seed=42, {n_convs} conversations,
 {r_lo['n_turns']} turns, one 12× skewed conversation), materialized once
 to parquet and read identically by both runs. Each parallelism level is
 a fresh JVM pinned (`os.sched_setaffinity`) to one usable core per
-task slot ({r_lo['affinity']} and {r_hi['affinity']}); timing is best-of-N full passes after one or two untimed
-warm-up passes (`tools/measure.py`). Host: {n_cores} usable cores, so
+task slot ({r_lo['affinity']} and {r_hi['affinity']}); timing is N full passes after one or two untimed
+warm-up passes (`tools/measure.py`), summarized by their median. Host: {n_cores} usable cores, so
 N = {lo} and 4N = {hi} (N = max(1, cores // 4)).
 
-| parallelism | wall best (s) | p50 | p90 | max/min | turns/sec |
+| parallelism | wall p50 (s) | best | p90 | max/min | turns/sec at p50 |
 |---|---|---|---|---|---|
-| {m_lo} (N) | {r_lo['wall_sec']} | {r_lo['wall_p50']} | {r_lo['wall_p90']} | {r_lo['wall_spread']} | {r_lo['turns_per_sec']} |
-| {m_hi} (4N) | {r_hi['wall_sec']} | {r_hi['wall_p50']} | {r_hi['wall_p90']} | {r_hi['wall_spread']} | {r_hi['turns_per_sec']} |
+| {m_lo} (N) | {r_lo['wall_p50']} | {r_lo['wall_sec']} | {r_lo['wall_p90']} | {r_lo['wall_spread']} | {r_lo['n_turns'] / r_lo['wall_p50']:.1f} |
+| {m_hi} (4N) | {r_hi['wall_p50']} | {r_hi['wall_sec']} | {r_hi['wall_p90']} | {r_hi['wall_spread']} | {r_hi['n_turns'] / r_hi['wall_p50']:.1f} |
 
 GC pinned per child JVM (G1, 200 ms pause target, Xms=Xmx={r_hi['heap']}) — the
-wall-time distribution above is the evidence the best-of-N margin is
-real (target: max/min < 3 at {m_hi}).
+wall-time distribution above bounds the reps' spread (target:
+max/min < 3 at {m_hi}).
 
-**Scaling efficiency E = (T_{lo} / T_{hi}) / 4 = {eff:.3f}**
+**Scaling efficiency E = (T_{lo} / T_{hi}) / 4 = {eff:.3f}**, T the median wall
 (pass threshold ≥ 0.8 per BASELINE.json north_rule: {"PASS" if eff >= 0.8 else "FAIL"};
-p50-based cross-check E_p50 = {eff_p50:.3f} — p50 includes the first
-JIT-compiling reps and any externally-perturbed reps, so it understates
-steady state; best-of-N is the steady-state measure.)
+best-rep E = {eff_best:.3f} — one rep per level, so a single lucky or
+perturbed rep moves it; the median does not.)
 
 ## Interference evidence
 
@@ -224,7 +222,7 @@ this box, so each outlier is ATTRIBUTED rather than asserted away:
    {hi} cores at once (java CPU drops while wall stretches).
 
 Per-rep 1-min loadavg and, on >2x outlier reps, the concurrent top CPU
-consumers are also captured. Best-of-N is the steady-state headline;
+consumers are also captured. The median is the headline;
 the tables below let a reader match every slow rep to its cause.
 
 - {m_lo} per-rep steal%: {r_lo.get('steal_pcts')}
@@ -253,7 +251,8 @@ Round-specific findings (throughput attribution, operator mode
 benchmarks) live in BENCH/NOTES.md — bench_scaling.py regenerates THIS
 file only.
 """)
-    print(f"E = {eff:.3f}; checksums match={checks_match}; oracle match={oracle_match}")
+    print(f"E = {eff:.3f} (median walls), {eff_best:.3f} (best reps); "
+          f"checksums match={checks_match}; oracle match={oracle_match}")
     print(f"wrote {out_md}")
 
 

@@ -119,9 +119,9 @@ def test_empty_input_reads_back_empty(spark, tdf, tmp_path):
 
 def test_bigint_turn_idx_buckets_consistently(spark, tdf, tmp_path):
     """xxhash64 is type-sensitive: a caller passing bigint turn_idx must
-    still have each row's metrics counted in the bucket that selected it
-    (the input-side filter and the output-side observe hash explicitly
-    typed keys), or a bucket's state row counts another bucket's rows."""
+    still have each row's metrics counted in the bucket its key values
+    hash to (the input-side bucket hashes explicitly typed keys), or a
+    bucket's state row counts another bucket's rows."""
     out = str(tmp_path / "out_bigint")
     wide = tdf.withColumn("turn_idx", F.col("turn_idx").cast("bigint"))
     CP.run_resumable(wide, out, n_buckets=8, wave_size=2)
@@ -218,7 +218,7 @@ def test_unreadable_state_raises(spark, tdf, tmp_path):
     (out / "_checkpoint").mkdir(parents=True)
     (out / "_checkpoint" / "part-00000.parquet").write_text("not parquet")
     # the reader's own diagnosis, not the path (which names .parquet)
-    with pytest.raises(Exception, match="is not a Parquet file"):
+    with pytest.raises(Exception, match="not a parquet file"):
         CP.run_resumable(tdf.limit(20), str(out), n_buckets=4, wave_size=4)
 
 
@@ -243,13 +243,15 @@ def test_resume_with_other_bucket_count_raises(spark, tdf, tmp_path):
 
 
 def test_wave_is_one_pass(spark, tdf, tmp_path):
-    """Each wave's metrics come from its own write: the write plan
-    carries them (CollectMetrics, with no Exchange that could replay a
-    map stage's accumulator updates), and no plan reads the result
-    directory back. A wave runs one SQL execution, its write: the driver
-    commits the state row, and the write leaves no ``_SUCCESS``."""
+    """Each wave is one SQL execution, its write: the wave's kernel counts
+    the state metrics (no CollectMetrics), no Exchange sits under the write
+    (a map stage's accumulator updates could be replayed), no plan reads
+    the result directory back, and the resume reads its done set on the
+    driver, with no SQL execution. The write leaves no ``_SUCCESS``."""
     out = str(tmp_path / "out_pass")
+    CP.run_resumable(tdf, out, n_buckets=8, wave_size=4, max_waves=1)
     CP.run_resumable(tdf, out, n_buckets=8, wave_size=4)
+    assert CP.done_buckets(spark, out) == set(range(8))
     spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
     execs = spark._jsparkSession.sharedState().statusStore().executionsList()
     plans = [d for d in (execs.apply(i).physicalPlanDescription() for i in range(execs.size()))
@@ -258,9 +260,48 @@ def test_wave_is_one_pass(spark, tdf, tmp_path):
     assert not [d for d in plans if re.search(r"Location: \w+ \[[^\]]*" + re.escape(result), d)]
     writes = [d for d in plans if re.search(rf"Arguments: file:{re.escape(result)}/wave=\d+, ", d)]
     assert len(writes) == 2 and len(plans) == 2
-    assert all("CollectMetrics" in d and "Exchange" not in d for d in writes)
+    assert all("CollectMetrics" not in d and "Exchange" not in d for d in writes)
     assert _result_layout(out) == ["wave=0", "wave=4"]
     assert not [w for w in _result_layout(out) if "_SUCCESS" in os.listdir(os.path.join(result, w))]
+
+
+def _assert_state_matches_result(spark, out, n_buckets):
+    """Every bucket's state row holds the count and metric sums of its
+    rows in the read-back result; an empty bucket's row holds zeros."""
+    metrics = ["blocks_kept", "blocks_dropped", "chars_emitted"]
+    got = CP.read_result(spark, out).groupBy(CP._bucket_expr(n_buckets).alias("bucket")).agg(
+        F.count(F.lit(1)).alias("n_turns"), *(F.sum(c).alias(c) for c in metrics))
+    per_bucket = {r.bucket: tuple(r)[1:] for r in got.collect()}
+    state = CP.read_state(spark, out).collect()
+    assert sorted(r.bucket for r in state) == list(range(n_buckets))
+    assert {r.bucket: (r.n_turns, *(r[c] for c in metrics)) for r in state} == {
+        b: per_bucket.get(b, (0, 0, 0, 0)) for b in range(n_buckets)}
+
+
+def test_state_rows_match_result_per_bucket(spark, tdf, tmp_path):
+    """A run stopped after 2 waves and resumed for 2 more, over an input
+    with datagen's 12x hot conversation and with empty buckets: each
+    bucket's state row equals its rows in the result."""
+    sizes = sorted(r["count"] for r in tdf.groupBy("conv_id").count().collect())
+    assert sizes[-1] >= 10 * sizes[len(sizes) // 2]  # the hot conversation
+    sparse = tdf.filter(~CP._bucket_expr(16).isin(2, 5, 6, 13))
+    out = str(tmp_path / "out_per_bucket")
+    assert CP.run_resumable(sparse, out, n_buckets=16, wave_size=4, max_waves=2) == 8
+    assert CP.run_resumable(sparse, out, n_buckets=16, wave_size=4) == 8
+    _assert_exactly_once(spark, out, sparse, 16)
+    _assert_state_matches_result(spark, out, 16)
+
+
+def test_input_with_internal_bucket_column(spark, tdf, tmp_path):
+    """An input that already has a column named like the runner's
+    internal bucket column runs as any other input: that column is
+    neither read nor written."""
+    out = str(tmp_path / "out_clash")
+    clash = tdf.withColumn(CP._BUCKET, F.lit("not a bucket"))
+    assert CP.run_resumable(clash, out, n_buckets=8, wave_size=4) == 8
+    assert CP.read_result(spark, out).columns == extract(tdf).columns
+    _assert_exactly_once(spark, out, tdf, 8)
+    _assert_state_matches_result(spark, out, 8)
 
 
 class _Crash(Exception):

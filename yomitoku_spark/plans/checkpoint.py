@@ -12,23 +12,23 @@ metric rows. Design:
   own ``wave=`` directory — each write task writes one file per wave,
   and re-running a wave is an idempotent replace, never a double-count;
 * the state table gains one row per committed bucket with the bucket
-  count, row count, metric sums (blocks kept/dropped, chars emitted —
-  observed on the write's own pass, exactly-once per committed
-  partition), an attempt timestamp, and a lineage string (code
-  version + a digest of the sorted input file list);
+  count, row count, metric sums (blocks kept/dropped, chars emitted),
+  an attempt timestamp, and a lineage string (code version + a digest
+  of the sorted input file list);
 * on restart, done buckets are skipped and only the remainder runs; a
   restart with another bucket count is refused.
 
-Each wave is one Spark job: the result write, with the metrics observed
-on it and no ``_SUCCESS`` marker (the state row is the commit marker,
-and no reader looks for one). The driver then commits the wave's state
-rows itself: it writes them as one parquet file, through the state
-path's own FileSystem, under a ``_``-prefixed name that Spark's reader
-skips, and renames it to ``part-<first bucket>-<uuid>.parquet``. A crash
-before the rename leaves only an ignored temp file, so the resume
-redoes the wave. On a real cluster the state table would be Iceberg
-(atomic appends); the rename used here has the same layout and the
-same resume semantics for a single writer.
+Each wave is one Spark job, the result write, whose Arrow kernel also
+counts each bucket's turns and metric sums into one accumulator (the
+bucket is hashed once, on the input side). Spark merges a result task's
+accumulator updates on the driver once per partition and drops a failed
+attempt's, so the counts are exactly-once. The driver then commits the
+state rows as one parquet file through the state path's own FileSystem:
+a ``_`` temp file, which Spark's reader skips, renamed to ``part-<first
+bucket>-<uuid>.parquet``, the commit marker (no ``_SUCCESS`` is written).
+A crash before the rename leaves the wave to be redone. The done set is
+read back on the driver with pyarrow. On a cluster the state table would
+be Iceberg (atomic appends), with the same resume semantics.
 
 (The reference has no analog — it reprocesses files from scratch,
 cli/main.py:538-549; resumability is what 10^12 turns forces.)
@@ -41,15 +41,17 @@ import os
 import time
 import uuid
 
+import numpy as np
 import pyarrow as pa
 import pyarrow.parquet as pq
-from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.accumulators import AccumulatorParam
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.pandas.types import to_arrow_schema
 from pyspark.sql.types import StructType
 
 from yomitoku_spark import __version__
-from yomitoku_spark.plans.pipeline import RESULT_SCHEMA, extract
+from yomitoku_spark.plans.pipeline import RESULT_SCHEMA, _arrow_stage, _turns, extract_batch
 
 STATE_SCHEMA = (
     "bucket int, n_buckets int, status string, n_turns bigint, blocks_kept bigint, "
@@ -70,22 +72,30 @@ def _fs_path(spark: SparkSession, path: str):  # the path's own FS, so any URI w
     return p.getFileSystem(spark.sparkContext._jsc.hadoopConfiguration()), p
 
 
-def _done_rows(spark: SparkSession, output_dir: str) -> set:
-    """Distinct ``(bucket, n_buckets)`` of the done rows, deduplicated on the
-    driver: one state row per bucket needs no shuffle. A missing state dir
-    means nothing is done; any other read error propagates, since treating an
-    unreadable state as empty would redo committed buckets and their state rows."""
+def _done_rows(spark: SparkSession, output_dir: str) -> set[tuple[int, int]]:
+    """Distinct ``(bucket, n_buckets)`` of the done rows, read on the driver
+    from every state file not named ``_*`` or ``.*`` (Spark's reader skips
+    those). A missing state dir means nothing is done; any other read error
+    propagates, since treating an unreadable state as empty would redo
+    committed buckets."""
     fs, path = _fs_path(spark, _state_dir(output_dir))
-    if not fs.exists(path):
-        return set()
-    # with the schema: a state dir holding no committed file reads as empty
-    state = spark.read.schema(STATE_SCHEMA).parquet(_state_dir(output_dir))
-    return set(state.filter(F.col("status") == "done").select("bucket", "n_buckets").collect())
+    done = set()
+    for st in fs.globStatus(path.suffix("/[!_.]*")) or []:
+        stream = fs.open(st.getPath())
+        try:
+            data = pa.BufferReader(spark._jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
+            rows = pq.read_table(data).to_pylist()
+        except pa.ArrowInvalid as e:
+            raise ValueError(f"unreadable state file {st.getPath()}: {e}") from e
+        finally:
+            stream.close()
+        done.update((r["bucket"], r["n_buckets"]) for r in rows if r["status"] == "done")
+    return done
 
 
 def done_buckets(spark: SparkSession, output_dir: str) -> set[int]:
     """Buckets with a done row."""
-    return {r.bucket for r in _done_rows(spark, output_dir)}
+    return {b for b, _ in _done_rows(spark, output_dir)}
 
 
 def run_resumable(
@@ -106,7 +116,7 @@ def run_resumable(
     call again to resume)."""
     spark = transcripts.sparkSession
     done = _done_rows(spark, output_dir)
-    started = {r.n_buckets for r in done} - {n_buckets}
+    started = {n for _, n in done} - {n_buckets}
     if started:
         raise ValueError(f"cannot resume {output_dir} with n_buckets={n_buckets}: its done "
                          f"rows have n_buckets={'/'.join(map(str, started))}")
@@ -114,30 +124,22 @@ def run_resumable(
     if fs.globStatus(result.suffix("/bucket=*")):
         raise ValueError(f"cannot resume {output_dir}: its result is partitioned by bucket; "
                          "restart into a fresh output directory")
-    todo = sorted(set(range(n_buckets)) - {r.bucket for r in done})
+    todo = sorted(set(range(n_buckets)) - {b for b, _ in done})
     files = "\n".join(sorted(transcripts.inputFiles())).encode()
     lineage = f"yomitoku_spark-{__version__} input:{hashlib.sha256(files).hexdigest()[:16]}"
 
-    bucket = _bucket_sql(n_buckets)
-    # n_turns and the metric sums, in STATE_SCHEMA order
-    vals = ["1", "blocks_kept", "blocks_dropped", "chars_emitted"]
+    turns = _turns(transcripts, F.col("ts").cast("timestamp"),
+                   _bucket_expr(n_buckets).alias(_BUCKET))
     state_schema = to_arrow_schema(StructType.fromDDL(STATE_SCHEMA))
     state_fs, state_dir = _fs_path(spark, _state_dir(output_dir))
 
-    processed = 0
-    waves = [todo[i : i + wave_size] for i in range(0, len(todo), wave_size)]
-    for wi, wave in enumerate(waves):
-        if max_waves is not None and wi >= max_waves:
-            break
-        res = extract(transcripts.filter(_bucket_expr(n_buckets).isin(wave)))
-        # Exactly-once: Spark applies a result task's accumulator updates once per
-        # partition and drops a failed attempt's. That needs no Exchange between observe
-        # and the write: extract has none, and a caller's repartition sits below it.
-        # One SQL string per aggregate: half the build cost of a Column tree via py4j.
-        # Each hashes the output's keys with the filter's bucket text.
-        obs = Observation()
-        res = res.observe(obs, *(F.expr(f"sum(CASE WHEN {bucket} = {b} THEN {v} END) AS `{b}_{i}`")
-                                 for b in wave for i, v in enumerate(vals)))
+    waves = [todo[i : i + wave_size] for i in range(0, len(todo), wave_size)][:max_waves]
+    for wave in waves:
+        # no Exchange between the kernel and the write (a caller's repartition sits
+        # below it), so the kernel's accumulator updates come from result tasks
+        kernel, acc = _wave_kernel(spark, wave)
+        res = turns.filter(F.col(_BUCKET).isin(wave)).mapInArrow(
+            _arrow_stage(kernel), schema=RESULT_SCHEMA)
         # Per-wave idempotent replace. Waves run in sorted order and each commits its
         # state in one file, so the done set is a prefix of range(n_buckets): the first
         # wave not done starts at the same bucket on every resume, whatever its
@@ -148,13 +150,10 @@ def run_resumable(
         res.write.mode("overwrite").option(
             "mapreduce.fileoutputcommitter.marksuccessfuljobs", "false"
         ).parquet(f"{_result_dir(output_dir)}/wave={wave[0]}")
-        got, now = obs.get, time.time()
-        # an empty bucket's sums are null; it still needs a done marker
-        rows = [(b, n_buckets, "done", *(got[f"{b}_{i}"] or 0 for i in range(len(vals))),
-                 now, lineage) for b in wave]
+        now = time.time()
+        rows = [(b, n_buckets, "done", *m, now, lineage) for b, m in zip(wave, acc.value.tolist())]
         _commit_state(state_fs, state_dir, rows, state_schema, wave[0])
-        processed += len(wave)
-    return processed
+    return sum(map(len, waves))
 
 
 def _commit_state(fs, state_dir, rows: list[tuple], schema: pa.Schema, first: int) -> None:
@@ -173,18 +172,40 @@ def _commit_state(fs, state_dir, rows: list[tuple], schema: pa.Schema, first: in
         raise OSError(f"could not rename {tmp} to {final}")
 
 
-def _bucket_sql(n_buckets: int) -> str:
-    # xxhash64 is TYPE-sensitive (int vs bigint hash differently), and
-    # extract() emits turn_idx as int — so the input-side filter and the
-    # output-side observe MUST hash the same types, or a row selected by
-    # one bucket has its metrics counted in another bucket's state row.
-    # Both sides use this one text, whose casts fix the types.
-    return (f"CAST(pmod(xxhash64(CAST(conv_id AS STRING), CAST(turn_idx AS INT)), "
-            f"{n_buckets}) AS INT)")
+_BUCKET = "_yomitoku_bucket"  # each turn's bucket, hashed once on the input side
+_METRICS = ("blocks_kept", "blocks_dropped", "chars_emitted")
+
+
+class _Sums(AccumulatorParam):  # element-wise sum of int64 arrays
+    def zero(self, value):
+        return np.zeros_like(value)
+
+    def addInPlace(self, a, b):
+        return np.add(a, b, out=a)
+
+
+def _wave_kernel(spark: SparkSession, wave: list[int]):
+    """``extract_batch``, and the accumulator it adds each batch's ``n_turns``
+    and ``_METRICS`` sums to (``STATE_SCHEMA`` order), one row per bucket of ``wave``."""
+    acc = spark.sparkContext.accumulator(np.zeros((len(wave), 4), np.int64), _Sums())
+
+    def kernel(rb: pa.RecordBatch) -> pa.RecordBatch:
+        out = extract_batch(rb)
+        sums = np.zeros((len(wave), 4), np.int64)
+        np.add.at(sums, np.searchsorted(wave, rb.column(_BUCKET).to_numpy()), np.column_stack(
+            [np.ones(out.num_rows, np.int64), *(out.column(c).to_numpy() for c in _METRICS)]))
+        acc.add(sums)
+        return out
+
+    return kernel, acc
 
 
 def _bucket_expr(n_buckets: int) -> F.Column:
-    return F.expr(_bucket_sql(n_buckets))
+    # xxhash64 is TYPE-sensitive (int vs bigint hash differently): the casts
+    # fix the types, so a turn's bucket depends on its key values alone,
+    # whatever types the caller's columns have.
+    return F.expr(f"CAST(pmod(xxhash64(CAST(conv_id AS STRING), CAST(turn_idx AS INT)), "
+                  f"{n_buckets}) AS INT)")
 
 
 # with the declared schemas: a run whose input has no rows commits no
