@@ -1,8 +1,10 @@
 """Two-parallelism scaling benchmark (north-rule evidence).
 
-A real multi-executor cluster is unavailable in this sandbox, so the
-N → 4N executor criterion is evidenced by running the IDENTICAL job on
-the IDENTICAL materialized input at local[N] and local[4N], with
+The N → 4N executor criterion is evidenced by running the IDENTICAL
+job on the IDENTICAL materialized input at local[N] and local[4N] (one
+JVM; Spark's ``local-cluster[K,1,<mem>]`` master also runs offline from
+the pip install, with one JVM and Python daemon per executor, but this
+script does not use it yet), with
 N = max(1, cores // 4) from the host's usable cores (the count Spark's
 ``local[*]`` sizes from), so 4N never oversubscribes the host
 (BASELINE.md's sanctioned plan). Each level runs in its own process

@@ -3,6 +3,7 @@ final table; idempotent replays; exactly-once metrics."""
 
 import os
 import re
+import shutil
 import subprocess
 import sys
 
@@ -243,26 +244,35 @@ def test_resume_with_other_bucket_count_raises(spark, tdf, tmp_path):
 
 
 def test_wave_is_one_pass(spark, tdf, tmp_path):
-    """Each wave is one SQL execution, its write: the wave's kernel counts
-    the state metrics (no CollectMetrics), no Exchange sits under the write
-    (a map stage's accumulator updates could be replayed), no plan reads
-    the result directory back, and the resume reads its done set on the
-    driver, with no SQL execution. The write leaves no ``_SUCCESS``."""
+    """Each wave is one SQL execution, into a noop sink: the wave's kernel
+    counts the state metrics (no CollectMetrics) and writes the result
+    files itself, no Exchange sits under the sink (a map stage's
+    accumulator updates could be replayed), no plan reads the result
+    directory back, and the resume reads its done set on the driver, with
+    no SQL execution. The waves leave only their part files, no
+    ``_SUCCESS``."""
     out = str(tmp_path / "out_pass")
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def execs():
+        spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+        ex = store.executionsList()
+        return {ex.apply(i).executionId(): ex.apply(i).physicalPlanDescription()
+                for i in range(ex.size())}
+
+    before = max(execs(), default=-1)
     CP.run_resumable(tdf, out, n_buckets=8, wave_size=4, max_waves=1)
     CP.run_resumable(tdf, out, n_buckets=8, wave_size=4)
+    plans = [d for i, d in execs().items() if i > before]
     assert CP.done_buckets(spark, out) == set(range(8))
-    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
-    execs = spark._jsparkSession.sharedState().statusStore().executionsList()
-    plans = [d for d in (execs.apply(i).physicalPlanDescription() for i in range(execs.size()))
-             if out in d]
-    result = os.path.join(out, "result")
-    assert not [d for d in plans if re.search(r"Location: \w+ \[[^\]]*" + re.escape(result), d)]
-    writes = [d for d in plans if re.search(rf"Arguments: file:{re.escape(result)}/wave=\d+, ", d)]
-    assert len(writes) == 2 and len(plans) == 2
-    assert all("CollectMetrics" not in d and "Exchange" not in d for d in writes)
+    assert len(plans) == 2
+    assert all("NoopWrite" in d and "MapInArrow" in d for d in plans)
+    assert all("CollectMetrics" not in d and "Exchange" not in d for d in plans)
+    assert not [d for d in plans if "Location:" in d and "out_pass" in d]
     assert _result_layout(out) == ["wave=0", "wave=4"]
-    assert not [w for w in _result_layout(out) if "_SUCCESS" in os.listdir(os.path.join(result, w))]
+    files = [f for w in _result_layout(out) for f in os.listdir(os.path.join(out, "result", w))]
+    assert files and all(re.fullmatch(r"part-\d{5}\.parquet", f) for f in files)
 
 
 def _assert_state_matches_result(spark, out, n_buckets):
@@ -309,45 +319,82 @@ class _Crash(Exception):
 
 
 def test_crash_before_state_rename(spark, tdf, tmp_path, monkeypatch):
-    """A crash after a wave's result commit, with its state file written
-    but not yet renamed into place, leaves a ``_``-prefixed temp file
-    beside the committed result: the done set and the state table ignore
+    """A crash after a wave's result files are in place, with its state
+    file written but not yet moved into place, leaves a ``_``-prefixed
+    temp file beside the result: the done set and the state table ignore
     it, and the resume redoes that wave exactly once."""
-    renames = []
+    moves = []
 
-    class CrashOnSecondRename:  # the state path's FileSystem, up to the crash
+    class CrashOnSecondMove:  # the output's pyarrow FileSystem, up to the crash
         def __init__(self, fs):
             self.fs = fs
 
         def __getattr__(self, name):
             return getattr(self.fs, name)
 
-        def rename(self, src, dst):
-            renames.append(src.getName())
-            if len(renames) == 2:
+        def move(self, src, dest):
+            moves.append(os.path.basename(src))
+            if len(moves) == 2:
                 raise _Crash
-            return self.fs.rename(src, dst)
+            self.fs.move(src, dest)
 
-    fs_path = CP._fs_path
+    fs = CP._fs
 
-    def crashing_fs_path(spark, path):
-        fs, p = fs_path(spark, path)
-        return CrashOnSecondRename(fs), p
+    def crashing_fs(output_dir):
+        pa_fs, base = fs(output_dir)
+        return CrashOnSecondMove(pa_fs), base
 
-    monkeypatch.setattr(CP, "_fs_path", crashing_fs_path)
+    monkeypatch.setattr(CP, "_fs", crashing_fs)
     out = str(tmp_path / "out_tmp")
     with pytest.raises(_Crash):
         CP.run_resumable(tdf, out, n_buckets=16, wave_size=4)
     monkeypatch.undo()
     assert _result_layout(out) == ["wave=0", "wave=4"]
     state_dir = os.path.join(out, "_checkpoint")
-    assert renames[1].startswith("_") and renames[1] in os.listdir(state_dir)
+    assert moves[1].startswith("_") and moves[1] in os.listdir(state_dir)
     assert CP.done_buckets(spark, out) == set(range(4))
     assert sorted(r.bucket for r in CP.read_state(spark, out).collect()) == list(range(4))
 
     assert CP.run_resumable(tdf, out, n_buckets=16, wave_size=4) == 12
     assert _result_layout(out) == ["wave=0", "wave=12", "wave=4", "wave=8"]
     _assert_exactly_once(spark, out, tdf, 16)
+
+
+def test_stale_files_of_a_wave_not_done_are_swept(spark, tdf, tmp_path):
+    """A wave directory that no done row covers may hold files that the
+    redo would not replace: a ``part-`` file of a partition the redo does
+    not have (the crashed run had more splits) and a failed attempt's
+    ``_tmp-`` file. The resume deletes them, so the result stays
+    exactly-once."""
+    out = str(tmp_path / "out_stale")
+    CP.run_resumable(tdf.coalesce(2), out, n_buckets=8, wave_size=4, max_waves=1)
+    _forget_wave(out, 0)
+    wave0 = os.path.join(out, "result", "wave=0")
+    part0 = os.path.join(wave0, "part-00000.parquet")
+    shutil.copy(part0, os.path.join(wave0, "part-00007.parquet"))
+    shutil.copy(part0, os.path.join(wave0, "_tmp-7-0-stale.parquet"))
+    assert CP.read_result(spark, out).count() > tdf.filter(CP._bucket_expr(8) < 4).count()
+
+    assert CP.run_resumable(tdf.coalesce(2), out, n_buckets=8, wave_size=4) == 8
+    assert not {"part-00007.parquet", "_tmp-7-0-stale.parquet"} & set(os.listdir(wave0))
+    _assert_exactly_once(spark, out, tdf, 8)
+
+
+def test_result_rows_equal_extract(spark, tdf, tmp_path):
+    """The files the wave kernels write read back as ``extract``'s rows,
+    every column included (``ts`` and ``spans`` too)."""
+    out = str(tmp_path / "out_rows")
+    CP.run_resumable(tdf, out, n_buckets=8, wave_size=4)
+    got, want = CP.read_result(spark, out), extract(tdf)
+    assert got.schema == want.schema
+    assert got.count() == want.count()
+    assert got.exceptAll(want).count() == 0 and want.exceptAll(got).count() == 0
+
+
+def test_unsupported_uri_raises_before_any_wave(spark, tdf):
+    """An output pyarrow cannot open fails the call before any wave runs."""
+    with pytest.raises(ValueError, match="cannot open nosuchfs://bucket/out with pyarrow"):
+        CP.run_resumable(tdf, "nosuchfs://bucket/out", n_buckets=4, wave_size=4)
 
 
 def test_state_file_round_trips(spark, tdf, tmp_path):
@@ -415,3 +462,5 @@ def test_metrics_exactly_once_under_task_retry(spark, tdf, tmp_path):
     got = state.agg(F.sum("n_turns").alias("n"), *sums).collect()[0]
     want = extract(tdf).agg(F.count(F.lit(1)).alias("n"), *sums).collect()[0]
     assert got == want
+    # and the retried partitions' result files hold each row once
+    _assert_exactly_once(spark, out, tdf, 8)

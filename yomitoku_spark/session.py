@@ -116,7 +116,7 @@ def fan_out(df):
     (a join or union) counts the files of all its leaves, unrelated to
     this frame's partitioning; in both cases the gate can skip the
     fan-out while the map work still runs on few cores. ROADMAP
-    direction 3 replaces this gate with a price over partition count
+    direction 7 replaces this gate with a price over partition count
     and plan size.
     """
     sc = df.sparkSession.sparkContext
